@@ -88,13 +88,8 @@ class IncrementalScalerPipeline:
         # path: ONE Spark job (the collect probe) + pyarrow commits,
         # instead of 3-4 distributed jobs. 0 disables.
         self.small_epoch_rows = small_epoch_rows
-        # 'rows' lineage: row counts from parquet footers, no extra job
-        self.input_sink = ExactlyOnceParquetSink(
-            f"{workdir}/input", key_cols, lineage="rows"
-        )
-        self.output_sink = ExactlyOnceParquetSink(
-            f"{workdir}/output", key_cols, lineage="rows"
-        )
+        self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", key_cols)
+        self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", key_cols)
         self.last_meta: tuple | None = None
         self.full_reencodes = 0
         self.epochs = 0
@@ -522,12 +517,8 @@ class IncrementalMultiScalerPipeline:
         self.value_cols = list(value_cols)
         self.round_to = round_to
         self.small_epoch_rows = small_epoch_rows
-        self.input_sink = ExactlyOnceParquetSink(
-            f"{workdir}/input", key_cols, lineage="rows"
-        )
-        self.output_sink = ExactlyOnceParquetSink(
-            f"{workdir}/output", key_cols, lineage="rows"
-        )
+        self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", key_cols)
+        self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", key_cols)
         self.last_meta: tuple | None = None
         self.full_reencodes = 0
         self.epochs = 0

@@ -25,14 +25,19 @@ def recommended_state_partitions(
     """State-partition count for a stateful stream-stream join, from the
     measured cost model (tools/join_tune.py matrices in SCALING.md).
 
-    The HDFS state-store provider pays a per-partition COMMIT cost every
-    micro-batch (each partition writes its delta files), while the
-    update/probe work parallelizes with partitions. The crossover is the
-    rows-per-partition-per-batch density: below ~20k rows/partition the
-    fixed commit cost dominates and fewer partitions win (measured: 8
-    parts sustain 2.4x the 32-part rate at ~200k rows/batch); above it
-    update parallelism pays for the commit overhead (64 parts sustain
-    2.2x the 32-part rate at 1.33M rows/batch).
+    Every state-store partition pays a fixed COMMIT cost each
+    micro-batch, while the update/probe work parallelizes with
+    partitions. The crossover is the rows-per-partition-per-batch
+    density. The model was measured on the HDFS provider, where a commit
+    writes each of the join's four stores' delta files: below ~20k
+    rows/partition the fixed commit cost dominates and fewer partitions
+    win (measured: 8 parts sustain 2.4x the 32-part rate at ~200k
+    rows/batch); above it update parallelism pays for the commit
+    overhead (64 parts sustain 2.2x the 32-part rate at 1.33M
+    rows/batch). The session default (session.py) commits far less per
+    partition: RocksDB with changelog checkpointing appends one
+    changelog, and join state format 3 keeps one store per partition,
+    so there the crossover sits lower; it has not been re-measured.
 
     ``spark.sql.shuffle.partitions`` binds the state layout at
     CHECKPOINT CREATION — set it before the first ``start()`` and it is

@@ -18,7 +18,7 @@ Protocol per micro-batch (inside ``foreachBatch``):
 Reader semantics: for update-mode keyed output, the row for a key in the
 HIGHEST committed epoch wins (later epochs supersede earlier ones);
 ``read_current`` resolves that with one window. Per-epoch lineage
-(row counts per Spark partition, watermark, wall time) is recorded under
+(row counts per Spark partition, commit wall time) is recorded under
 ``_lineage/``.
 """
 
@@ -34,23 +34,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def _parquet_files(directory: str):
-    import pyarrow.parquet as pq
-
-    for name in os.listdir(directory):
-        if name.endswith(".parquet"):
-            yield pq.ParquetFile(os.path.join(directory, name))
-
-
 class ExactlyOnceParquetSink:
-    """lineage: 'partitions' (rows per Spark partition — one extra
-    aggregate per epoch), 'rows' (row count only), or 'off' (no extra
-    job — for latency-critical small epochs)."""
+    """Each committed epoch gets a lineage record: its row count and its
+    rows per Spark partition, read from the committed files' names and
+    parquet footers, so lineage adds no Spark job to the epoch's write."""
 
-    def __init__(self, root: str, key_cols: list[str], lineage: str = "partitions"):
+    def __init__(self, root: str, key_cols: list[str]):
         self.root = root
         self.key_cols = list(key_cols)
-        self.lineage_mode = lineage
         os.makedirs(os.path.join(root, "_staging"), exist_ok=True)
         os.makedirs(os.path.join(root, "_lineage"), exist_ok=True)
 
@@ -85,24 +76,7 @@ class ExactlyOnceParquetSink:
         staging = os.path.join(
             self.root, "_staging", f"epoch={epoch_id}.{uuid.uuid4().hex[:8]}"
         )
-        part_counts = None
-        if self.lineage_mode == "partitions":
-            # per-partition lineage before the write (single pass,
-            # cached). try/finally: a failed staging write must not
-            # leak the cached blocks for the session lifetime (the
-            # persist-leak class CLAUDE.md warns about)
-            df = df.persist()
-            try:
-                part_counts = (
-                    df.groupBy(F.spark_partition_id().alias("partition"))
-                    .count()
-                    .collect()
-                )
-                df.write.mode("overwrite").parquet(staging)
-            finally:
-                df.unpersist()
-        else:
-            df.write.mode("overwrite").parquet(staging)
+        df.write.mode("overwrite").parquet(staging)
         try:
             os.rename(staging, self.epoch_dir(epoch_id))  # atomic commit
         except OSError:
@@ -113,25 +87,22 @@ class ExactlyOnceParquetSink:
             # swallowed: the checkpoint would advance past an epoch that
             # was never committed
             raise
-        if self.lineage_mode == "off":
-            return
-        lineage = {"epoch": epoch_id, "committed_at": time.time()}
-        if part_counts is not None:
-            lineage["rows"] = int(sum(r["count"] for r in part_counts))
-            lineage["partitions"] = {
-                str(r["partition"]): int(r["count"]) for r in part_counts
-            }
-        else:  # 'rows': cheap count from the committed parquet footers
-            lineage["rows"] = int(
-                sum(
-                    pf.metadata.num_rows
-                    for pf in _parquet_files(self.epoch_dir(epoch_id))
-                )
-            )
-        with open(
-            os.path.join(self.root, "_lineage", f"epoch={epoch_id}.json"), "w"
-        ) as f:
-            json.dump(lineage, f)
+        # lineage from the committed files: each write task names its
+        # files part-<partition id>-..., and each footer holds its rows
+        import pyarrow.parquet as pq
+
+        committed = self.epoch_dir(epoch_id)
+        partitions: dict[str, int] = {}
+        for name in os.listdir(committed):
+            if not name.endswith(".parquet"):
+                continue
+            rows = pq.read_metadata(os.path.join(committed, name)).num_rows
+            if rows:
+                part = str(int(name.split("-", 2)[1]))
+                partitions[part] = partitions.get(part, 0) + rows
+        self._write_lineage(
+            epoch_id, rows=sum(partitions.values()), partitions=partitions
+        )
 
     def write_batch_local(self, pdf, epoch_id: int) -> None:
         """Driver-local exactly-once commit for TINY epochs: identical
@@ -168,14 +139,10 @@ class ExactlyOnceParquetSink:
             if self.is_committed(epoch_id):
                 return  # see write_batch: only a won race may be dropped
             raise
-        if self.lineage_mode == "off":
-            return
-        lineage = {
-            "epoch": epoch_id,
-            "committed_at": time.time(),
-            "rows": int(len(pdf)),
-            "local": True,
-        }
+        self._write_lineage(epoch_id, rows=int(len(pdf)), local=True)
+
+    def _write_lineage(self, epoch_id: int, **record) -> None:
+        lineage = {"epoch": epoch_id, "committed_at": time.time(), **record}
         with open(
             os.path.join(self.root, "_lineage", f"epoch={epoch_id}.json"), "w"
         ) as f:

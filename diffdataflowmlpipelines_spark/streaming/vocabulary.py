@@ -263,12 +263,8 @@ class DriverVocabularyPipeline:
         self.spark = spark
         self.n_shards = n_shards
         self.token_col = token_col
-        self.input_sink = ExactlyOnceParquetSink(
-            f"{workdir}/input", ["shard", "token"], lineage="rows"
-        )
-        self.output_sink = ExactlyOnceParquetSink(
-            f"{workdir}/output", ["shard", "token"], lineage="rows"
-        )
+        self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", ["shard", "token"])
+        self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", ["shard", "token"])
         self.shards: dict[int, ShardDict] = {}
         self.epochs = 0
         # epochs whose diffs THIS process has applied to the ShardDicts:

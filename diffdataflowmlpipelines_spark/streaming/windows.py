@@ -18,12 +18,16 @@ assert epoch-by-epoch.
 from __future__ import annotations
 
 import glob
+import logging
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from diffdataflowmlpipelines_spark.operators.collection import DIFF, with_diff
+
+logger = logging.getLogger(__name__)
 
 
 def _exploded(df: DataFrame) -> DataFrame:
@@ -36,41 +40,49 @@ def _exploded(df: DataFrame) -> DataFrame:
     )
 
 
-def _file_stream_rows_per_batch(df: DataFrame) -> int | None:
+def _file_stream_rows_per_batch(df: DataFrame) -> int:
     """Best-effort rows-per-micro-batch estimate for a file-source
     stream: when ``df`` is a plain ``readStream.parquet(dir)`` with
     ``maxFilesPerTrigger`` set, a micro-batch is that many files, so
     the parquet footers of the first files ARE the batch density. Any
     other shape (no trigger cap, non-parquet, multi-path, remote
-    filesystem, wrapped/transformed frame) returns None — fail-soft by
-    design: the caller then leaves partitioning alone."""
+    filesystem, wrapped/transformed frame, no files yet) raises
+    LookupError naming the reason: the caller then leaves partitioning
+    alone."""
     try:
         node = df._jdf.queryExecution().logical()
-        if node.getClass().getSimpleName() != "UnresolvedDataSource":
-            return None
-        if str(node.format()).lower() != "parquet":
-            return None
-        opt = node.options().get("maxfilespertrigger")
-        if opt.isEmpty():
-            return None
-        n_files = int(opt.get())
-        paths = node.paths()
-        if paths.size() != 1:
-            return None
-        path = str(paths.apply(0))
-        if path.startswith("file:"):
-            path = path[len("file:"):]
-        if not os.path.isdir(path):
-            return None
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))[:n_files]
-        if not files:
-            return None
-        import pyarrow.parquet as pq
+        plain = node.getClass().getSimpleName() == "UnresolvedDataSource"
+        if plain:
+            fmt = str(node.format()).lower()
+            opt = node.options().get("maxfilespertrigger")
+            n_files = None if opt.isEmpty() else int(opt.get())
+            paths = node.paths()
+            paths = [str(paths.apply(i)) for i in range(paths.size())]
+    except (Py4JError, AttributeError) as e:  # Spark-internal plan API
+        raise LookupError(f"the input plan could not be inspected ({e})") from e
+    if not plain:
+        raise LookupError("the input is not a plain readStream file source")
+    if fmt != "parquet":
+        raise LookupError(f"the source format is {fmt}, not parquet")
+    if n_files is None:
+        raise LookupError("maxFilesPerTrigger is not set")
+    if len(paths) != 1:
+        raise LookupError(f"the source reads {len(paths)} paths, not one")
+    path = paths[0].removeprefix("file:")
+    if not os.path.isdir(path):
+        raise LookupError(f"{path} is not a local directory")
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))[:n_files]
+    if not files:
+        raise LookupError(f"{path} holds no parquet files yet")
+    import pyarrow.parquet as pq
 
+    try:
         rows = sum(pq.read_metadata(f).num_rows for f in files)
-        return rows or None
-    except Exception:
-        return None
+    except (OSError, ValueError) as e:
+        raise LookupError(f"a parquet footer under {path} is unreadable ({e})") from e
+    if not rows:
+        raise LookupError(f"the first {len(files)} files under {path} hold no rows")
+    return rows
 
 
 def size_state_partitions(
@@ -92,8 +104,9 @@ def size_state_partitions(
     partitions than at 32 on identical input). ``state_partitions``:
     an int pins that count; "auto" derives rows/batch from the
     file-source footers (``_file_stream_rows_per_batch``) and applies
-    the cost model, silently doing nothing when the density is not
-    derivable; None leaves the session untouched.
+    the cost model, doing nothing but log one warning with the reason
+    when the density is not derivable; None leaves the session
+    untouched.
 
     SIDE EFFECT by necessity: mutates the session's
     ``spark.sql.shuffle.partitions``. Callers that interleave batch
@@ -109,8 +122,12 @@ def size_state_partitions(
             recommended_state_partitions,
         )
 
-        rows = _file_stream_rows_per_batch(df)
-        if rows is None:
+        try:
+            rows = _file_stream_rows_per_batch(df)
+        except LookupError as e:
+            logger.warning(
+                "state_partitions='auto' left the state partitions unsized: %s", e
+            )
             return
         n = recommended_state_partitions(
             rows,
@@ -122,12 +139,13 @@ def size_state_partitions(
 
 # The AGG's commit-vs-parallelism crossover sits ~5x higher than the
 # stream-join's 20k (a windowed agg commits ONE state store per
-# partition where the join commits four, and its per-row update work is
-# lighter): the r6 matrices measured 2/4/8 partitions equal-best at
-# 200k-row batches (2.7-3.1 s vs 8.6 s at 32) and 4/8 best at 800k-row
-# batches (5.7-6.2 s vs 16's 6.1-6.8 s and 32's 7.4-8.2 s) — both
-# densities' optima track ~100k rows/partition/batch (SCALING.md
-# "Windowed-agg state-partition sizing").
+# partition where a format-2 join commits four, and its per-row update
+# work is lighter): the r6 matrices (HDFS provider) measured 2/4/8
+# partitions equal-best at 200k-row batches (2.7-3.1 s vs 8.6 s at 32)
+# and 4/8 best at 800k-row batches (5.7-6.2 s vs 16's 6.1-6.8 s and
+# 32's 7.4-8.2 s) — both densities' optima track ~100k
+# rows/partition/batch (SCALING.md "Windowed-agg state-partition
+# sizing").
 AGG_MIN_ROWS_PER_PARTITION = 100_000
 
 

@@ -6,6 +6,8 @@ reality rather than the synthetic adultlike fixture."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -18,6 +20,8 @@ from diffdataflowmlpipelines_spark.plans.pipeline2 import (
 from diffdataflowmlpipelines_spark.sources.csv import read_adult_like_csv
 
 ADULT_CSV = "/root/reference/data/adult_data.csv"
+if not os.path.exists(ADULT_CSV):
+    pytest.skip(f"{ADULT_CSV} does not exist", allow_module_level=True)
 
 # the reference's find_indices(Float) split on this file
 # (adult_dataset_reader.rs:6-29: a column is Float iff every cell parses)

@@ -24,50 +24,78 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf[cols].sort_values(cols, kind="stable").reset_index(drop=True)
 
 
-def test_stream_stream_join_parity(spark, tmp_path):
-    tok_pdf = gen_tokens_pdf(600, seed=11, rows_per_second=50)
-    lab_pdf = gen_labels_pdf(tok_pdf, seed=12)
-
-    # sentinel rows push both watermarks far enough to flush all matches
+def _join_epochs(spark, tmp_path, seed: int, n_epochs: int):
+    """Token and label epoch sources over ``n_epochs`` slices of one
+    fixture, plus a sentinel pair (landed last by the caller) that pushes
+    both watermarks past every match."""
+    tok_pdf = gen_tokens_pdf(600, seed=seed, rows_per_second=50)
+    lab_pdf = gen_labels_pdf(tok_pdf, seed=seed + 1)
     flush_t = tok_pdf["event_time"].max() + pd.Timedelta(minutes=5)
-    tok_flush = tok_pdf.iloc[[0]].copy()
-    tok_flush["doc_id"] = "__flush__"
-    tok_flush["event_time"] = flush_t
-    lab_flush = lab_pdf.iloc[[0]].copy()
-    lab_flush["doc_id"] = "__flush__lab"
-    lab_flush["event_time"] = flush_t
-
+    tok_flush, lab_flush = tok_pdf.iloc[[0]].copy(), lab_pdf.iloc[[0]].copy()
+    tok_flush["doc_id"], tok_flush["event_time"] = "__flush__", flush_t
+    lab_flush["doc_id"], lab_flush["event_time"] = "__flush__lab", flush_t
+    n_t, n_l = len(tok_pdf), len(lab_pdf)
+    epochs = [
+        (tok_pdf.iloc[(n_t * k) // n_epochs : (n_t * (k + 1)) // n_epochs],
+         lab_pdf.iloc[(n_l * k) // n_epochs : (n_l * (k + 1)) // n_epochs])
+        for k in range(n_epochs)
+    ] + [(tok_flush, lab_flush)]
     tsrc = EpochFileSource(spark, str(tmp_path / "tok"), TOKENS_STREAM_SCHEMA)
     lsrc = EpochFileSource(spark, str(tmp_path / "lab"), LABELS_SCHEMA)
-    n_t, n_l = len(tok_pdf), len(lab_pdf)
-    for k in range(3):
-        tsrc.add_epoch(tok_pdf.iloc[(n_t * k) // 3 : (n_t * (k + 1)) // 3])
-        lsrc.add_epoch(lab_pdf.iloc[(n_l * k) // 3 : (n_l * (k + 1)) // 3])
-    tsrc.add_epoch(tok_flush)
-    lsrc.add_epoch(lab_flush)
-
     sink = ExactlyOnceParquetSink(
         str(tmp_path / "out"), ["doc_id", "source", "event_time", "label_time"]
     )
+    return tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink
+
+
+def _land(tsrc, lsrc, epochs) -> None:
+    for t, lab in epochs:
+        tsrc.add_epoch(t)
+        lsrc.add_epoch(lab)
+
+
+def _drain_join(tsrc, lsrc, sink, ckpt: str) -> None:
     q = (
-        label_join(tsrc.stream(files_per_trigger=2), lsrc.stream(files_per_trigger=2))
+        label_join(tsrc.stream(2), lsrc.stream(2))
         .writeStream.foreachBatch(sink.foreach_batch())
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
+    assert q.exception() is None
 
+
+def _assert_join_matches_batch(spark, sink, tok_pdf, lab_pdf) -> None:
     got = sink.read_all(spark).drop("epoch").toPandas()
     got = got[~got["doc_id"].str.startswith("__flush__")]
-
-    tokens_b = spark.createDataFrame(tok_pdf, TOKENS_STREAM_SCHEMA)
-    labels_b = spark.createDataFrame(lab_pdf, LABELS_SCHEMA)
-    want = label_join(tokens_b, labels_b, streaming=False).toPandas()
-
+    want = label_join(
+        spark.createDataFrame(tok_pdf, TOKENS_STREAM_SCHEMA),
+        spark.createDataFrame(lab_pdf, LABELS_SCHEMA),
+        streaming=False,
+    ).toPandas()
     assert len(got) > 100  # the join actually matched
     pd.testing.assert_frame_equal(_canon(got), _canon(want), check_dtype=False)
+
+
+def _set_conf(spark, conf: dict) -> dict:
+    """Set ``conf`` on the session; returns the previous values (None:
+    unset) for restoring with the same call."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    return saved
+
+
+def test_stream_stream_join_parity(spark, tmp_path):
+    tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(spark, tmp_path, 11, 3)
+    _land(tsrc, lsrc, epochs)
+    _drain_join(tsrc, lsrc, sink, str(tmp_path / "ckpt"))
+    _assert_join_matches_batch(spark, sink, tok_pdf, lab_pdf)
 
 
 def test_salted_join_parity_with_plain(spark, tmp_path):
@@ -186,3 +214,59 @@ def test_recommended_state_partitions():
         recommended_state_partitions(0, max_parallelism=32)
     with pytest.raises(ValueError):
         recommended_state_partitions(100, max_parallelism=0)
+
+
+def test_join_checkpoint_from_older_state_layout_resumes(spark, tmp_path):
+    """A checkpoint created with join state format 2 and RocksDB
+    changelog checkpointing off (the session defaults before format 3
+    and changelogs) resumes under the current defaults: the query keeps
+    the format its checkpoint recorded, and the output over every epoch
+    equals the batch join."""
+    from diffdataflowmlpipelines_spark.session import JOIN_STATE_FORMAT
+
+    tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(spark, tmp_path, 21, 4)
+    ckpt = str(tmp_path / "ckpt")
+    _land(tsrc, lsrc, epochs[:2])
+    saved = _set_conf(spark, {
+        JOIN_STATE_FORMAT: "2",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "false",
+    })
+    try:
+        _drain_join(tsrc, lsrc, sink, ckpt)
+    finally:
+        _set_conf(spark, saved)
+    assert spark.conf.get(JOIN_STATE_FORMAT) == "3"
+    first = sink.committed_epochs()
+    _land(tsrc, lsrc, epochs[2:])
+    _drain_join(tsrc, lsrc, sink, ckpt)
+    assert len(sink.committed_epochs()) > len(first)
+    offsets = tmp_path / "ckpt" / "offsets"
+    last = max((p for p in offsets.iterdir() if p.name.isdigit()), key=lambda p: int(p.name))
+    assert f'"{JOIN_STATE_FORMAT}":"2"' in last.read_text()
+    _assert_join_matches_batch(spark, sink, tok_pdf, lab_pdf)
+
+
+def test_label_join_on_hdfs_state_provider(spark, tmp_path):
+    """Join state format 3 needs RocksDB's column families: a session
+    asked for the HDFS provider keeps Spark's default format, and the
+    join runs on it."""
+    from diffdataflowmlpipelines_spark.session import (
+        JOIN_STATE_FORMAT,
+        STATE_PROVIDER,
+        get_spark,
+    )
+
+    hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    saved = {k: spark.conf.get(k, None) for k in (STATE_PROVIDER, JOIN_STATE_FORMAT)}
+    try:
+        s = get_spark(extra_conf={STATE_PROVIDER: hdfs})
+        assert s.conf.get(STATE_PROVIDER) == hdfs
+        assert s.conf.get(JOIN_STATE_FORMAT) != "3"
+        tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(s, tmp_path, 31, 3)
+        _land(tsrc, lsrc, epochs)
+        _drain_join(tsrc, lsrc, sink, str(tmp_path / "ckpt"))
+        # HDFS-provider state is delta files (RocksDB's is changelogs)
+        assert any((tmp_path / "ckpt" / "state").rglob("*.delta"))
+        _assert_join_matches_batch(s, sink, tok_pdf, lab_pdf)
+    finally:
+        _set_conf(spark, saved)

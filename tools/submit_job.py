@@ -57,9 +57,7 @@ def main(workdir: str) -> None:
     tok_dir = os.path.join(workdir, "tok")
     write_epoch_files(pdf, tok_dir, 2)
 
-    sink = ExactlyOnceParquetSink(
-        os.path.join(workdir, "out"), ["window_start", "token"], lineage="rows"
-    )
+    sink = ExactlyOnceParquetSink(os.path.join(workdir, "out"), ["window_start", "token"])
     stream = (
         spark.readStream.schema(TOKENS_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
