@@ -390,7 +390,19 @@ def bpe_encode(
     collected; the corpus moves once, for the re-assembly regroup
     only). The caller must guarantee coverage: corpus words ABSENT
     from ``word_syms`` drop from the encoding, so use the default path
-    when encoding a different corpus than the one learned on."""
+    when encoding a different corpus than the one learned on. For the
+    same reason ``docs`` may not carry a ``diff`` column (ValueError,
+    raised from the schema alone): ``word_frequencies`` nets retractions
+    and drops fully retracted words, while the encoding explodes every
+    row, so a retraction row's words would silently vanish."""
+    from diffdataflowmlpipelines_spark.operators.collection import DIFF
+
+    if word_syms is not None and DIFF in docs.columns:
+        raise ValueError(
+            "bpe_encode(word_syms=...) cannot encode a frame with a "
+            f"{DIFF!r} column: the table covers net word frequencies "
+            "only, so retracted words would drop; pass word_syms=None"
+        )
     toks = docs.select(
         id_col, F.posexplode(tokenize(text_col)).alias("pos", "word")
     ).localCheckpoint(eager=True)

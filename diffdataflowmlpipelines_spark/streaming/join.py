@@ -38,6 +38,11 @@ def recommended_state_partitions(
     partition: RocksDB with changelog checkpointing appends one
     changelog, and join state format 3 keeps one store per partition,
     so there the crossover sits lower; it has not been re-measured.
+    Even so, every state store still creates 4 files per commit (its
+    changelog, the checkpoint checksum sidecar, and a ``.crc`` for
+    each), and without Hadoop's native library each file creation runs
+    one ``chmod`` child process: process spawns per batch grow linearly
+    with the partition count.
 
     ``spark.sql.shuffle.partitions`` binds the state layout at
     CHECKPOINT CREATION — set it before the first ``start()`` and it is

@@ -76,7 +76,12 @@ class ExactlyOnceParquetSink:
         staging = os.path.join(
             self.root, "_staging", f"epoch={epoch_id}.{uuid.uuid4().hex[:8]}"
         )
-        df.write.mode("overwrite").parquet(staging)
+        # the rename below is the commit point, so the staging write
+        # leaves no _SUCCESS marker: an epoch holds only its part files,
+        # the same layout write_batch_local commits
+        df.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        ).parquet(staging)
         try:
             os.rename(staging, self.epoch_dir(epoch_id))  # atomic commit
         except OSError:

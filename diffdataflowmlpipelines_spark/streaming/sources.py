@@ -29,6 +29,32 @@ def _to_parquet(pdf: pd.DataFrame, path: str) -> None:
     )
 
 
+def _publish(pdf: pd.DataFrame, path: str, after_ms: int | None) -> int:
+    """Write ``pdf`` to ``path`` so that a file-stream source reading
+    the directory sees the file whole and in order; returns its
+    modification time in ms.
+
+    - Whole: Spark's file stream source ignores hidden files, so the
+      file is written under a dot-prefixed temp name and appears
+      atomically on rename. A plain "<name>.tmp" IS listed and can be
+      recorded mid-write (FileNotFound at task time once renamed, or a
+      torn read).
+    - In order: the source takes new files oldest first by modification
+      time in ms and breaks ties by directory listing order, which is
+      not name order. Two epochs written within one millisecond could
+      be read out of order, so a modification time not later than
+      ``after_ms`` is moved to ``after_ms + 1``."""
+    directory, name = os.path.split(path)
+    tmp = os.path.join(directory, f".{name}.tmp")
+    _to_parquet(pdf, tmp)
+    ms = os.stat(tmp).st_mtime_ns // 1_000_000
+    if after_ms is not None and ms <= after_ms:
+        ms = after_ms + 1
+        os.utime(tmp, ns=(ms * 1_000_000, ms * 1_000_000))
+    os.rename(tmp, path)
+    return ms
+
+
 def write_epoch_files(
     pdf: pd.DataFrame, directory: str, n_epochs: int, sort_col: str | None = "event_time"
 ) -> list[str]:
@@ -39,17 +65,11 @@ def write_epoch_files(
         pdf = pdf.sort_values(sort_col, kind="stable").reset_index(drop=True)
     n = len(pdf)
     paths = []
+    ms = None
     for i in range(n_epochs):
         lo, hi = (n * i) // n_epochs, (n * (i + 1)) // n_epochs
-        path = os.path.join(directory, f"epoch-{i:05d}.parquet")
-        # same hidden-tmp + atomic-rename protocol as add_epoch: a
-        # running file-stream source on this directory lists files
-        # continuously and would record (and torn-read) a half-written
-        # parquet (review r4d)
-        tmp = os.path.join(directory, f".epoch-{i:05d}.parquet.tmp")
-        _to_parquet(pdf.iloc[lo:hi], tmp)
-        os.rename(tmp, path)
-        paths.append(path)
+        paths.append(os.path.join(directory, f"epoch-{i:05d}.parquet"))
+        ms = _publish(pdf.iloc[lo:hi], paths[-1], ms)
     return paths
 
 
@@ -71,16 +91,11 @@ class EpochFileSource:
             if n.startswith("epoch-") and n.endswith(".parquet")
         ]
         self._next = max(existing) + 1 if existing else 0
+        self._last_ms: int | None = None
 
     def add_epoch(self, pdf: pd.DataFrame) -> str:
         path = os.path.join(self.directory, f"epoch-{self._next:05d}.parquet")
-        # dot-prefixed temp name: Spark's file stream source ignores
-        # hidden files, so the epoch appears atomically on rename — a
-        # plain "<name>.tmp" IS listed and can be recorded mid-write
-        # (FileNotFound at task time once renamed, or a torn read)
-        tmp = os.path.join(self.directory, f".epoch-{self._next:05d}.parquet.tmp")
-        _to_parquet(pdf, tmp)
-        os.rename(tmp, path)  # files must appear atomically for the reader
+        self._last_ms = _publish(pdf, path, self._last_ms)
         self._next += 1
         return path
 

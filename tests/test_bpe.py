@@ -664,3 +664,28 @@ def test_bpe_encode_word_syms_path_matches_default(spark):
     }
     assert fast == base
     assert set(base) == {0, 1, 2, 3, 4}
+
+
+def test_bpe_encode_word_syms_refuses_retractions(spark):
+    """The word_syms table comes from diff-aware word frequencies (a
+    fully retracted word is absent) while the encode explodes every
+    row, so on a frame with a diff column the fast path would drop the
+    retraction rows' words. It must refuse; the default path still
+    encodes the same frame."""
+    from diffdataflowmlpipelines_spark.functions.bpe import (
+        learn_bpe_incremental,
+        word_frequencies,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "low lower", 1), (1, "widest", 1), (2, "widest", -1)],
+        "doc_id long, text string, diff int",
+    )
+    wf = {r["word"]: int(r["freq"]) for r in word_frequencies(docs).collect()}
+    assert "widest" not in wf
+    full, word_syms = learn_bpe_incremental(wf, 2, return_word_syms=True)
+    merges = [(m[1], m[2]) for m in full]
+    with pytest.raises(ValueError, match="'diff' column"):
+        bpe_encode(docs, merges, word_syms=word_syms)
+    enc = {r["doc_id"]: list(r["bpe_tokens"]) for r in bpe_encode(docs, merges).collect()}
+    assert enc[2] == encode_local("widest", merges)

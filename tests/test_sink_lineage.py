@@ -1,6 +1,6 @@
 """ExactlyOnceParquetSink.write_batch commits an epoch with one Spark job
-(the write) and records its per-partition lineage from the committed
-files' parquet footers."""
+(the write), leaves only part files in it, and records its per-partition
+lineage from the committed files' parquet footers."""
 
 from __future__ import annotations
 
@@ -49,3 +49,10 @@ def test_write_batch_one_job_and_footer_lineage(spark, tmp_path):
     assert rec["partitions"] == want
     assert rec["rows"] == 600
     assert "local" not in rec
+    # the rename is the commit point, so the epoch holds no _SUCCESS
+    # marker: only part files and their checksums, the layout
+    # write_batch_local commits
+    names = sorted(p.name for p in (tmp_path / "out" / "epoch=0").iterdir())
+    parts = [n for n in names if n.startswith("part-") and n.endswith(".parquet")]
+    assert parts and names == sorted(parts + [f".{n}.crc" for n in parts])
+    assert sorted(r["id"] for r in sink.read_current(spark).collect()) == list(range(600))

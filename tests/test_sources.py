@@ -168,6 +168,50 @@ def test_epoch_source_resumes_numbering(spark, tmp_path):
     assert spark.read.parquet(d).count() == 2
 
 
+def test_epoch_files_reach_the_stream_in_order(spark, tmp_path, monkeypatch):
+    """The file stream source takes new files by modification time (ms)
+    and breaks ties by directory listing order, which is not name
+    order. Epochs written within one millisecond (forced here: every
+    write gets the same mtime) must still get strictly increasing
+    mtimes, and a one-file-per-trigger stream must read them in epoch
+    order."""
+    import pandas as pd
+
+    from diffdataflowmlpipelines_spark.streaming import sources
+
+    write = sources._to_parquet
+
+    def write_same_mtime(pdf, path):
+        write(pdf, path)
+        os.utime(path, ns=(1_700_000_000_000_000_000,) * 2)
+
+    monkeypatch.setattr(sources, "_to_parquet", write_same_mtime)
+    schema = T.StructType([T.StructField("v", T.LongType(), False)])
+    pdf = pd.DataFrame({"v": range(6)})
+    src = sources.EpochFileSource(spark, str(tmp_path / "added"), schema)
+    for group in (
+        sources.write_epoch_files(pdf, str(tmp_path / "split"), 6, sort_col=None),
+        [src.add_epoch(pdf.iloc[[i]]) for i in range(6)],
+    ):
+        ms = [os.stat(p).st_mtime_ns // 1_000_000 for p in group]
+        assert ms == sorted(set(ms))
+
+    seen = []
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "split"))
+        .writeStream.foreachBatch(
+            lambda df, epoch: seen.extend(r["v"] for r in df.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    assert seen == list(range(6))
+
+
 def test_lineage_numeric_order(spark, tmp_path):
     import pandas as pd
 

@@ -115,7 +115,9 @@ def main() -> None:
     try:
         if "stream_agg" in WORKLOADS:
             run_query(
-                tumbling_token_frequency(tok_stream(), window="60 seconds"),
+                tumbling_token_frequency(
+                    tok_stream(), window="60 seconds", state_partitions=CPUS
+                ),
                 "update",
                 "stream_agg",
             )

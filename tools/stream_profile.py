@@ -52,6 +52,14 @@ def batch_stats(q) -> list[dict]:
     return out
 
 
+def await_or_stop(q, timeout_s: int) -> None:
+    """Wait for an availableNow query; stop it and raise on timeout, so
+    a stuck query is never reported as a finished run."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise RuntimeError(f"streaming query timed out after {timeout_s}s")
+
+
 def main() -> None:
     from pyspark.sql import functions as F  # noqa: F401
 
@@ -102,7 +110,10 @@ def main() -> None:
                     .parquet(tok_dir)
                 )
                 agg = tumbling_token_frequency(
-                    stream, window="60 seconds", watermark="30 seconds"
+                    stream,
+                    window="60 seconds",
+                    watermark="30 seconds",
+                    state_partitions=parts,
                 )
                 t0 = time.time()
                 q = (
@@ -116,7 +127,7 @@ def main() -> None:
                     .trigger(availableNow=True)
                     .start()
                 )
-                q.awaitTermination(600)
+                await_or_stop(q, 600)
                 wall = round(time.time() - t0, 2)
                 results["runs"].append({
                     "phase": "agg", "parts": parts, "wall_s": wall,
@@ -147,7 +158,7 @@ def main() -> None:
                     .trigger(availableNow=True)
                     .start()
                 )
-                q.awaitTermination(600)
+                await_or_stop(q, 600)
                 wall = round(time.time() - t0, 2)
                 results["runs"].append({
                     "phase": "join", "parts": parts, "wall_s": wall,

@@ -31,7 +31,7 @@ ck = tempfile.mkdtemp()
 stream = (spark.readStream.schema(TOKENS_STREAM_SCHEMA)
           .option("maxFilesPerTrigger", 1).parquet(src))
 t0 = time.time()
-q = (tumbling_token_frequency(stream, window="60 seconds")
+q = (tumbling_token_frequency(stream, window="60 seconds", state_partitions=cpus)
      .writeStream.foreachBatch(lambda df, e: df.write.format("noop").mode("overwrite").save())
      .outputMode("update").option("checkpointLocation", ck)
      .trigger(availableNow=True).start())
