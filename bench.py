@@ -412,15 +412,6 @@ def main() -> None:
         # stage parallelizes across all cores
         "spark.sql.files.maxPartitionBytes": "16m",
     }
-    if os.environ.get("BENCH_STATE_PROVIDER", "hdfs") == "hdfs":
-        # local-mode bench: one process hosts all state partitions, where
-        # RocksDB's per-partition maintenance dominates small-state jobs;
-        # the in-memory provider isolates compute (production posture for
-        # 100 TB state remains RocksDB — see session.py default)
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        )
     spark = get_spark(
         app_name="bench",
         master=f"local[{CPUS}]",

@@ -153,9 +153,9 @@ def _semantic_fn(threshold: float, round_to: int):
         # concat ALL Arrow chunks before the single global sort: a group
         # larger than arrow.maxRecordsPerBatch arrives as several pdfs,
         # and a per-chunk sort would make the greedy keep/drop verdicts
-        # depend on chunk boundaries (same bug class as the TWS
-        # vocabulary and features fixes — processing order must be a
-        # pure function of the batch CONTENT)
+        # depend on chunk boundaries (same bug class as the features
+        # fix — processing order must be a pure function of the batch
+        # CONTENT)
         chunks = [pdf for pdf in pdfs if len(pdf)]
         batch = (
             pd.concat(chunks, ignore_index=True).sort_values("__id")

@@ -37,7 +37,7 @@ def _features_fn(alpha: float):
         # concatenate ALL Arrow chunks before the one global sort — a
         # key whose batch spans multiple chunks (maxRecordsPerBatch)
         # has no cross-chunk ordering guarantee, and state threads
-        # sequentially (same bug class as the TWS vocabulary fix)
+        # sequentially
         chunks = [c for c in pdfs if len(c)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True)
@@ -258,7 +258,6 @@ def streaming_event_features_retractable(
     exact forever (test/replay usage).
     """
     # NULL diff is not an update: int(NaN) would abort the whole query
-    # (same contract as incremental_vocabulary_tws's diff filter)
     keyed = events.filter(
         F.col(time_col).isNotNull()
         & F.col(id_col).isNotNull()

@@ -28,21 +28,21 @@ def recommended_state_partitions(
     Every state-store partition pays a fixed COMMIT cost each
     micro-batch, while the update/probe work parallelizes with
     partitions. The crossover is the rows-per-partition-per-batch
-    density. The model was measured on the HDFS provider, where a commit
-    writes each of the join's four stores' delta files: below ~20k
-    rows/partition the fixed commit cost dominates and fewer partitions
-    win (measured: 8 parts sustain 2.4x the 32-part rate at ~200k
-    rows/batch); above it update parallelism pays for the commit
-    overhead (64 parts sustain 2.2x the 32-part rate at 1.33M
-    rows/batch). The session default (session.py) commits far less per
-    partition: RocksDB with changelog checkpointing appends one
-    changelog, and join state format 3 keeps one store per partition,
-    so there the crossover sits lower; it has not been re-measured.
-    Even so, every state store still creates 4 files per commit (its
-    changelog, the checkpoint checksum sidecar, and a ``.crc`` for
-    each), and without Hadoop's native library each file creation runs
-    one ``chmod`` child process: process spawns per batch grow linearly
-    with the partition count.
+    density. The model was measured on the HDFS-backed provider, the
+    session default (session.py), on Spark's join state format 2: a
+    commit writes a delta file for each of the join's four stores per
+    partition. Below ~20k rows/partition the fixed commit cost dominates
+    and fewer partitions win (measured: 8 parts sustain 2.4x the 32-part
+    rate at ~200k rows/batch); above it update parallelism pays for the
+    commit overhead (64 parts sustain 2.2x the 32-part rate at 1.33M
+    rows/batch). A session opted into RocksDB commits less per
+    partition (one changelog, and format 3 keeps one store per
+    partition), so there the crossover sits lower; it has not been
+    measured. Every state file also has a checksum sidecar and a
+    ``.crc`` for each, and without Hadoop's native library each file
+    creation runs one ``chmod`` child process: process spawns per batch
+    grow linearly with the partition count, four times faster for a
+    format-2 join than for a single-store agg.
 
     ``spark.sql.shuffle.partitions`` binds the state layout at
     CHECKPOINT CREATION — set it before the first ``start()`` and it is

@@ -140,7 +140,7 @@ def _apply_shard_batch(
     # snapshot assignments before the batch: a compression triggered
     # mid-batch renumbers live tokens that this batch never touched;
     # those must be re-emitted or the sink's upsert view keeps their
-    # stale indices (the TWS variant re-emits them the same way).
+    # stale indices.
     before = dict(d.val_to_index)
     touched: dict[str, Any] = {}
     pdf = pdf.sort_values(["event_time", "token"], kind="stable")

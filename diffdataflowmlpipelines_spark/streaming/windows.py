@@ -96,12 +96,14 @@ def size_state_partitions(
     their partition count is EXACTLY ``spark.sql.shuffle.partitions``
     as captured at checkpoint creation — no plan-level hint or
     repartition can size it, so sizing means setting that conf before
-    the query starts (precisely what the stream-join bench lane does
-    via ``recommended_state_partitions``, the measured HDFS-provider
-    cost model: per-partition commit overhead dominates below ~20k
-    rows/partition/batch; SCALING.md join-tune matrices, and the r6
-    windowed-agg A/B: 201k-row batches ran 3.6x faster at 8 state
-    partitions than at 32 on identical input). ``state_partitions``:
+    the query starts, as the stream-join bench lane does via
+    ``recommended_state_partitions``. That cost model was measured on
+    the HDFS-backed provider, which is the session default: per-partition
+    commit overhead dominates below ~20k rows/partition/batch (SCALING.md
+    join-tune matrices; in the r6 windowed-agg A/B, 201k-row batches ran
+    3.6x faster at 8 state partitions than at 32 on identical input).
+    It has not been measured on a session opted into RocksDB, whose
+    commits write less per partition. ``state_partitions``:
     an int pins that count; "auto" derives rows/batch from the
     file-source footers (``_file_stream_rows_per_batch``) and applies
     the cost model, doing nothing but log one warning with the reason
@@ -140,12 +142,12 @@ def size_state_partitions(
 # The AGG's commit-vs-parallelism crossover sits ~5x higher than the
 # stream-join's 20k (a windowed agg commits ONE state store per
 # partition where a format-2 join commits four, and its per-row update
-# work is lighter): the r6 matrices (HDFS provider) measured 2/4/8
-# partitions equal-best at 200k-row batches (2.7-3.1 s vs 8.6 s at 32)
-# and 4/8 best at 800k-row batches (5.7-6.2 s vs 16's 6.1-6.8 s and
-# 32's 7.4-8.2 s) — both densities' optima track ~100k
-# rows/partition/batch (SCALING.md "Windowed-agg state-partition
-# sizing").
+# work is lighter): the r6 matrices, on the HDFS-backed provider that is
+# the session default, measured 2/4/8 partitions equal-best at 200k-row
+# batches (2.7-3.1 s vs 8.6 s at 32) and 4/8 best at 800k-row batches
+# (5.7-6.2 s vs 16's 6.1-6.8 s and 32's 7.4-8.2 s) — both densities'
+# optima track ~100k rows/partition/batch (SCALING.md "Windowed-agg
+# state-partition sizing").
 AGG_MIN_ROWS_PER_PARTITION = 100_000
 
 

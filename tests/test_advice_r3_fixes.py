@@ -8,9 +8,8 @@
 * ivf_topk: caller-supplied centroids of the wrong dimension nulled
   every cosine silently — now validated eagerly like lsh_topk.
 
-(The TWS compress-emission parity fix has its regression trace in
-tests/test_tws_processor_logic.py; the streaming-packing diff<=0 guard
-in tests/test_streaming_packing.py.)
+(The streaming-packing diff<=0 guard has its regression test in
+tests/test_streaming_packing.py.)
 """
 
 from __future__ import annotations

@@ -217,56 +217,88 @@ def test_recommended_state_partitions():
 
 
 def test_join_checkpoint_from_older_state_layout_resumes(spark, tmp_path):
-    """A checkpoint created with join state format 2 and RocksDB
-    changelog checkpointing off (the session defaults before format 3
-    and changelogs) resumes under the current defaults: the query keeps
-    the format its checkpoint recorded, and the output over every epoch
+    """A checkpoint created on RocksDB with changelog checkpointing and
+    join state format 3 (the session defaults before the in-heap store)
+    resumes under the current defaults: the query keeps the provider and
+    format its checkpoint recorded, and the output over every epoch
     equals the batch join."""
-    from diffdataflowmlpipelines_spark.session import JOIN_STATE_FORMAT
+    from diffdataflowmlpipelines_spark.session import (
+        HDFS_PROVIDER,
+        JOIN_STATE_FORMAT,
+        ROCKSDB_PROVIDER,
+        STATE_PROVIDER,
+    )
 
     tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(spark, tmp_path, 21, 4)
     ckpt = str(tmp_path / "ckpt")
     _land(tsrc, lsrc, epochs[:2])
-    saved = _set_conf(spark, {
-        JOIN_STATE_FORMAT: "2",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "false",
-    })
+    saved = _set_conf(spark, {STATE_PROVIDER: ROCKSDB_PROVIDER, JOIN_STATE_FORMAT: "3"})
     try:
         _drain_join(tsrc, lsrc, sink, ckpt)
     finally:
         _set_conf(spark, saved)
-    assert spark.conf.get(JOIN_STATE_FORMAT) == "3"
+    assert spark.conf.get(STATE_PROVIDER) == HDFS_PROVIDER
+    assert spark.conf.get(JOIN_STATE_FORMAT, None) != "3"
     first = sink.committed_epochs()
     _land(tsrc, lsrc, epochs[2:])
     _drain_join(tsrc, lsrc, sink, ckpt)
     assert len(sink.committed_epochs()) > len(first)
     offsets = tmp_path / "ckpt" / "offsets"
     last = max((p for p in offsets.iterdir() if p.name.isdigit()), key=lambda p: int(p.name))
-    assert f'"{JOIN_STATE_FORMAT}":"2"' in last.read_text()
+    assert f'"{STATE_PROVIDER}":"{ROCKSDB_PROVIDER}"' in last.read_text()
+    assert f'"{JOIN_STATE_FORMAT}":"3"' in last.read_text()
+    state = tmp_path / "ckpt" / "state"
+    assert any(state.rglob("*.changelog"))
+    assert not any(state.rglob("*.delta"))
     _assert_join_matches_batch(spark, sink, tok_pdf, lab_pdf)
 
 
 def test_label_join_on_hdfs_state_provider(spark, tmp_path):
-    """Join state format 3 needs RocksDB's column families: a session
-    asked for the HDFS provider keeps Spark's default format, and the
-    join runs on it."""
+    """The session default is the in-heap HDFS-backed state store, on
+    Spark's default join state format (format 3 needs RocksDB's column
+    families); the join runs on it."""
     from diffdataflowmlpipelines_spark.session import (
+        HDFS_PROVIDER,
         JOIN_STATE_FORMAT,
+        STATE_PROVIDER,
+    )
+
+    assert spark.conf.get(STATE_PROVIDER) == HDFS_PROVIDER
+    assert spark.conf.get(JOIN_STATE_FORMAT, None) != "3"
+    tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(spark, tmp_path, 31, 3)
+    _land(tsrc, lsrc, epochs)
+    _drain_join(tsrc, lsrc, sink, str(tmp_path / "ckpt"))
+    # HDFS-provider state is delta files (RocksDB's is changelogs)
+    assert any((tmp_path / "ckpt" / "state").rglob("*.delta"))
+    _assert_join_matches_batch(spark, sink, tok_pdf, lab_pdf)
+
+
+def test_label_join_on_rocksdb_opt_in(spark, tmp_path):
+    """A session that asks for RocksDB gets join state format 3 and
+    changelog checkpoints; a later plain ``get_spark()`` on the same
+    session comes back to the in-heap default and Spark's format."""
+    from diffdataflowmlpipelines_spark.session import (
+        HDFS_PROVIDER,
+        JOIN_STATE_FORMAT,
+        ROCKSDB_PROVIDER,
         STATE_PROVIDER,
         get_spark,
     )
 
-    hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     saved = {k: spark.conf.get(k, None) for k in (STATE_PROVIDER, JOIN_STATE_FORMAT)}
     try:
-        s = get_spark(extra_conf={STATE_PROVIDER: hdfs})
-        assert s.conf.get(STATE_PROVIDER) == hdfs
-        assert s.conf.get(JOIN_STATE_FORMAT) != "3"
-        tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(s, tmp_path, 31, 3)
+        s = get_spark(extra_conf={STATE_PROVIDER: ROCKSDB_PROVIDER})
+        assert s.conf.get(STATE_PROVIDER) == ROCKSDB_PROVIDER
+        assert s.conf.get(JOIN_STATE_FORMAT) == "3"
+        tok_pdf, lab_pdf, epochs, tsrc, lsrc, sink = _join_epochs(s, tmp_path, 33, 2)
         _land(tsrc, lsrc, epochs)
         _drain_join(tsrc, lsrc, sink, str(tmp_path / "ckpt"))
-        # HDFS-provider state is delta files (RocksDB's is changelogs)
-        assert any((tmp_path / "ckpt" / "state").rglob("*.delta"))
+        state = tmp_path / "ckpt" / "state"
+        assert any(state.rglob("*.changelog"))
+        assert not any(state.rglob("*.delta"))
         _assert_join_matches_batch(s, sink, tok_pdf, lab_pdf)
+        s = get_spark()
+        assert s.conf.get(STATE_PROVIDER) == HDFS_PROVIDER
+        assert s.conf.get(JOIN_STATE_FORMAT, None) != "3"
     finally:
         _set_conf(spark, saved)

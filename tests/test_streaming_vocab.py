@@ -234,48 +234,6 @@ def test_vocabulary_checkpoint_resume(spark, tmp_path):
     assert got["apple"] == (0, 2)
 
 
-def test_vocabulary_tws_matches_v1(spark, tmp_path):
-    """transformWithStateInPandas implementation must reproduce the
-    applyInPandasWithState implementation's assignments exactly.
-    (Needs google.protobuf for Spark's TWS python worker — cluster
-    environments have it; this sandbox may not.)"""
-    import pytest as _pytest
-
-    from diffdataflowmlpipelines_spark.streaming.vocabulary_tws import (
-        incremental_vocabulary_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        _pytest.skip("google.protobuf not installed (sandbox); cluster-only path")
-
-    src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["token"])
-    for ep in _epochs():
-        src.add_epoch(ep)
-    q = (
-        incremental_vocabulary_tws(src.stream(), n_shards=1)
-        .writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["token"]: (r["idx"], r["count"])
-        for r in sink.read_current(spark).collect()
-    }
-    oracle = ShardDict()
-    for ep in _epochs():
-        ep = ep.sort_values(["event_time", "token"], kind="stable")
-        for t, d in zip(ep["token"], ep["diff"]):
-            oracle.update(t, int(d))
-    for tok, cnt in oracle.val_to_count.items():
-        want_idx = oracle.val_to_index.get(tok, -1)
-        assert got[tok] == (want_idx, cnt), tok
-
-
 def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
     """DriverVocabularyPipeline (latency twin: driver-held ShardDicts,
     one Spark job per epoch) must emit row-for-row the SAME per-epoch

@@ -41,11 +41,7 @@ from diffdataflowmlpipelines_spark.session import get_spark
 from diffdataflowmlpipelines_spark.sources.fixtures import (
     LABELS_SCHEMA, TOKENS_STREAM_SCHEMA)
 from diffdataflowmlpipelines_spark.streaming.join import label_join
-conf = {
-    "spark.sql.streaming.stateStore.providerClass":
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    "spark.sql.streaming.stateStore.compression.codec": codec,
-}
+conf = {"spark.sql.streaming.stateStore.compression.codec": codec}
 spark = get_spark(app_name="join_tune", master=f"local[{cpus}]",
                   shuffle_partitions=parts, extra_conf=conf)
 ck = tempfile.mkdtemp(prefix="join_tune_ck_")

@@ -9,11 +9,14 @@ Produces dist/diffdataflowmlpipelines_spark.zip. Cluster launch:
     --py-files dist/diffdataflowmlpipelines_spark.zip \
     --conf spark.sql.shuffle.partitions=<2-3x total cores> \
     --conf spark.sql.adaptive.enabled=true \
-    --conf spark.sql.streaming.stateStore.providerClass=\
-org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
     your_job.py
 
 (plus sources/tableio.py ICEBERG_CONF entries for Iceberg tables.)
+Streaming state stays on the JVM heap by default. A job whose state
+outgrows the executor heaps opts into RocksDB in the session it builds
+(``get_spark`` sets the provider, so a ``--conf`` for it is overridden):
+
+  get_spark(extra_conf={STATE_PROVIDER: ROCKSDB_PROVIDER})  # session.py
 """
 
 from __future__ import annotations

@@ -76,8 +76,8 @@ def main() -> None:
             "RocksDB numbers anti-scale locally by construction: local[k] hosts k state",
             "partitions in one process, so per-partition maintenance cost grows with k,",
             "whereas a real cluster keeps partitions-per-executor constant. The hdfs",
-            "(in-memory) provider isolates compute scaling; production config remains",
-            "RocksDB for state >> heap.",
+            "(in-memory) provider, the session default, isolates compute scaling;",
+            "RocksDB is for state >> heap.",
             "",
         ]
         for provider in PROVIDERS:

@@ -13,8 +13,8 @@ State store: local[k] runs k state partitions in ONE process, so
 RocksDB's per-partition maintenance scales with k and anti-scales
 locally (on a real cluster partitions-per-executor is constant).
 Provider is a CLI arg; scaling evidence reports both, headline = hdfs
-(in-memory + snapshot), production config stays RocksDB for 100 TB
-state sizes.
+(in-memory + snapshot, the session default); RocksDB is for state
+larger than the heap.
 
 Usage: scaling_one.py <cpus> <tok_dir> <lab_dir> <provider>
 Env: SCALE_WORKLOADS — csv subset of
@@ -60,7 +60,11 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from diffdataflowmlpipelines_spark.functions.dedup import md5_hash60, word_shingles
-    from diffdataflowmlpipelines_spark.session import get_spark
+    from diffdataflowmlpipelines_spark.session import (
+        ROCKSDB_PROVIDER,
+        STATE_PROVIDER,
+        get_spark,
+    )
     from diffdataflowmlpipelines_spark.sources.fixtures import (
         HOT_KEYS,
         LABELS_SCHEMA,
@@ -73,11 +77,8 @@ def main() -> None:
     from diffdataflowmlpipelines_spark.streaming.windows import tumbling_token_frequency
 
     conf = {"spark.sql.files.maxPartitionBytes": "4m"}
-    if PROVIDER == "hdfs":
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        )
+    if PROVIDER == "rocksdb":  # hdfs is the session default
+        conf[STATE_PROVIDER] = ROCKSDB_PROVIDER
     spark = get_spark(
         app_name=f"scaling-{CPUS}",
         master=f"local[{CPUS}]",

@@ -76,12 +76,7 @@ def main() -> None:
         tumbling_token_frequency,
     )
 
-    conf = {
-        "spark.sql.files.maxPartitionBytes": "16m",
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider",
-    }
+    conf = {"spark.sql.files.maxPartitionBytes": "16m"}
     if CODEC:
         conf["spark.sql.streaming.stateStore.compression.codec"] = CODEC
     spark = get_spark(

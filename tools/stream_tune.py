@@ -18,13 +18,13 @@ CHILD = r"""
 import json, os, sys, time, shutil, tempfile
 sys.path.insert(0, %(repo)r)
 cpus, provider, src = int(sys.argv[1]), sys.argv[2], sys.argv[3]
-from diffdataflowmlpipelines_spark.session import get_spark
+from diffdataflowmlpipelines_spark.session import (
+    ROCKSDB_PROVIDER, STATE_PROVIDER, get_spark)
 from diffdataflowmlpipelines_spark.sources.fixtures import TOKENS_STREAM_SCHEMA
 from diffdataflowmlpipelines_spark.streaming.windows import tumbling_token_frequency
 conf = {"spark.sql.files.maxPartitionBytes": "4m"}
-if provider == "hdfs":
-    conf["spark.sql.streaming.stateStore.providerClass"] = (
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+if provider == "rocksdb":  # hdfs is the session default
+    conf[STATE_PROVIDER] = ROCKSDB_PROVIDER
 spark = get_spark(app_name="tune", master=f"local[{cpus}]",
                   shuffle_partitions=cpus, extra_conf=conf)
 ck = tempfile.mkdtemp()
