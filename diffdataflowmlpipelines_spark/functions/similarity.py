@@ -121,7 +121,8 @@ def cosine_topk(
     # project the vectors away BEFORE the window: Catalyst does not
     # prune columns below row_number's sort, and shuffling the raw
     # vectors through it costs dim x 8 bytes per candidate pair for
-    # nothing (measured 6x on the PQ sibling, tools/pq_adc_bench.py)
+    # nothing (measured 6x on the PQ sibling; see SCALING.md, "PQ ADC vs
+    # exact L2 compute A/B")
     scored = (
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("neighbor_id"), "inner")
@@ -1300,7 +1301,7 @@ def pq_topk(
     # project to the 3 scored columns BEFORE the window: Catalyst does
     # NOT prune the m x ksub table arrays below row_number's sort, and
     # dragging them through it is a measured 6x slowdown (15.4 -> 2.5 s
-    # at 40k x 256; tools/pq_adc_bench.py)
+    # at 40k x 256; SCALING.md, "PQ ADC vs exact L2 compute A/B")
     scored = (
         F.broadcast(q)
         .join(enc, F.col("query_id") != F.col("neighbor_id"), "inner")
@@ -1393,10 +1394,10 @@ def pq_encode_arrow(
 
     Why it exists: the JVM transform+array_min lane allocates ksub
     structs + an array per (row, subspace) — measured ~0.7 ms/row at
-    ksub=256 (tools/pq_adc_bench.py), ~70x over the raw FLOPs. One
-    numpy broadcast per Arrow batch amortizes that to ~µs/row, which is
-    what a 100 TB ingest needs; the JVM lane remains the zero-Python
-    path for query-time / small-batch use."""
+    ksub=256 (SCALING.md, "PQ ADC vs exact L2 compute A/B"), ~70x over
+    the raw FLOPs. One numpy broadcast per Arrow batch amortizes that
+    to ~µs/row, which is what a 100 TB ingest needs; the JVM lane
+    remains the zero-Python path for query-time / small-batch use."""
     from pyspark.sql import types as T
 
     if any(len(cs) > 256 for cs in centroids):

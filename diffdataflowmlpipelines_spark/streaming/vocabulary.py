@@ -150,28 +150,31 @@ def _apply_shard_batch(
     for t, i in d.val_to_index.items():
         if before.get(t) != i:
             touched[t] = True
+    return _emission(d, shard, list(touched), n_shards)
+
+
+def _emission(d: ShardDict, shard: int, tokens: list, n_shards: int) -> pd.DataFrame:
+    """The typed (shard, token, idx, count, vec_len) emission rows of
+    ``tokens`` in shard ``d`` — the one place the output frame of both
+    the streaming operator and the driver-state pipeline is built."""
     return pd.DataFrame(
         {
-            "shard": pd.array([shard] * len(touched), dtype="int32"),
+            "shard": pd.array([shard] * len(tokens), dtype="int32"),
             # explicit dtype: an empty emission's object column would be
             # pyarrow-inferred as null type (parquet schema conflict)
-            "token": pd.array(list(touched), dtype="string"),
+            "token": pd.array(tokens, dtype="string"),
             "idx": pd.array(
                 [
                     # global index; -1 when the value is currently dead
                     (d.val_to_index[t] * n_shards + shard)
                     if t in d.val_to_index
                     else -1
-                    for t in touched
+                    for t in tokens
                 ],
                 dtype="int64",
             ),
-            "count": pd.array(
-                [d.val_to_count[t] for t in touched], dtype="int64"
-            ),
-            "vec_len": pd.array(
-                [d.length * n_shards] * len(touched), dtype="int64"
-            ),
+            "count": pd.array([d.val_to_count[t] for t in tokens], dtype="int64"),
+            "vec_len": pd.array([d.length * n_shards] * len(tokens), dtype="int64"),
         }
     )
 
@@ -195,23 +198,20 @@ def _vocab_fn(n_shards: int):
     return fn
 
 
-def incremental_vocabulary(
-    df: DataFrame, n_shards: int = 16, token_col: str = "token"
-) -> DataFrame:
-    """Stateful token->index assignment over a stream of
-    (token, diff, event_time). Emits per-batch updates
-    (shard, token, idx, count, vec_len); idx = -1 marks a freed value.
-    """
+def _shard_keyed(df: DataFrame, n_shards: int, token_col: str) -> DataFrame:
+    """The sharding invariant of both vocabulary paths: raw
+    (token, diff, event_time) rows -> (shard, token, diff, event_time),
+    with shard = pmod(xxhash64(string token), n_shards)."""
     # NULL tokens/diffs are not updates (str(None) would merge with a
     # real token spelled 'None'; int(None) aborts the batch)
-    keyed = df.filter(
+    return df.filter(
         F.col(token_col).isNotNull() & F.col("diff").isNotNull()
     ).select(
-        # hash the STRING-cast token: the stored key below is the string
-        # cast, and the driver-local twin routes by XXH64(str(token)) —
-        # hashing the raw typed column would shard a LongType token
-        # differently than its stored string, splitting one token across
-        # two ShardDicts when paths mix (review r4d)
+        # hash the STRING-cast token: the stored key is the string cast,
+        # and the driver-local routing (_route_pdf) hashes
+        # XXH64(str(token)) — hashing the raw typed column would shard a
+        # LongType token differently than its stored string, splitting
+        # one token across two ShardDicts when paths mix
         F.pmod(F.xxhash64(F.col(token_col).cast("string")), F.lit(n_shards))
         .cast("int")
         .alias("shard"),
@@ -219,6 +219,16 @@ def incremental_vocabulary(
         F.col("diff").cast("long").alias("diff"),
         F.col("event_time"),
     )
+
+
+def incremental_vocabulary(
+    df: DataFrame, n_shards: int = 16, token_col: str = "token"
+) -> DataFrame:
+    """Stateful token->index assignment over a stream of
+    (token, diff, event_time). Emits per-batch updates
+    (shard, token, idx, count, vec_len); idx = -1 marks a freed value.
+    """
+    keyed = _shard_keyed(df, n_shards, token_col)
     return keyed.groupBy("shard").applyInPandasWithState(
         _vocab_fn(n_shards),
         outputStructType=VOCAB_OUTPUT_SCHEMA,
@@ -275,21 +285,6 @@ class DriverVocabularyPipeline:
 
     # -- plumbing -------------------------------------------------------------
 
-    def _keyed(self, batch_df: DataFrame) -> DataFrame:
-        # string-cast before hashing: must route identically to
-        # _route_pdf's XXH64(str(token)) for any token type (see
-        # incremental_vocabulary)
-        return batch_df.filter(
-            F.col(self.token_col).isNotNull() & F.col("diff").isNotNull()
-        ).select(
-            F.pmod(F.xxhash64(F.col(self.token_col).cast("string")), F.lit(self.n_shards))
-            .cast("int")
-            .alias("shard"),
-            F.col(self.token_col).cast("string").alias("token"),
-            F.col("diff").cast("long").alias("diff"),
-            F.col("event_time"),
-        )
-
     @staticmethod
     def _rows_to_pdf(rows) -> pd.DataFrame:
         pdf = pd.DataFrame(
@@ -312,30 +307,17 @@ class DriverVocabularyPipeline:
         for shard, g in pdf.groupby("shard", sort=True):
             d = self.shards.setdefault(int(shard), ShardDict())
             outs.append(_apply_shard_batch(d, int(shard), g, self.n_shards))
-        if not outs:
-            return _apply_shard_batch(ShardDict(), 0, pdf, self.n_shards).iloc[0:0]
-        return pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else self._no_emission()
 
     def _full_state_pdf(self) -> pd.DataFrame:
-        rows = []
+        outs = []
         for shard in sorted(self.shards):
             d = self.shards[shard]
-            for t in sorted(d.val_to_count):
-                idx = (
-                    d.val_to_index[t] * self.n_shards + shard
-                    if t in d.val_to_index
-                    else -1
-                )
-                rows.append((shard, t, idx, d.val_to_count[t], d.length * self.n_shards))
-        return pd.DataFrame(
-            {
-                "shard": pd.array([r[0] for r in rows], dtype="int32"),
-                "token": pd.array([r[1] for r in rows], dtype="string"),
-                "idx": pd.array([r[2] for r in rows], dtype="int64"),
-                "count": pd.array([r[3] for r in rows], dtype="int64"),
-                "vec_len": pd.array([r[4] for r in rows], dtype="int64"),
-            }
-        )
+            outs.append(_emission(d, shard, sorted(d.val_to_count), self.n_shards))
+        return pd.concat(outs, ignore_index=True) if outs else self._no_emission()
+
+    def _no_emission(self) -> pd.DataFrame:
+        return _emission(ShardDict(), 0, [], self.n_shards)
 
     def _restore_from_sink(self) -> None:
         for e in self.input_sink.committed_epochs():
@@ -364,7 +346,8 @@ class DriverVocabularyPipeline:
             elif not self.output_sink.is_committed(epoch_id):
                 self.output_sink.write_batch_local(self._full_state_pdf(), epoch_id)
             return
-        pdf = self._rows_to_pdf(self._keyed(batch_df).collect())  # one job
+        keyed = _shard_keyed(batch_df, self.n_shards, self.token_col)
+        pdf = self._rows_to_pdf(keyed.collect())  # one job
         self.input_sink.write_batch_local(pdf, epoch_id)
         out = self._apply_pdf(pdf)
         self._applied_epochs.add(epoch_id)

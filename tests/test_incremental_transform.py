@@ -126,7 +126,7 @@ def test_incremental_transform_driver_restart(spark, tmp_path):
     assert pipe2._n == pipe1._n
     assert pipe2._s1 == pytest.approx(pipe1._s1)
     assert pipe2._s2 == pytest.approx(pipe1._s2)
-    assert pipe2.last_meta == pytest.approx(pipe1.last_meta, rel=1e-12)
+    assert pipe2.last_meta[0] == pytest.approx(pipe1.last_meta[0], rel=1e-12)
 
     run_one(pipe2, epochs[2])
     got = {r["row_id"]: r["scaled"] for r in pipe2.current_output().collect()}
@@ -230,9 +230,9 @@ def test_small_epoch_fast_path_lineage_and_replay(spark, tmp_path):
     assert lin_out[1].get("local") and lin_out[2].get("local")
     assert not lin_in[0].get("local")
     # replay: same epoch again must change nothing
-    n_before = pipe._n
+    n_before = pipe._n[0]
     pipe.process_epoch(spark.createDataFrame(epochs[1], SCHEMA), 1)
-    assert pipe._n == n_before
+    assert pipe._n[0] == n_before
     got = {r["row_id"]: r["scaled"] for r in pipe.current_output().collect()}
     assert len(got) == 502
     want = batch_oracle(spark, epochs)
@@ -314,8 +314,8 @@ def test_same_process_replay_before_fold(spark, tmp_path):
     pipe2 = IncrementalScalerPipeline(
         spark, str(tmp_path / "pipe"), ["row_id"], "x", round_to=None
     )
-    assert (pipe._n, pipe._s1, pipe._s2) == pytest.approx(
-        (pipe2._n, pipe2._s1, pipe2._s2)
+    assert (pipe._n[0], pipe._s1[0], pipe._s2[0]) == pytest.approx(
+        (pipe2._n[0], pipe2._s1[0], pipe2._s2[0])
     )
 
 
@@ -388,11 +388,11 @@ def test_process_epoch_local_parity_and_replay(spark, tmp_path):
     assert va == vb
     assert (pa._n, pa._s1, pa._s2) == (pb._n, pb._s1, pb._s2)
     # replay: re-sending a committed epoch must not double-fold
-    stat = (pb._n, pb._s1, pb._s2)
+    stat = (pb._n[0], pb._s1[0], pb._s2[0])
     e1 = epochs[1].copy()
     e1["event_time"] = pd.to_datetime(e1["event_time"]).dt.tz_localize("UTC")
     pb.process_epoch_local(e1, 1)
-    assert (pb._n, pb._s1, pb._s2) == stat
+    assert (pb._n[0], pb._s1[0], pb._s2[0]) == stat
 
 
 def test_process_epoch_local_routes_large_delta_distributed(spark, tmp_path):
@@ -404,7 +404,7 @@ def test_process_epoch_local_routes_large_delta_distributed(spark, tmp_path):
     big["event_time"] = pd.to_datetime(big["event_time"]).dt.tz_localize("UTC")
     pipe.process_epoch_local(big, 0)
     assert pipe.input_sink.is_committed(0) and pipe.output_sink.is_committed(0)
-    assert pipe._n == 50
+    assert pipe._n == [50]
 
 
 def test_output_epochs_have_pinned_schema(spark, tmp_path):

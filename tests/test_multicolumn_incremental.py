@@ -239,3 +239,27 @@ def test_multi_small_epoch_null_value_rows(spark, tmp_path):
     feats = rows[100]
     assert feats[2] is None
     assert all(feats[j] is not None for j in range(K) if j != 2)
+
+
+def test_multi_output_epochs_have_pinned_schema(spark, tmp_path):
+    """Every output epoch carries exactly (key, values, diff, features),
+    whichever lane wrote it. The one-row small-epoch lane used to copy
+    the caller's whole frame (event_time included), so plain
+    spark.read.parquet over the output depended on which epoch's footer
+    Spark sampled."""
+    around = [
+        [1000.0 * (j + 1) + (1.0 if i % 2 else -1.0) for j in range(K)]
+        for i in range(40)
+    ]
+    epochs = [
+        mk_epoch(0, list(range(40)), around),               # first: cascade
+        mk_epoch(1, [100], [[1000.0 * (j + 1) for j in range(K)]]),  # one-row insert
+        mk_epoch(2, list(range(200, 230)), [[1e6] * K] * 30),  # meta moves: cascade
+    ]
+    pipe = run_epochs(spark, tmp_path, epochs, round_to=(2, 4))
+    # epoch 1 took the insert-only lane, the other two cascaded
+    assert pipe.full_reencodes == 2
+    want = {"row_id", *COLS, "diff", "features"}
+    for e in pipe.output_sink.committed_epochs():
+        got = set(spark.read.parquet(pipe.output_sink.epoch_dir(e)).columns)
+        assert got == want, (e, got)

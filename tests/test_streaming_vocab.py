@@ -352,16 +352,16 @@ def test_driver_vocabulary_same_process_replay_before_apply(spark, tmp_path):
     epoch and dropped its updates for the process lifetime)."""
     from diffdataflowmlpipelines_spark.streaming.vocabulary import (
         DriverVocabularyPipeline,
+        _shard_keyed,
     )
 
     epochs = _epochs()
     pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=2)
     pipe.process_epoch(spark.createDataFrame(epochs[0], TOK_SCHEMA), 0)
     # crash window: input epoch 1 committed, apply never ran
+    keyed = _shard_keyed(spark.createDataFrame(epochs[1], TOK_SCHEMA), 2, "token")
     pipe.input_sink.write_batch_local(
-        pipe._rows_to_pdf(
-            pipe._keyed(spark.createDataFrame(epochs[1], TOK_SCHEMA)).collect()
-        ),
+        pipe._rows_to_pdf(keyed.collect()),
         1,
     )
     pipe.process_epoch(spark.createDataFrame(epochs[1], TOK_SCHEMA), 1)

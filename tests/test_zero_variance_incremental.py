@@ -122,7 +122,7 @@ def test_small_epoch_series_lane_zero_variance(spark, tmp_path):
     pipe.process_epoch_local(
         pd.DataFrame({"id": pd.array([0, 1], dtype="Int64"), "x": [5.0, 5.0]}), 0
     )
-    assert pipe.last_meta == (5.0, 0.0)
+    assert pipe.last_meta == ((5.0, 0.0),)
     # mean/var of {5,5,5,4,6} stay (5, 0.4) -> rounded? no rounding: the
     # meta CHANGES here, so instead feed rows that keep it unchanged:
     # two more 5.0s (mean 5, var 0)

@@ -133,13 +133,13 @@ def bench_scaler(spark) -> dict:
             net = (
                 snap.unionByName(
                     with_diff(bulk2).select(
-                        *pipe.key_cols, pipe.value_col, "diff"
+                        *pipe.key_cols, *pipe.value_cols, "diff"
                     )
                 )
-                .groupBy(*pipe.key_cols, pipe.value_col)
+                .groupBy(*pipe.key_cols, *pipe.value_cols)
                 .agg(F.sum("diff").alias("diff"))
             )
-            pipe._encode(net, meta).write.format("noop").mode(
+            pipe._emit(net, meta).write.format("noop").mode(
                 "overwrite"
             ).save()
             bulk_foldonly_secs.append(time.time() - t0)
@@ -165,7 +165,7 @@ def bench_scaler(spark) -> dict:
             )
             t0 = time.time()
             meta = pipe._fold_pdf(pdf)
-            pipe._encode_pdf(pdf, meta)
+            pipe._emit_pdf(pdf, meta)
             fold_ms.append((time.time() - t0) * 1000)
 
         return {
@@ -271,7 +271,7 @@ def bench_multi(spark) -> dict:
             pdf = pd.DataFrame(data)
             t0 = time.time()
             meta = pipe._fold_pdf(pdf)
-            pipe._encode_pdf(pdf, meta)
+            pipe._emit_pdf(pdf, meta)
             fold_ms.append((time.time() - t0) * 1000)
 
         return {
