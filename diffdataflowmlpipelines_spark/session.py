@@ -80,8 +80,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    # read per call: a caller may set the variable after importing this
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # read per call: a caller may set the variable after importing this.
+    # Unset, size to the CPUs this process may run on (what ``nproc``
+    # reports), not to a fixed count that oversubscribes a small host.
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cores}]"
     sp = shuffle_partitions or cores
     b = (

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from diffdataflowmlpipelines_spark.operators.collection import (
     DIFF,
+    _obs_diff,
     consolidate,
     with_diff,
 )
@@ -42,15 +43,30 @@ from diffdataflowmlpipelines_spark.operators.encoders import standard_scale_expr
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 from diffdataflowmlpipelines_spark.streaming.stats import _round_to
 
+_NAN_META = (float("nan"),) * 2
+
 
 def _rows_to_pdf(rows, schema):
     """Collected Rows -> pandas frame with parquet-stable dtypes.
     Timestamps are localized to UTC (the session tz is pinned UTC) so
     pyarrow writes isAdjustedToUTC micros, matching Spark-written
-    epochs."""
+    epochs. Floating columns are masked (Float64/Float32): a NULL is the
+    mask and a NaN stays a value, so pyarrow writes each back as Spark
+    held it (a numpy float column would turn both into null)."""
+    import numpy as np
     import pandas as pd
 
-    pdf = pd.DataFrame({f.name: [r[f.name] for r in rows] for f in schema.fields})
+    cols = {}
+    for f in schema.fields:
+        vals = [r[f.name] for r in rows]
+        t = f.dataType.simpleString()
+        if t in ("double", "float"):
+            dtype = "float64" if t == "double" else "float32"
+            x = np.array([np.nan if v is None else v for v in vals], dtype=dtype)
+            mask = np.array([v is None for v in vals], dtype=bool)
+            vals = pd.arrays.FloatingArray(x, mask)
+        cols[f.name] = vals
+    pdf = pd.DataFrame(cols)
     for f in schema.fields:
         t = f.dataType.simpleString()
         if t == "timestamp":
@@ -61,16 +77,23 @@ def _rows_to_pdf(rows, schema):
             # round-trip through parquet as a typed null like
             # Spark-written epochs do
             pdf[f.name] = pdf[f.name].astype("Int64" if t == "bigint" else "Int32")
-        elif t == "double":
-            pdf[f.name] = pdf[f.name].astype("float64")
-        elif t == "float":
-            pdf[f.name] = pdf[f.name].astype("float32")
         elif t == "string":
             # an empty/all-null object column would be INFERRED by
             # pyarrow (as double/null), writing a conflicting parquet
             # schema into the epoch directory — pin it
             pdf[f.name] = pdf[f.name].astype("string")
     return pdf
+
+
+def _is_null(v, pdf, c) -> bool:
+    """Whether the value ``v`` read from column ``c`` of a driver-side
+    frame is NULL: the mask of a nullable column, or a NaN in a numpy
+    float column (pyarrow persists that NaN as null, so the committed
+    input holds a null there). A NaN in a masked column is a value."""
+    import numpy as np
+    import pandas as pd
+
+    return v is None or v is pd.NA or (v != v and isinstance(pdf[c].dtype, np.dtype))
 
 
 def _feature_series(lists, index):
@@ -124,11 +147,13 @@ class _ScalerEpochs:
         self.last_meta: tuple | None = None
         self.full_reencodes = 0
         self.epochs = 0
-        # running abelian statistic (n, sum, sumsq) per column — DD's
-        # incremental aggregate: each epoch folds in the BATCH's partial
-        # sums, so a single-row update costs O(batch), not O(snapshot)
+        # running abelian statistic (n, NaN count, sum, sumsq) per
+        # column — DD's incremental aggregate: each epoch folds in the
+        # BATCH's partial sums, so a single-row update costs O(batch),
+        # not O(snapshot)
         k = len(self.value_cols)
-        self._n, self._s1, self._s2 = [0] * k, [0.0] * k, [0.0] * k
+        self._n, self._nan = [0] * k, [0] * k
+        self._s1, self._s2 = [0.0] * k, [0.0] * k
         # epochs whose partial sums THIS object has folded (restored
         # prefix counts as folded): distinguishes the two crash windows
         # on replay — before the fold (re-fold it) vs after (repair the
@@ -139,40 +164,48 @@ class _ScalerEpochs:
     # -- statistic ------------------------------------------------------------
 
     def _sum_exprs(self) -> list:
-        # per-column observation counts (null values excluded — SQL AVG
-        # semantics; a single shared n would shrink the mean of any
-        # column with nulls, since F.sum skips them from s1/s2)
+        # per-column observation counts under the batch StandardScaler's
+        # rule (operators/collection._obs_diff): a NULL is not an
+        # observation, a NaN is one and makes the mean NaN. The NaNs are
+        # counted apart and kept out of s1/s2, which a NaN would poison
+        # for good (a retraction cannot subtract it back out).
         exprs = [F.min(F.col(DIFF)).alias("min_diff")]
         for i, c in enumerate(self.value_cols):
             x = F.col(c).cast("double")
-            nd = F.when(x.isNotNull(), F.col(DIFF)).otherwise(F.lit(0))
-            exprs.append(F.sum(nd).alias(f"n_{i}"))
-            exprs.append(F.sum(x * F.col(DIFF)).alias(f"s1_{i}"))
-            exprs.append(F.sum(x * x * F.col(DIFF)).alias(f"s2_{i}"))
+            nan_diff = F.when(F.isnan(x), F.col(DIFF)).otherwise(F.lit(0))
+            finite = F.when(~F.isnan(x), x)
+            exprs.append(F.sum(_obs_diff(x)).alias(f"n_{i}"))
+            exprs.append(F.sum(nan_diff).alias(f"nan_{i}"))
+            exprs.append(F.sum(finite * F.col(DIFF)).alias(f"s1_{i}"))
+            exprs.append(F.sum(finite * finite * F.col(DIFF)).alias(f"s2_{i}"))
         return exprs
 
     def _sums(self, df: DataFrame) -> tuple:
         """ONE aggregate job over a signed frame, all k columns at once:
-        (min diff, n list, s1 list, s2 list)."""
+        (min diff, n list, NaN-count list, s1 list, s2 list)."""
         row = with_diff(df).agg(*self._sum_exprs()).first()
         k = range(len(self.value_cols))
         return (
             row["min_diff"],
             [int(row[f"n_{i}"] or 0) for i in k],
+            [int(row[f"nan_{i}"] or 0) for i in k],
             [float(row[f"s1_{i}"] or 0.0) for i in k],
             [float(row[f"s2_{i}"] or 0.0) for i in k],
         )
 
-    def _meta(self, n, s1, s2) -> tuple:
+    def _meta(self, n, nan, s1, s2) -> tuple:
         """Rounded (mean, var) per column; NaN for a column without
-        observations."""
+        finite observations or with a live NaN. Every NaN meta is the
+        same tuple object, so an unchanged NaN statistic compares equal
+        and triggers no re-encode."""
         metas = []
-        for ni, a, b in zip(n, s1, s2):
-            if ni <= 0:
-                metas.append((float("nan"), float("nan")))
+        for ni, ki, a, b in zip(n, nan, s1, s2):
+            finite = ni - ki
+            if ki > 0 or finite <= 0:
+                metas.append(_NAN_META)
                 continue
-            mean = a / ni
-            var = b / ni - mean * mean
+            mean = a / finite
+            var = b / finite - mean * mean
             if self.round_to:
                 mean = _round_to(mean, self.round_to[0])
                 var = _round_to(var, self.round_to[1])
@@ -180,7 +213,7 @@ class _ScalerEpochs:
         return tuple(metas)
 
     def _current_meta(self) -> tuple:
-        return self._meta(self._n, self._s1, self._s2)
+        return self._meta(self._n, self._nan, self._s1, self._s2)
 
     def _restore_from_sink(self) -> None:
         """Driver-restart recovery: the running statistic lives in driver
@@ -191,7 +224,7 @@ class _ScalerEpochs:
         self._folded_epochs = set(committed)
         if not committed:
             return
-        _, self._n, self._s1, self._s2 = self._sums(
+        _, self._n, self._nan, self._s1, self._s2 = self._sums(
             self.input_sink.read_all(self.spark)
         )
         self.epochs = len(committed)
@@ -201,17 +234,19 @@ class _ScalerEpochs:
         """Fold the batch's signed partial sums into the running
         statistic and return the current (rounded) meta. n counts
         OBSERVATIONS (see _sum_exprs)."""
-        min_diff, n, s1, s2 = self._sums(batch_df)
+        min_diff, n, nan, s1, s2 = self._sums(batch_df)
         self._last_batch_insert_only = (min_diff or 1) > 0
         self._n = [a + b for a, b in zip(self._n, n)]
+        self._nan = [a + b for a, b in zip(self._nan, nan)]
         self._s1 = [a + b for a, b in zip(self._s1, s1)]
         self._s2 = [a + b for a, b in zip(self._s2, s2)]
         return self._current_meta()
 
     def _fold_pdf(self, pdf) -> tuple:
         """Driver-side twin of _fold_batch: fold the tiny batch's signed
-        partial sums without a Spark job (same null-exclusion rule)."""
-        import pandas as pd
+        partial sums without a Spark job (same observation rule; see
+        _is_null for which driver-side cells are NULL)."""
+        import numpy as np
 
         if len(pdf) == 1:
             # scalar lane for the per-row-update hot path: the pandas
@@ -223,18 +258,27 @@ class _ScalerEpochs:
             self._last_batch_insert_only = d > 0
             for i, c in enumerate(self.value_cols):
                 v = row[c]
-                if not pd.isna(v):  # None/NaN/pd.NA are all non-observations
-                    x = float(v)
-                    self._n[i] += d
-                    self._s1[i] += x * d
-                    self._s2[i] += x * x * d
+                if _is_null(v, pdf, c):
+                    continue
+                x = float(v)
+                self._n[i] += d
+                if x != x:
+                    self._nan[i] += d
+                    continue
+                self._s1[i] += x * d
+                self._s2[i] += x * x * d
             return self._current_meta()
         self._last_batch_insert_only = len(pdf) == 0 or int(pdf[DIFF].min()) > 0
         for i, c in enumerate(self.value_cols):
+            # notna: a numpy float column's NaN is NULL, a masked
+            # column's NaN is a value (see _is_null)
             obs = pdf[pdf[c].notna()]
-            x = obs[c].astype("float64")
-            d = obs[DIFF].astype("float64")
+            x = obs[c].to_numpy(dtype="float64", na_value=np.nan)
+            d = obs[DIFF].to_numpy(dtype="float64")
+            nan = np.isnan(x)
             self._n[i] += int(obs[DIFF].sum())
+            self._nan[i] += int(d[nan].sum())
+            x, d = x[~nan], d[~nan]
             self._s1[i] += float((x * d).sum())
             self._s2[i] += float((x * x * d).sum())
         return self._current_meta()
@@ -495,10 +539,9 @@ class IncrementalScalerPipeline(_ScalerEpochs):
         0/0, standard_scale_expr's x == mean case) must stay a NaN
         VALUE — Float64 arithmetic keeps it (mask stays False) but
         pd.array construction would collapse it to NULL, hence the
-        FloatingArray in the scalar lane. Known twin-side edge: a NaN
-        INPUT is indistinguishable from NULL here (_rows_to_pdf's
-        float64 cast collapsed them), so it encodes to NULL where the
-        distributed path would emit NaN."""
+        FloatingArray in the scalar lane. A NaN INPUT in a masked column
+        (what _rows_to_pdf builds) encodes to NaN, as on the distributed
+        path; _is_null says which cells are NULL."""
         import numpy as np
         import pandas as pd
 
@@ -508,7 +551,7 @@ class IncrementalScalerPipeline(_ScalerEpochs):
             # scalar lane: one-row Float64 Series construction dominates
             # the single-row re-encode
             v = pdf[c].iloc[0]
-            if pd.isna(v):
+            if _is_null(v, pdf, c):
                 pdf["scaled"] = pd.array([None], dtype="Float64")
             else:
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -578,7 +621,7 @@ class IncrementalMultiScalerPipeline(_ScalerEpochs):
             with np.errstate(divide="ignore", invalid="ignore"):
                 for c, (m, v) in zip(self.value_cols, meta):
                     x = row[c]
-                    if pd.isna(x):
+                    if _is_null(x, pdf, c):
                         feats.append(None)
                         continue
                     feats.append(

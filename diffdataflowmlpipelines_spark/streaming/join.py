@@ -16,53 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def recommended_state_partitions(
-    rows_per_batch: int,
-    *,
-    max_parallelism: int,
-    min_rows_per_partition: int = 20_000,
-) -> int:
-    """State-partition count for a stateful stream-stream join, from the
-    measured cost model (tools/join_tune.py matrices in SCALING.md).
-
-    Every state-store partition pays a fixed COMMIT cost each
-    micro-batch, while the update/probe work parallelizes with
-    partitions. The crossover is the rows-per-partition-per-batch
-    density. The model was measured on the HDFS-backed provider, the
-    session default (session.py), on Spark's join state format 2: a
-    commit writes a delta file for each of the join's four stores per
-    partition. Below ~20k rows/partition the fixed commit cost dominates
-    and fewer partitions win (measured: 8 parts sustain 2.4x the 32-part
-    rate at ~200k rows/batch); above it update parallelism pays for the
-    commit overhead (64 parts sustain 2.2x the 32-part rate at 1.33M
-    rows/batch). A session opted into RocksDB commits less per
-    partition (one changelog, and format 3 keeps one store per
-    partition), so there the crossover sits lower; it has not been
-    measured. Every state file also has a checksum sidecar and a
-    ``.crc`` for each, and without Hadoop's native library each file
-    creation runs one ``chmod`` child process: process spawns per batch
-    grow linearly with the partition count, four times faster for a
-    format-2 join than for a single-store agg.
-
-    ``spark.sql.shuffle.partitions`` binds the state layout at
-    CHECKPOINT CREATION — set it before the first ``start()`` and it is
-    fixed for the query's life, so size it to the expected steady-state
-    batch, not the cold batch. ``max_parallelism`` caps at the available
-    task slots (executors x cores on a cluster, threads in local mode).
-    """
-    if rows_per_batch <= 0:
-        raise ValueError(f"rows_per_batch must be positive, got {rows_per_batch}")
-    if max_parallelism <= 0:
-        raise ValueError(f"max_parallelism must be positive, got {max_parallelism}")
-    by_density = max(1, rows_per_batch // min_rows_per_partition)
-    # round down to a power of two: partition counts compose with the
-    # pmod salting in salted_label_join and re-shard evenly on growth
-    p = 1
-    while p * 2 <= min(by_density, max_parallelism):
-        p *= 2
-    return p
-
-
 def label_join(
     tokens: DataFrame,
     labels: DataFrame,

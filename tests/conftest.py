@@ -14,10 +14,10 @@ def spark():
 
 @pytest.fixture(autouse=True)
 def _restore_shuffle_partitions(request):
-    """size_state_partitions (streaming/windows.py) deliberately mutates
-    the session's spark.sql.shuffle.partitions to bind a stateful
-    query's state layout; restore it after every test so the sizing a
-    streaming test triggers cannot leak into unrelated tests."""
+    """The library leaves spark.sql.shuffle.partitions as it found it;
+    the only writers are tests that set it themselves (to bind a
+    stateful query's state layout, or through get_spark). Restore it
+    after every test so one test's setting cannot leak into the next."""
     if "spark" not in request.fixturenames:
         yield
         return

@@ -9,24 +9,14 @@
   every double, so `x > mean` mapped a NaN input to +inf while the
   emulated IEEE result (NaN - mean)/0.0 is NaN (the non-zero-variance
   branch already yielded NaN). Now guards isnan first.
-* tools/: `from scaling_subproc import ...` resolved only via the
-  script-dir sys.path entry 'python tools/x.py' adds; now each caller
-  inserts HERE explicitly (tested by importing the modules the other
-  way).
 """
 
 from __future__ import annotations
-
-import importlib
-import os
-import sys
 
 from pyspark.sql import functions as F
 
 from diffdataflowmlpipelines_spark.functions.bpe import initial_symbols
 from diffdataflowmlpipelines_spark.operators.encoders import StandardScaler
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_initial_symbols_splits_unicode_line_terminators(spark):
@@ -61,27 +51,3 @@ def test_standard_scaler_zero_variance_nan_input_stays_nan(spark):
     assert rows["0.0"] == float("-inf")
     assert math.isnan(rows["1.0"])  # x == mean
 
-
-def test_tools_scaling_subproc_resolves_without_script_dir_on_path():
-    # Simulate `python -m` / pytest collection: tools/ NOT on sys.path.
-    # The fixed run() helpers insert HERE before importing
-    # scaling_subproc; replicate that exact sequence here.
-    tools_dir = os.path.join(REPO, "tools")
-    saved = list(sys.path)
-    try:
-        sys.path = [p for p in sys.path if os.path.abspath(p) != tools_dir]
-        sys.modules.pop("scaling_subproc", None)
-        try:
-            importlib.import_module("scaling_subproc")
-            raise AssertionError("expected ModuleNotFoundError without HERE")
-        except ModuleNotFoundError:
-            pass
-        sys.path.insert(0, tools_dir)  # the fix's sequence
-        m = importlib.import_module("scaling_subproc")
-        assert hasattr(m, "run_scaling_one")
-        for script in ("scaling_bench.py", "scaling_round.py", "skew_bench.py"):
-            src = open(os.path.join(tools_dir, script)).read()
-            assert "sys.path.insert(0, HERE)" in src, script
-    finally:
-        sys.path = saved
-        sys.modules.pop("scaling_subproc", None)

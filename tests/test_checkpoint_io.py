@@ -96,7 +96,8 @@ def test_stream_checkpoint_spawns_no_readlink(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = tumbling_token_frequency(stream, state_partitions=2)
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    agg = tumbling_token_frequency(stream)
 
     def run():
         q = (
@@ -124,10 +125,11 @@ def test_filecontext_checkpoint_resumes_under_default_manager(spark, tmp_path):
     src = EpochFileSource(spark, str(tmp_path / "src"), TOKENS_STREAM_SCHEMA)
     sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["window_start", "token"])
     ckpt = str(tmp_path / "ckpt")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
 
     def drain():
         q = (
-            tumbling_token_frequency(src.stream(), state_partitions=2)
+            tumbling_token_frequency(src.stream())
             .writeStream.foreachBatch(sink.foreach_batch())
             .outputMode("update")
             .option("checkpointLocation", ckpt)

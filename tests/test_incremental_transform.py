@@ -444,3 +444,39 @@ def test_replay_restores_stale_last_meta(spark, tmp_path):
     pipe.last_meta = ("stale", "stale")  # simulate the crash window
     pipe.process_epoch(spark.createDataFrame(e0, SCHEMA), 0)  # replay
     assert pipe.last_meta == good
+
+
+def test_nan_is_an_observation_on_both_folds(spark, tmp_path):
+    """A NaN value is an observation that makes the statistic NaN, on
+    the distributed fold and on the driver-side fold alike, as in the
+    batch StandardScaler. Retracting it restores the finite statistic
+    of the rows without it."""
+    import math
+
+    rows = [
+        (i, float("nan") if i == 37 else float(i), T0 + timedelta(seconds=i), 1)
+        for i in range(100)
+    ]
+    nan_row = rows[37]
+    df = spark.createDataFrame(rows, SCHEMA)
+    want = StandardScaler(round_to=(-1, -1)).fit(df, "x")
+    assert math.isnan(want.mean_) and math.isnan(want.var_)
+    finite = spark.createDataFrame([r for r in rows if r is not nan_row], SCHEMA)
+    want_finite = StandardScaler(round_to=(-1, -1)).fit(finite, "x")
+    retract = spark.createDataFrame([(*nan_row[:3], -1)], SCHEMA)
+    for small in (0, 200):
+        pipe = IncrementalScalerPipeline(
+            spark, str(tmp_path / f"p{small}"), ["row_id"], "x",
+            round_to=(-1, -1), small_epoch_rows=small,
+        )
+        pipe.process_epoch(df, 0)
+        assert pipe._n == [100], small
+        ((mean, var),) = pipe.last_meta
+        assert math.isnan(mean) and math.isnan(var), small
+        pipe.process_epoch(retract, 1)
+        assert pipe._n == [99], small
+        assert pipe.last_meta[0] == pytest.approx(
+            (want_finite.mean_, want_finite.var_)
+        ), small
+        out = pipe.current_output().collect()
+        assert len(out) == 99 and not any(math.isnan(r["scaled"]) for r in out)

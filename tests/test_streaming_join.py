@@ -190,32 +190,6 @@ def test_salted_join_streaming(spark, tmp_path):
     pd.testing.assert_frame_equal(_canon(got), _canon(want), check_dtype=False)
 
 
-def test_recommended_state_partitions():
-    """Sizing rule from the measured join_tune matrices (SCALING.md):
-    ~20k rows/partition/batch density, power-of-two, capped at the
-    available parallelism."""
-    import pytest
-
-    from diffdataflowmlpipelines_spark.streaming.join import (
-        recommended_state_partitions,
-    )
-
-    # the two measured shapes reproduce their measured winners
-    assert recommended_state_partitions(200_000, max_parallelism=32) == 8
-    assert recommended_state_partitions(1_333_333, max_parallelism=64) == 64
-    # tiny batches never go below one partition
-    assert recommended_state_partitions(1, max_parallelism=32) == 1
-    assert recommended_state_partitions(19_999, max_parallelism=32) == 1
-    # parallelism cap binds on huge batches
-    assert recommended_state_partitions(10_000_000, max_parallelism=32) == 32
-    # non-power-of-two cap rounds down
-    assert recommended_state_partitions(10_000_000, max_parallelism=48) == 32
-    with pytest.raises(ValueError):
-        recommended_state_partitions(0, max_parallelism=32)
-    with pytest.raises(ValueError):
-        recommended_state_partitions(100, max_parallelism=0)
-
-
 def test_join_checkpoint_from_older_state_layout_resumes(spark, tmp_path):
     """A checkpoint created on RocksDB with changelog checkpointing and
     join state format 3 (the session defaults before the in-heap store)

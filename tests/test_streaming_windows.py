@@ -8,8 +8,6 @@ here asserted).
 
 from __future__ import annotations
 
-import logging
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -233,27 +231,16 @@ def test_checkpoint_resume(spark, tmp_path, fixture_pdf):
     assert_frame_match(got, want)
 
 
-def test_auto_state_sizing_warns_when_it_declines(spark, tmp_path, caplog):
-    """Over an empty source directory "auto" has no batch density to
-    size from: it leaves the state partitions alone and logs one warning
-    naming why. Once a file has landed, it sizes without a warning."""
+def test_window_aggs_leave_shuffle_partitions_alone(spark, tmp_path):
+    """Building a windowed agg over a file stream whose first batch is
+    readable does not resize the session: the state partition count is
+    the caller's ``spark.sql.shuffle.partitions``."""
     src = EpochFileSource(spark, str(tmp_path / "src"), TOKENS_STREAM_SCHEMA)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    logger = "diffdataflowmlpipelines_spark.streaming.windows"
-    with caplog.at_level(logging.WARNING, logger=logger):
-        sliding_token_frequency(src.stream())
-    warnings = [r.getMessage() for r in caplog.records if r.name == logger]
-    assert len(warnings) == 1
-    assert "holds no parquet files yet" in warnings[0]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-    caplog.clear()
     src.add_epoch(gen_tokens_pdf(50, seed=5, rows_per_second=10.0))
-    with caplog.at_level(logging.WARNING, logger=logger):
-        sliding_token_frequency(src.stream())
-    assert not [r for r in caplog.records if r.name == logger]
-    # 50 rows per batch are far under one partition's worth
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    tumbling_token_frequency(src.stream())
+    sliding_token_frequency(src.stream())
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_sink_idempotent_replay(spark, tmp_path):
