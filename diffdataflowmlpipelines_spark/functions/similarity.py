@@ -222,15 +222,10 @@ def ivf_topk(
         """top nearest centroids per row — shuffle-free projection
         against the literal centroid array (cosine, ties by centroid
         id, matching the previous join+window formulation exactly)."""
-        cent_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(r["__cid"]).alias("cid"),
-                    F.array(*[F.lit(float(x)) for x in r["__cvec"]]).alias("v"),
-                    F.lit(float(r["__cnorm"])).alias("n"),
-                )
-                for r in cent_rows
-            ]
+        cent_arr = F.arrays_zip(
+            F.array(*[F.lit(r["__cid"]) for r in cent_rows]).alias("cid"),
+            _matrix_lit([r["__cvec"] for r in cent_rows]).alias("v"),
+            _vector_lit([r["__cnorm"] for r in cent_rows]).alias("n"),
         )
         base = df.select(
             F.col(key).alias(id_alias),
@@ -399,15 +394,10 @@ def _nearest_assign(
     # string keys at plan time and silently MERGED distinct float-keyed
     # cells by truncation
     cent_rows = sorted(cent_rows, key=lambda r: r["__cid"])
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("idx"),
-                F.array(*[F.lit(float(x)) for x in r["__cvec"]]).alias("v"),
-                F.lit(float(r["__cnorm"])).alias("n"),
-            )
-            for i, r in enumerate(cent_rows)
-        ]
+    cent_arr = F.arrays_zip(
+        F.sequence(F.lit(0), F.lit(len(cent_rows) - 1)).alias("idx"),
+        _matrix_lit([r["__cvec"] for r in cent_rows]).alias("v"),
+        _vector_lit([r["__cnorm"] for r in cent_rows]).alias("n"),
     )
     cent_keys = F.array(*[F.lit(r["__cid"]) for r in cent_rows])
     base = corpus.select(

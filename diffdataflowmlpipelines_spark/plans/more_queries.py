@@ -227,10 +227,6 @@ def d6_dup_clusters(spark, sf_dir):
     return dup_clusters_star(pairs.select("a", "b"))
 
 
-def _tokenized_docs_mq(spark, sf_dir):
-    return load(spark, sf_dir, "documents").withColumn("toks", tokenize("text"))
-
-
 # --- generic OLAP beyond the reference (window functions, rollup) -------------
 # the reference has no window functions / grouping sets (SURVEY §2.3);
 # a complete engine replacement needs them.

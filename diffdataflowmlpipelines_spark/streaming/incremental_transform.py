@@ -15,10 +15,17 @@ Spark re-expression (driven per micro-batch from ``foreachBatch``):
   epoch k: append batch rows to the input snapshot (exactly-once sink)
            fold the batch's signed partial sums (n, Σx, Σx²) of every
              column into the running statistic — retraction-correct,
-             one aggregate job (none on the small-epoch lane)
+             one aggregate job
            round; compare with the previous epoch's rounded statistic
            changed   -> re-encode the WHOLE snapshot (the DD cascade)
            unchanged -> encode only this batch's rows with current meta
+
+Epochs of at most ``SMALL_EPOCH_ROWS`` rows take the driver lane
+instead: the ``limit(n + 1).collect()`` size probe is the epoch's only
+Spark job unless the statistic moves or the epoch retracts. The lane
+works on the collected rows as Spark holds them (None is NULL, a float
+NaN is NaN): one per-row fold of the statistic, one per-row encode, and
+pyarrow tables for both sink commits.
 
 Every output epoch carries exactly (*key_cols, *value_cols, diff) plus
 the encoder's column, whichever lane wrote it.
@@ -30,8 +37,12 @@ the reference's incremental-update trace oracle (FIXTURES.md F3).
 
 from __future__ import annotations
 
+import math
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from diffdataflowmlpipelines_spark.operators.collection import (
     DIFF,
@@ -43,71 +54,39 @@ from diffdataflowmlpipelines_spark.operators.encoders import standard_scale_expr
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 from diffdataflowmlpipelines_spark.streaming.stats import _round_to
 
-_NAN_META = (float("nan"),) * 2
+# epochs at or under this row count take the driver lane: ONE Spark job
+# (the collect probe) plus pyarrow commits, instead of 3-4 distributed
+# jobs. 0 sends every epoch distributed.
+SMALL_EPOCH_ROWS = 64
+
+_NAN, _INF = float("nan"), float("inf")
+# the one NaN object of every non-finite meta: a tuple compares its
+# elements by identity first, so an unchanged non-finite statistic
+# compares equal and triggers no re-encode
+_NAN_META = (_NAN, _NAN)
 
 
-def _rows_to_pdf(rows, schema):
-    """Collected Rows -> pandas frame with parquet-stable dtypes.
-    Timestamps are localized to UTC (the session tz is pinned UTC) so
-    pyarrow writes isAdjustedToUTC micros, matching Spark-written
-    epochs. Floating columns are masked (Float64/Float32): a NULL is the
-    mask and a NaN stays a value, so pyarrow writes each back as Spark
-    held it (a numpy float column would turn both into null)."""
-    import numpy as np
-    import pandas as pd
-
-    cols = {}
-    for f in schema.fields:
-        vals = [r[f.name] for r in rows]
-        t = f.dataType.simpleString()
-        if t in ("double", "float"):
-            dtype = "float64" if t == "double" else "float32"
-            x = np.array([np.nan if v is None else v for v in vals], dtype=dtype)
-            mask = np.array([v is None for v in vals], dtype=bool)
-            vals = pd.arrays.FloatingArray(x, mask)
-        cols[f.name] = vals
-    pdf = pd.DataFrame(cols)
-    for f in schema.fields:
-        t = f.dataType.simpleString()
-        if t == "timestamp":
-            pdf[f.name] = pd.to_datetime(pdf[f.name]).dt.tz_localize("UTC")
-        elif t in ("bigint", "int"):
-            # nullable pandas dtypes: a NULL int cell must not crash the
-            # fast path (plain astype('int64') raises on None) and must
-            # round-trip through parquet as a typed null like
-            # Spark-written epochs do
-            pdf[f.name] = pdf[f.name].astype("Int64" if t == "bigint" else "Int32")
-        elif t == "string":
-            # an empty/all-null object column would be INFERRED by
-            # pyarrow (as double/null), writing a conflicting parquet
-            # schema into the epoch directory — pin it
-            pdf[f.name] = pdf[f.name].astype("string")
-    return pdf
+def _table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    """Row tuples in ``schema`` order -> a pa.Table of that schema. None
+    is NULL and a float NaN stays a NaN value. A naive datetime in a UTC
+    timestamp field is read as UTC: ``collect()`` renders timestamps in
+    the driver process's local zone, which this lane assumes is UTC."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
 
 
-def _is_null(v, pdf, c) -> bool:
-    """Whether the value ``v`` read from column ``c`` of a driver-side
-    frame is NULL: the mask of a nullable column, or a NaN in a numpy
-    float column (pyarrow persists that NaN as null, so the committed
-    input holds a null there). A NaN in a masked column is a value."""
-    import numpy as np
-    import pandas as pd
-
-    return v is None or v is pd.NA or (v != v and isinstance(pdf[c].dtype, np.dtype))
-
-
-def _feature_series(lists, index):
-    """list-of-lists -> arrow-backed pandas column that PRESERVES the
-    IEEE NaN elements through to_parquet: the default pandas->arrow
-    conversion of an object list column runs with from_pandas
-    semantics, silently collapsing every NaN ELEMENT to NULL (found
-    by the zero-variance regression test — the distributed F.array
-    epochs carried NaN where the driver-local epochs carried NULL)."""
-    import pandas as pd
-    import pyarrow as pa
-
-    arr = pa.array(lists, type=pa.list_(pa.float64()), from_pandas=False)
-    return pd.Series(pd.arrays.ArrowExtensionArray(arr), index=index)
+def _scale(x, mean: float, var: float):
+    """``standard_scale_expr`` for one value: (x - mean) / var, with the
+    IEEE results of a zero variance that Python's float division raises
+    on (+/-inf, NaN at x == mean or for a NaN x). NULL stays None."""
+    if x is None:
+        return None
+    d = float(x) - mean
+    if var != 0.0:
+        return d / var
+    return _NAN if d != d or d == 0.0 else math.copysign(_INF, d)
 
 
 class _ScalerEpochs:
@@ -115,11 +94,11 @@ class _ScalerEpochs:
     (mean, var) statistic per column of ``value_cols``, rounded by
     ``round_to`` (the reference's update suppression).
 
-    Subclasses supply only the encoder: ``_encode`` (distributed) and
-    its driver-local twin ``_encode_pdf``. Both receive a frame already
-    projected to (*key_cols, *value_cols, diff) and a meta tuple of one
-    (mean, var) per value column, and return the frame with the encoded
-    column added (``_encode_pdf`` may add it in place: it gets a copy).
+    Subclasses supply only the encoder: ``_encode`` (distributed) adds
+    the column ``_out_field`` names to a frame projected to
+    (*key_cols, *value_cols, diff); its driver-lane twin ``_encode_row``
+    returns that column's value for one row's value tuple. Both take a
+    meta tuple of one (mean, var) per value column.
     """
 
     def __init__(
@@ -129,7 +108,6 @@ class _ScalerEpochs:
         key_cols: list[str],
         value_cols: list[str],
         round_to: tuple[int, int] | None = None,
-        small_epoch_rows: int = 64,
     ):
         self.spark = spark
         self.key_cols = list(key_cols)
@@ -138,21 +116,18 @@ class _ScalerEpochs:
         # projection every lane encodes
         self._grain = [*self.key_cols, *self.value_cols]
         self.round_to = round_to
-        # epochs at or under this row count take the driver-local fast
-        # path: ONE Spark job (the collect probe) + pyarrow commits,
-        # instead of 3-4 distributed jobs. 0 disables.
-        self.small_epoch_rows = small_epoch_rows
         self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", key_cols)
         self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", key_cols)
         self.last_meta: tuple | None = None
         self.full_reencodes = 0
         self.epochs = 0
-        # running abelian statistic (n, NaN count, sum, sumsq) per
-        # column — DD's incremental aggregate: each epoch folds in the
+        # running abelian statistic per column: n, the NaN, +inf and
+        # -inf counts, and the sum and sum of squares of the finite
+        # values — DD's incremental aggregate: each epoch folds in the
         # BATCH's partial sums, so a single-row update costs O(batch),
         # not O(snapshot)
         k = len(self.value_cols)
-        self._n, self._nan = [0] * k, [0] * k
+        self._n, self._nan, self._pinf, self._ninf = ([0] * k for _ in range(4))
         self._s1, self._s2 = [0.0] * k, [0.0] * k
         # epochs whose partial sums THIS object has folded (restored
         # prefix counts as folded): distinguishes the two crash windows
@@ -166,54 +141,66 @@ class _ScalerEpochs:
     def _sum_exprs(self) -> list:
         # per-column observation counts under the batch StandardScaler's
         # rule (operators/collection._obs_diff): a NULL is not an
-        # observation, a NaN is one and makes the mean NaN. The NaNs are
-        # counted apart and kept out of s1/s2, which a NaN would poison
-        # for good (a retraction cannot subtract it back out).
+        # observation; a NaN or an infinity is one. NaNs and infinities
+        # are counted apart and kept out of s1/s2, which they would
+        # poison for good (a retraction cannot subtract inf or NaN back
+        # out). Spark orders NaN above +inf, so |x| < inf keeps exactly
+        # the finite values.
+        def count(cond):
+            return F.sum(F.when(cond, F.col(DIFF)).otherwise(F.lit(0)))
+
         exprs = [F.min(F.col(DIFF)).alias("min_diff")]
         for i, c in enumerate(self.value_cols):
             x = F.col(c).cast("double")
-            nan_diff = F.when(F.isnan(x), F.col(DIFF)).otherwise(F.lit(0))
-            finite = F.when(~F.isnan(x), x)
-            exprs.append(F.sum(_obs_diff(x)).alias(f"n_{i}"))
-            exprs.append(F.sum(nan_diff).alias(f"nan_{i}"))
-            exprs.append(F.sum(finite * F.col(DIFF)).alias(f"s1_{i}"))
-            exprs.append(F.sum(finite * finite * F.col(DIFF)).alias(f"s2_{i}"))
+            finite = F.when(F.abs(x) < F.lit(_INF), x)
+            exprs += [
+                F.sum(_obs_diff(x)).alias(f"n_{i}"),
+                count(F.isnan(x)).alias(f"nan_{i}"),
+                count(x == F.lit(_INF)).alias(f"pinf_{i}"),
+                count(x == F.lit(-_INF)).alias(f"ninf_{i}"),
+                F.sum(finite * F.col(DIFF)).alias(f"s1_{i}"),
+                F.sum(finite * finite * F.col(DIFF)).alias(f"s2_{i}"),
+            ]
         return exprs
 
     def _sums(self, df: DataFrame) -> tuple:
         """ONE aggregate job over a signed frame, all k columns at once:
-        (min diff, n list, NaN-count list, s1 list, s2 list)."""
+        (min diff, (n, NaN, +inf, -inf, s1, s2)), one list per field."""
         row = with_diff(df).agg(*self._sum_exprs()).first()
         k = range(len(self.value_cols))
-        return (
-            row["min_diff"],
-            [int(row[f"n_{i}"] or 0) for i in k],
-            [int(row[f"nan_{i}"] or 0) for i in k],
-            [float(row[f"s1_{i}"] or 0.0) for i in k],
-            [float(row[f"s2_{i}"] or 0.0) for i in k],
+        counts = tuple(
+            [int(row[f"{f}_{i}"] or 0) for i in k] for f in ("n", "nan", "pinf", "ninf")
         )
+        sums = tuple([float(row[f"{f}_{i}"] or 0.0) for i in k] for f in ("s1", "s2"))
+        return row["min_diff"], counts + sums
 
-    def _meta(self, n, nan, s1, s2) -> tuple:
-        """Rounded (mean, var) per column; NaN for a column without
-        finite observations or with a live NaN. Every NaN meta is the
-        same tuple object, so an unchanged NaN statistic compares equal
-        and triggers no re-encode."""
+    def _stats(self) -> tuple:
+        return self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2
+
+    def _meta(self, n, nan, pinf, ninf, s1, s2) -> tuple:
+        """Rounded (mean, var) per column, what the batch StandardScaler
+        returns: NaN for a column without observations or with a live
+        NaN; a live +inf (-inf) makes the mean +inf (-inf) and the
+        variance inf - inf = NaN; both signs make both NaN. Only finite
+        values are rounded."""
         metas = []
-        for ni, ki, a, b in zip(n, nan, s1, s2):
-            finite = ni - ki
-            if ki > 0 or finite <= 0:
+        for ni, ki, pi, mi, a, b in zip(n, nan, pinf, ninf, s1, s2):
+            if ni <= 0 or ki > 0 or (pi > 0 and mi > 0):
                 metas.append(_NAN_META)
-                continue
-            mean = a / finite
-            var = b / finite - mean * mean
-            if self.round_to:
-                mean = _round_to(mean, self.round_to[0])
-                var = _round_to(var, self.round_to[1])
-            metas.append((mean, var))
+            elif pi > 0 or mi > 0:
+                metas.append((_INF if pi > 0 else -_INF, _NAN))
+            else:
+                mean = a / ni
+                var = b / ni - mean * mean
+                if self.round_to:
+                    rm, rv = self.round_to
+                    mean = _round_to(mean, rm) if math.isfinite(mean) else mean
+                    var = _round_to(var, rv) if math.isfinite(var) else var
+                metas.append((mean, var))
         return tuple(metas)
 
     def _current_meta(self) -> tuple:
-        return self._meta(self._n, self._nan, self._s1, self._s2)
+        return self._meta(*self._stats())
 
     def _restore_from_sink(self) -> None:
         """Driver-restart recovery: the running statistic lives in driver
@@ -224,9 +211,8 @@ class _ScalerEpochs:
         self._folded_epochs = set(committed)
         if not committed:
             return
-        _, self._n, self._nan, self._s1, self._s2 = self._sums(
-            self.input_sink.read_all(self.spark)
-        )
+        _, stats = self._sums(self.input_sink.read_all(self.spark))
+        self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2 = stats
         self.epochs = len(committed)
         self.last_meta = self._current_meta()
 
@@ -234,53 +220,38 @@ class _ScalerEpochs:
         """Fold the batch's signed partial sums into the running
         statistic and return the current (rounded) meta. n counts
         OBSERVATIONS (see _sum_exprs)."""
-        min_diff, n, nan, s1, s2 = self._sums(batch_df)
+        min_diff, part = self._sums(batch_df)
         self._last_batch_insert_only = (min_diff or 1) > 0
-        self._n = [a + b for a, b in zip(self._n, n)]
-        self._nan = [a + b for a, b in zip(self._nan, nan)]
-        self._s1 = [a + b for a, b in zip(self._s1, s1)]
-        self._s2 = [a + b for a, b in zip(self._s2, s2)]
+        for acc, p in zip(self._stats(), part):
+            for i, v in enumerate(p):
+                acc[i] += v
         return self._current_meta()
 
-    def _fold_pdf(self, pdf) -> tuple:
-        """Driver-side twin of _fold_batch: fold the tiny batch's signed
-        partial sums without a Spark job (same observation rule; see
-        _is_null for which driver-side cells are NULL)."""
-        import numpy as np
-
-        if len(pdf) == 1:
-            # scalar lane for the per-row-update hot path: the pandas
-            # filter/astype/sum chain below costs ~2-3 ms per column per
-            # call, most of the remaining gap to the reference's
-            # in-process number
-            row = pdf.iloc[0]
-            d = int(row[DIFF])
-            self._last_batch_insert_only = d > 0
-            for i, c in enumerate(self.value_cols):
-                v = row[c]
-                if _is_null(v, pdf, c):
+    def _fold_rows(self, rows: list[tuple], schema: pa.Schema) -> tuple:
+        """Driver-lane twin of _fold_batch: fold collected row tuples (in
+        ``schema`` order) one by one, under the same observation rule."""
+        d_at = schema.get_field_index(DIFF)
+        at = [schema.get_field_index(c) for c in self.value_cols]
+        n, nan, pinf, ninf, s1, s2 = self._stats()
+        insert_only = True
+        for r in rows:
+            d = r[d_at]
+            insert_only = insert_only and d > 0
+            for i, j in enumerate(at):
+                if r[j] is None:
                     continue
-                x = float(v)
-                self._n[i] += d
+                x = float(r[j])
+                n[i] += d
                 if x != x:
-                    self._nan[i] += d
-                    continue
-                self._s1[i] += x * d
-                self._s2[i] += x * x * d
-            return self._current_meta()
-        self._last_batch_insert_only = len(pdf) == 0 or int(pdf[DIFF].min()) > 0
-        for i, c in enumerate(self.value_cols):
-            # notna: a numpy float column's NaN is NULL, a masked
-            # column's NaN is a value (see _is_null)
-            obs = pdf[pdf[c].notna()]
-            x = obs[c].to_numpy(dtype="float64", na_value=np.nan)
-            d = obs[DIFF].to_numpy(dtype="float64")
-            nan = np.isnan(x)
-            self._n[i] += int(obs[DIFF].sum())
-            self._nan[i] += int(d[nan].sum())
-            x, d = x[~nan], d[~nan]
-            self._s1[i] += float((x * d).sum())
-            self._s2[i] += float((x * x * d).sum())
+                    nan[i] += d
+                elif x == _INF:
+                    pinf[i] += d
+                elif x == -_INF:
+                    ninf[i] += d
+                else:
+                    s1[i] += x * d
+                    s2[i] += x * x * d
+        self._last_batch_insert_only = insert_only
         return self._current_meta()
 
     # -- consolidated snapshot and the pinned output projection ----------------
@@ -306,12 +277,21 @@ class _ScalerEpochs:
         footer Spark samples."""
         return self._encode(df.select(*self._grain, DIFF), meta)
 
-    def _emit_pdf(self, pdf, meta: tuple):
-        """Driver-side twin of _emit. ``take`` copies the projected
-        columns at a fraction of ``pdf[cols].copy()``'s cost on the
-        one-row frames of the per-row-update hot path."""
-        cols = [pdf.columns.get_loc(c) for c in (*self._grain, DIFF)]
-        return self._encode_pdf(pdf.take(cols, axis=1), meta)
+    def _emit_rows(self, rows: list[tuple], schema: pa.Schema, meta: tuple):
+        """Driver-lane twin of _emit for an insert-only epoch: consolidate
+        the rows on the grain and encode each net row into a pa.Table of
+        the pinned projection. The grain groups as Spark's groupBy does:
+        NULLs form one group and NaNs form one group."""
+        at = [schema.get_field_index(c) for c in self._grain]
+        d_at = schema.get_field_index(DIFF)
+        net: dict[tuple, int] = {}
+        for r in rows:
+            g = tuple(_NAN if r[j] != r[j] else r[j] for j in at)
+            net[g] = net.get(g, 0) + r[d_at]
+        k = len(self.key_cols)
+        out = [(*g, d, self._encode_row(g[k:], meta)) for g, d in net.items()]
+        fields = [schema.field(c) for c in (*self._grain, DIFF)]
+        return _table(out, pa.schema([*fields, self._out_field]))
 
     def _epoch_output(
         self,
@@ -356,42 +336,40 @@ class _ScalerEpochs:
         self.output_sink.write_batch(out, epoch_id)
         self.last_meta = meta
 
-    # -- small-epoch fast path --------------------------------------------------
+    # -- driver lane ------------------------------------------------------------
 
-    def _process_small_epoch(self, pdf, epoch_id: int) -> None:
+    def _process_small_epoch(
+        self, rows: list[tuple], schema: pa.Schema, epoch_id: int
+    ) -> None:
         """The reference's per-row-update shape (``src/main.rs:306-374``:
-        single-row epochs at 1.45 ms in-process). A tiny delta needs no
-        distributed jobs: input commit, statistic fold, consolidation,
-        and (when the rounded statistic is unchanged) the output commit
-        all happen driver-side — the exactly-once layout is identical.
-        Only a statistic CHANGE (the DD cascade, O(snapshot) by design)
-        or a retraction-bearing batch (needs key history) goes
-        distributed."""
-        if DIFF not in pdf.columns:
-            pdf[DIFF] = 1
-        pdf[DIFF] = pdf[DIFF].astype("int64")
-        self.input_sink.write_batch_local(pdf, epoch_id)
+        single-row epochs at 1.45 ms in-process). A tiny delta, held as
+        row tuples in ``schema`` order, needs no distributed jobs: input
+        commit, statistic fold, consolidation, and (when the rounded
+        statistic is unchanged) the output commit all happen driver-side
+        — the exactly-once layout is identical. Only a statistic CHANGE
+        (the DD cascade, O(snapshot) by design) or a retraction-bearing
+        batch (needs key history) goes distributed."""
+        diff = pa.field(DIFF, pa.int64())
+        if DIFF in schema.names:
+            schema = schema.set(schema.get_field_index(DIFF), diff)
+        else:
+            schema = schema.append(diff)
+            rows = [(*r, 1) for r in rows]
+        table = _table(rows, schema)
+        self.input_sink.write_batch_local(table, epoch_id)
         self.epochs += 1
-        meta = self._fold_pdf(pdf)
+        meta = self._fold_rows(rows, schema)
         self._folded_epochs.add(epoch_id)
         if meta != self.last_meta:
             out = self._emit(self._consolidated(), meta)
             self.output_sink.write_batch(out, epoch_id)
             self.full_reencodes += 1
         elif self._last_batch_insert_only:
-            if len(pdf) == 1:
-                # a single insert row IS its own net (no group to merge)
-                net = pdf
-            else:
-                # dropna=False: Spark's groupBy keeps null keys; pandas'
-                # default silently drops the whole null-bearing row
-                net = pdf.groupby(
-                    self._grain, as_index=False, sort=False, dropna=False
-                )[DIFF].sum()
-                net = net[net[DIFF] != 0]
-            self.output_sink.write_batch_local(self._emit_pdf(net, meta), epoch_id)
+            self.output_sink.write_batch_local(
+                self._emit_rows(rows, schema, meta), epoch_id
+            )
         else:
-            keys = self.spark.createDataFrame(pdf[self.key_cols].drop_duplicates())
+            keys = self.spark.createDataFrame(table.select(self.key_cols))
             out = self._emit(self._affected(keys), meta)
             self.output_sink.write_batch(out, epoch_id)
         self.last_meta = meta
@@ -414,7 +392,7 @@ class _ScalerEpochs:
             # output rename and the last_meta assignment (e.g. the
             # lineage write threw). Post-fold, last_meta ==
             # _current_meta() invariantly, so restore it — else the
-            # NEXT epoch's fast path could encode new rows with a meta
+            # NEXT epoch's driver lane could encode new rows with a meta
             # older than the committed snapshot.
             self.last_meta = self._current_meta()
         return True
@@ -448,7 +426,7 @@ class _ScalerEpochs:
             .filter(F.col("epoch") != epoch_id)
             .drop("epoch")
         )
-        meta_before = self._meta(*self._sums(history)[1:])
+        meta_before = self._meta(*self._sums(history)[1])
         meta = self._current_meta()
         # the affected-keys re-encode is correct for any batch shape
         out = self._epoch_output(ep, epoch_id, meta, meta_before, insert_only=False)
@@ -464,10 +442,11 @@ class _ScalerEpochs:
         """foreachBatch body."""
         if self._replayed(epoch_id):
             return
-        if self.small_epoch_rows:
-            rows = batch_df.limit(self.small_epoch_rows + 1).collect()
-            if len(rows) <= self.small_epoch_rows:
-                self._process_small_epoch(_rows_to_pdf(rows, batch_df.schema), epoch_id)
+        if SMALL_EPOCH_ROWS:
+            rows = batch_df.limit(SMALL_EPOCH_ROWS + 1).collect()
+            if len(rows) <= SMALL_EPOCH_ROWS:
+                schema = to_arrow_schema(batch_df.schema)
+                self._process_small_epoch(rows, schema, epoch_id)
                 return
         batch_df = with_diff(batch_df).persist()
         try:
@@ -481,18 +460,21 @@ class _ScalerEpochs:
         """Driver-local ingestion for callers that already hold the
         delta in-process as pandas (the reference's per-row shape) —
         skips ``process_epoch``'s size probe (``limit(n).collect()``),
-        whose job launch alone costs ~30 ms on local[32] and dominates
-        the single-row latency. Exactly-once layout, replay, and
-        crash-window repair are identical to ``process_epoch``. The pdf
-        must carry parquet-stable dtypes (what ``_rows_to_pdf`` pins);
-        deltas larger than ``small_epoch_rows`` are routed through the
-        distributed path via ``createDataFrame``."""
+        whose job launch dominates the single-row latency. Exactly-once
+        layout, replay, and crash-window repair are identical to
+        ``process_epoch``. The frame becomes a pa.Table once, here: a
+        NaN in a numpy float column becomes NULL (as pyarrow would
+        persist it), a NaN in a masked ``Float64`` column stays a NaN.
+        Timestamp columns must be tz-aware UTC. Deltas larger than
+        ``SMALL_EPOCH_ROWS`` go through ``process_epoch``."""
         if self._replayed(epoch_id):
             return
-        if self.small_epoch_rows and len(pdf) <= self.small_epoch_rows:
-            self._process_small_epoch(pdf.copy(), epoch_id)
+        table = pa.Table.from_pandas(pdf, preserve_index=False)
+        if not SMALL_EPOCH_ROWS or len(table) > SMALL_EPOCH_ROWS:
+            self.process_epoch(self.spark.createDataFrame(table), epoch_id)
             return
-        self.process_epoch(self.spark.createDataFrame(pdf), epoch_id)
+        rows = list(zip(*(c.to_pylist() for c in table.columns)))
+        self._process_small_epoch(rows, table.schema.remove_metadata(), epoch_id)
 
     def foreach_batch(self):
         return lambda df, eid: self.process_epoch(df, eid)
@@ -512,6 +494,8 @@ class IncrementalScalerPipeline(_ScalerEpochs):
     enables the reference's update suppression.
     """
 
+    _out_field = pa.field("scaled", pa.float64())
+
     def __init__(
         self,
         spark: SparkSession,
@@ -519,52 +503,19 @@ class IncrementalScalerPipeline(_ScalerEpochs):
         key_cols: list[str],
         value_col: str,
         round_to: tuple[int, int] | None = None,
-        small_epoch_rows: int = 64,
     ):
-        super().__init__(
-            spark, workdir, key_cols, [value_col], round_to, small_epoch_rows
-        )
+        super().__init__(spark, workdir, key_cols, [value_col], round_to)
 
     def _encode(self, df: DataFrame, meta: tuple) -> DataFrame:
         ((mean, var),) = meta
         return df.withColumn(
-            "scaled", standard_scale_expr(F.col(self.value_cols[0]), mean, var)
+            self._out_field.name,
+            standard_scale_expr(F.col(self.value_cols[0]), mean, var),
         )
 
-    def _encode_pdf(self, pdf, meta):
-        """Driver-side twin of _encode over a consolidated tiny batch.
-        Nullable Float64 arithmetic: a NULL value must encode to a
-        parquet NULL like the distributed path (plain float64 would
-        write NaN instead), while a COMPUTED NaN (zero-variance IEEE
-        0/0, standard_scale_expr's x == mean case) must stay a NaN
-        VALUE — Float64 arithmetic keeps it (mask stays False) but
-        pd.array construction would collapse it to NULL, hence the
-        FloatingArray in the scalar lane. A NaN INPUT in a masked column
-        (what _rows_to_pdf builds) encodes to NaN, as on the distributed
-        path; _is_null says which cells are NULL."""
-        import numpy as np
-        import pandas as pd
-
+    def _encode_row(self, values: tuple, meta: tuple):
         ((mean, var),) = meta
-        c = self.value_cols[0]
-        if len(pdf) == 1:
-            # scalar lane: one-row Float64 Series construction dominates
-            # the single-row re-encode
-            v = pdf[c].iloc[0]
-            if _is_null(v, pdf, c):
-                pdf["scaled"] = pd.array([None], dtype="Float64")
-            else:
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    rv = float(
-                        (np.float64(v) - np.float64(mean)) / np.float64(var)
-                    )
-                pdf["scaled"] = pd.arrays.FloatingArray(
-                    np.array([rv], dtype="float64"), np.array([False])
-                )
-            return pdf
-        with np.errstate(divide="ignore", invalid="ignore"):
-            pdf["scaled"] = (pdf[c].astype("Float64") - mean) / var
-        return pdf
+        return _scale(values[0], mean, var)
 
 
 class IncrementalMultiScalerPipeline(_ScalerEpochs):
@@ -593,6 +544,8 @@ class IncrementalMultiScalerPipeline(_ScalerEpochs):
     consolidated input prefix.
     """
 
+    _out_field = pa.field("features", pa.list_(pa.float64()))
+
     def _encode(self, df: DataFrame, meta: tuple) -> DataFrame:
         # columnar assembly: one array projection, zero joins
         feats = F.array(
@@ -601,50 +554,8 @@ class IncrementalMultiScalerPipeline(_ScalerEpochs):
                 for c, (m, v) in zip(self.value_cols, meta)
             ]
         )
-        return df.withColumn("features", feats)
+        return df.withColumn(self._out_field.name, feats)
 
-    def _encode_pdf(self, pdf, meta):
-        """Driver-side twin of _encode. A NULL value yields a NULL array
-        element (the distributed F.array does the same); a COMPUTED NaN
-        (IEEE 0/0 at x == mean under zero variance) stays a NaN element
-        (see _feature_series)."""
-        import numpy as np
-        import pandas as pd
-
-        if len(pdf) == 1:
-            # scalar lane (the single-row-update hot path): the k-column
-            # Float64-Series chain below costs ~0.3 ms x k per call —
-            # ~6 ms of the 21-column fold-only lane. numpy scalar
-            # division mirrors the Series semantics on zero variance
-            # (inf / nan, never ZeroDivisionError).
-            row, feats = pdf.iloc[0], []
-            with np.errstate(divide="ignore", invalid="ignore"):
-                for c, (m, v) in zip(self.value_cols, meta):
-                    x = row[c]
-                    if _is_null(x, pdf, c):
-                        feats.append(None)
-                        continue
-                    feats.append(
-                        float((np.float64(x) - np.float64(m)) / np.float64(v))
-                    )
-            pdf["features"] = _feature_series([feats], pdf.index)
-            return pdf
-
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scaled_cols = [
-                (pdf[c].astype("Float64") - m) / v
-                for c, (m, v) in zip(self.value_cols, meta)
-            ]
-        # values + mask extraction: Float64 keeps a computed NaN as a
-        # value (isna False), so NULL elements come from the MASK only —
-        # tolist()+pd.isna would collapse IEEE NaN to NULL
-        vals = [s.to_numpy(dtype="float64", na_value=np.nan) for s in scaled_cols]
-        masks = [s.isna().to_numpy() for s in scaled_cols]
-        pdf["features"] = _feature_series(
-            [
-                [None if mask[i] else float(val[i]) for val, mask in zip(vals, masks)]
-                for i in range(len(pdf))
-            ],
-            pdf.index,
-        )
-        return pdf
+    def _encode_row(self, values: tuple, meta: tuple) -> list:
+        # a NULL value is a NULL element, as in the distributed F.array
+        return [_scale(x, m, v) for x, (m, v) in zip(values, meta)]

@@ -26,10 +26,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -71,19 +74,61 @@ class ExactlyOnceParquetSink:
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
         """foreachBatch body. Safe to call again with the same epoch_id."""
+        # the rename is the commit point, so the staging write leaves no
+        # _SUCCESS marker: an epoch holds only its part files, the same
+        # layout write_batch_local commits
+        self._commit(
+            epoch_id,
+            lambda staging: df.write.mode("overwrite")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .parquet(staging),
+        )
+
+    def write_batch_local(self, table: pa.Table, epoch_id: int) -> None:
+        """Driver-local exactly-once commit for TINY epochs: the same
+        commit protocol, but the one part file is written in-process by
+        pyarrow — zero Spark jobs. This is the single-row-update fast
+        path (the reference's per-row epochs, ``src/main.rs:306-374``):
+        the commit layout and readers are unchanged, so replay
+        idempotence and read_current behave exactly as for Spark-written
+        epochs.
+
+        ``table``'s column order must match the Spark-written epochs (a
+        pandas frame is converted with ``pa.Table.from_pandas(...,
+        preserve_index=False)``). Timestamp columns must be tz-aware UTC:
+        Spark-written epochs store isAdjustedToUTC micros, and a naive
+        column would read back TIMESTAMP_NTZ and break the cross-epoch
+        schema merge.
+        """
+        if not isinstance(table, pa.Table):
+            table = pa.Table.from_pandas(table, preserve_index=False)
+
+        def write(staging: str) -> None:
+            os.makedirs(staging)
+            pq.write_table(
+                table,
+                os.path.join(staging, "part-00000.parquet"),
+                coerce_timestamps="us",
+                allow_truncated_timestamps=True,
+            )
+
+        self._commit(epoch_id, write, local=True)
+
+    def _commit(self, epoch_id: int, write, **record) -> None:
+        """The commit body of both writes: ``write(staging)`` fills a
+        fresh staging directory, the atomic rename to ``epoch=<id>`` is
+        the commit point, and the lineage record (``record`` plus the row
+        count and rows per Spark partition) is read from the committed
+        files' names and parquet footers, so it adds no Spark job."""
         if self.is_committed(epoch_id):
             return  # replay after failure: already committed, drop it
         staging = os.path.join(
             self.root, "_staging", f"epoch={epoch_id}.{uuid.uuid4().hex[:8]}"
         )
-        # the rename below is the commit point, so the staging write
-        # leaves no _SUCCESS marker: an epoch holds only its part files,
-        # the same layout write_batch_local commits
-        df.write.mode("overwrite").option(
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
-        ).parquet(staging)
+        write(staging)
+        committed = self.epoch_dir(epoch_id)
         try:
-            os.rename(staging, self.epoch_dir(epoch_id))  # atomic commit
+            os.rename(staging, committed)  # atomic commit
         except OSError:
             shutil.rmtree(staging, ignore_errors=True)
             if self.is_committed(epoch_id):
@@ -92,59 +137,18 @@ class ExactlyOnceParquetSink:
             # swallowed: the checkpoint would advance past an epoch that
             # was never committed
             raise
-        # lineage from the committed files: each write task names its
-        # files part-<partition id>-..., and each footer holds its rows
-        import pyarrow.parquet as pq
-
-        committed = self.epoch_dir(epoch_id)
+        # each write task names its files part-<partition id>...
         partitions: dict[str, int] = {}
         for name in os.listdir(committed):
             if not name.endswith(".parquet"):
                 continue
             rows = pq.read_metadata(os.path.join(committed, name)).num_rows
             if rows:
-                part = str(int(name.split("-", 2)[1]))
+                part = str(int(re.match(r"part-(\d+)", name).group(1)))
                 partitions[part] = partitions.get(part, 0) + rows
         self._write_lineage(
-            epoch_id, rows=sum(partitions.values()), partitions=partitions
+            epoch_id, rows=sum(partitions.values()), partitions=partitions, **record
         )
-
-    def write_batch_local(self, pdf, epoch_id: int) -> None:
-        """Driver-local exactly-once commit for TINY epochs: identical
-        staging + atomic-rename protocol, but the parquet file is
-        written in-process by pyarrow — zero Spark jobs. This is the
-        single-row-update fast path (the reference's per-row epochs,
-        ``src/main.rs:306-374``): a 1-row delta does not need a
-        distributed write job, and the commit layout/readers are
-        unchanged, so replay idempotence and read_current behave
-        exactly as for Spark-written epochs.
-
-        ``pdf`` is a pandas frame whose column order matches the
-        Spark-written epochs. Timestamp columns must already be
-        tz-aware UTC (Spark-written epochs store isAdjustedToUTC
-        micros; a naive pandas column would read back TIMESTAMP_NTZ
-        and break the cross-epoch schema merge).
-        """
-        if self.is_committed(epoch_id):
-            return
-        staging = os.path.join(
-            self.root, "_staging", f"epoch={epoch_id}.{uuid.uuid4().hex[:8]}"
-        )
-        os.makedirs(staging, exist_ok=True)
-        pdf.to_parquet(
-            os.path.join(staging, "part-00000.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-        try:
-            os.rename(staging, self.epoch_dir(epoch_id))  # atomic commit
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-            if self.is_committed(epoch_id):
-                return  # see write_batch: only a won race may be dropped
-            raise
-        self._write_lineage(epoch_id, rows=int(len(pdf)), local=True)
 
     def _write_lineage(self, epoch_id: int, **record) -> None:
         lineage = {"epoch": epoch_id, "committed_at": time.time(), **record}

@@ -543,3 +543,41 @@ def test_embedding_dim_stats_closed_form(spark):
         0: (2, 2.0, 1.0, 1.0, 3.0),
         1: (2, 4.0, 2.0, 2.0, 6.0),
     }
+
+
+def test_nearest_assign_centroid_literals_do_not_grow_with_dim(spark, monkeypatch):
+    """Each F.lit is a py4j round-trip: building the C x dim centroid
+    matrix element by element made plan build grow with dim. The matrix
+    and the norms are one parsed literal each, so the F.lit count of an
+    8-centroid plan is the same at dim 8 and dim 64, and the assignment
+    is unchanged."""
+    from diffdataflowmlpipelines_spark.functions import similarity
+
+    real_lit = F.lit
+
+    def build(dim):
+        rows = [
+            (i, [float((i * 7 + j * 3) % 11 + (j == i % dim)) for j in range(dim)])
+            for i in range(24)
+        ]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        calls = []
+
+        def lit(x):
+            calls.append(x)
+            return real_lit(x)
+
+        monkeypatch.setattr(similarity.F, "lit", lit)
+        try:
+            out = similarity._nearest_assign(
+                df, "vec_id", "embedding", n_centroids=8, centroids=None,
+                round_to=9, what="test",
+            )
+        finally:
+            monkeypatch.setattr(similarity.F, "lit", real_lit)
+        got = {r["__id"]: r["cluster_id"] for r in out.collect()}
+        # every row is assigned, and each of the 8 centroids to itself
+        assert len(got) == 24 and all(got[i] == i for i in range(8))
+        return len(calls)
+
+    assert build(8) == build(64)

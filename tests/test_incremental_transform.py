@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from diffdataflowmlpipelines_spark.operators.encoders import StandardScaler
+from diffdataflowmlpipelines_spark.streaming import incremental_transform
 from diffdataflowmlpipelines_spark.streaming.incremental_transform import (
     IncrementalScalerPipeline,
 )
@@ -280,7 +281,7 @@ def test_crash_between_input_and_output_commit_repaired(spark, tmp_path):
         assert got[k] == pytest.approx(want[k], rel=1e-9), k
 
 
-def test_same_process_replay_before_fold(spark, tmp_path):
+def test_same_process_replay_before_fold(spark, tmp_path, monkeypatch):
     """Crash AFTER the input commit but BEFORE the statistic fold, then
     a replay on the SAME object (long-lived session — no restart, so
     _restore_from_sink never re-runs). The replay must fold the
@@ -293,9 +294,10 @@ def test_same_process_replay_before_fold(spark, tmp_path):
         ep(1, [(10, 55.0)]),
         ep(2, [(11, 7.0)]),
     ]
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "pipe"), ["row_id"], "x",
-        round_to=None, small_epoch_rows=0,
+        round_to=None,
     )
     pipe.process_epoch(spark.createDataFrame(epochs[0], SCHEMA), 0)
     # simulate the crash window: input epoch 1 commits, fold never runs
@@ -395,10 +397,13 @@ def test_process_epoch_local_parity_and_replay(spark, tmp_path):
     assert (pb._n[0], pb._s1[0], pb._s2[0]) == stat
 
 
-def test_process_epoch_local_routes_large_delta_distributed(spark, tmp_path):
+def test_process_epoch_local_routes_large_delta_distributed(
+    spark, tmp_path, monkeypatch
+):
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 8)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "p"), ["row_id"], "x",
-        round_to=(-2, 0), small_epoch_rows=8,
+        round_to=(-2, 0),
     )
     big = ep(0, [(i, 100 + i) for i in range(50)])
     big["event_time"] = pd.to_datetime(big["event_time"]).dt.tz_localize("UTC")
@@ -428,14 +433,14 @@ def test_output_epochs_have_pinned_schema(spark, tmp_path):
         assert got == want, (e, got)
 
 
-def test_replay_restores_stale_last_meta(spark, tmp_path):
+def test_replay_restores_stale_last_meta(spark, tmp_path, monkeypatch):
     """Review r4d: a crash between the output rename and the last_meta
     assignment left last_meta stale on a both-committed replay; the
     replay path now restores it from the statistic (post-fold,
     last_meta == _current_meta() invariantly)."""
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "p"), ["row_id"], "x", round_to=(-2, 0),
-        small_epoch_rows=0,
     )
     e0 = ep(0, [(i, 100 + i) for i in range(40)])
     pipe.process_epoch(spark.createDataFrame(e0, SCHEMA), 0)
@@ -446,7 +451,7 @@ def test_replay_restores_stale_last_meta(spark, tmp_path):
     assert pipe.last_meta == good
 
 
-def test_nan_is_an_observation_on_both_folds(spark, tmp_path):
+def test_nan_is_an_observation_on_both_folds(spark, tmp_path, monkeypatch):
     """A NaN value is an observation that makes the statistic NaN, on
     the distributed fold and on the driver-side fold alike, as in the
     batch StandardScaler. Retracting it restores the finite statistic
@@ -465,9 +470,10 @@ def test_nan_is_an_observation_on_both_folds(spark, tmp_path):
     want_finite = StandardScaler(round_to=(-1, -1)).fit(finite, "x")
     retract = spark.createDataFrame([(*nan_row[:3], -1)], SCHEMA)
     for small in (0, 200):
+        monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", small)
         pipe = IncrementalScalerPipeline(
             spark, str(tmp_path / f"p{small}"), ["row_id"], "x",
-            round_to=(-1, -1), small_epoch_rows=small,
+            round_to=(-1, -1),
         )
         pipe.process_epoch(df, 0)
         assert pipe._n == [100], small
@@ -480,3 +486,88 @@ def test_nan_is_an_observation_on_both_folds(spark, tmp_path):
         ), small
         out = pipe.current_output().collect()
         assert len(out) == 99 and not any(math.isnan(r["scaled"]) for r in out)
+
+
+def test_infinity_is_an_observation_on_both_lanes(spark, tmp_path, monkeypatch):
+    """An infinite value is an observation as in the batch StandardScaler:
+    +inf makes the mean +inf and the variance inf - inf = NaN, which a
+    rounded scaler returns unrounded instead of raising. Retracting the
+    inf row restores the finite statistic of the rows without it."""
+    import math
+
+    rows = [
+        (i, float("inf") if i == 7 else float(i), T0 + timedelta(seconds=i), 1)
+        for i in range(20)
+    ]
+    inf_row = rows[7]
+    df = spark.createDataFrame(rows, SCHEMA)
+    want = StandardScaler(round_to=(-1, -1)).fit(df, "x")
+    assert want.mean_ == float("inf") and math.isnan(want.var_)
+    finite = spark.createDataFrame([r for r in rows if r is not inf_row], SCHEMA)
+    want_finite = StandardScaler(round_to=(-1, -1)).fit(finite, "x")
+    retract = spark.createDataFrame([(*inf_row[:3], -1)], SCHEMA)
+    for small in (0, 64):
+        monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", small)
+        pipe = IncrementalScalerPipeline(
+            spark, str(tmp_path / f"p{small}"), ["row_id"], "x", round_to=(-1, -1)
+        )
+        pipe.process_epoch(df, 0)
+        assert pipe._n == [20], small
+        ((mean, var),) = pipe.last_meta
+        assert mean == want.mean_ and math.isnan(var), small
+        pipe.process_epoch(retract, 1)
+        assert pipe._n == [19], small
+        assert pipe.last_meta[0] == pytest.approx(
+            (want_finite.mean_, want_finite.var_)
+        ), small
+        out = pipe.current_output().collect()
+        assert len(out) == 19 and all(math.isfinite(r["scaled"]) for r in out)
+
+
+def test_driver_lane_commits_what_the_distributed_lane_commits(
+    spark, tmp_path, monkeypatch
+):
+    """One <=64-row insert epoch with a NULL key, a NULL value, a NaN
+    value and two NaN-valued rows of one key, after an epoch whose NaN
+    already makes the statistic NaN (so the epoch keeps the meta and
+    its output is encoded on the lane under test). The driver lane
+    commits the same input and output rows, NULL and NaN included, with
+    the same Spark-read schemas, as the distributed lane."""
+    import math
+
+    schema = "row_id long, x double"
+    nan = float("nan")
+    epochs = [
+        [(1, 1.0), (2, 2.0), (3, nan)],
+        [(None, 5.0), (10, None), (11, nan), (12, nan), (12, nan), (13, 4.0)],
+    ]
+
+    def cell(v):
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+    def committed(sink):
+        df = spark.read.parquet(sink.epoch_dir(1))
+        rows = sorted(
+            (tuple(cell(v) for v in r) for r in df.collect()),
+            key=lambda r: tuple((v is None, str(v)) for v in r),
+        )
+        return df.schema, rows
+
+    got = {}
+    for small in (0, 64):
+        monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", small)
+        pipe = IncrementalScalerPipeline(
+            spark, str(tmp_path / f"p{small}"), ["row_id"], "x"
+        )
+        for i, rows in enumerate(epochs):
+            pipe.process_epoch(spark.createDataFrame(rows, schema), i)
+        assert pipe.full_reencodes == 1, small  # epoch 1 kept the meta
+        got[small] = (committed(pipe.input_sink), committed(pipe.output_sink))
+    lin = IncrementalScalerPipeline(spark, str(tmp_path / "p64"), ["row_id"], "x")
+    assert lin.output_sink.lineage()[1].get("local")
+    assert got[64] == got[0]
+    (_, inputs), (_, outputs) = got[64]
+    assert len(inputs) == 6
+    # the two (12, NaN) rows consolidate into one net row
+    assert (12, "NaN", 2, "NaN") in outputs and len(outputs) == 5
+    assert (None, 5.0, 1, "NaN") in outputs and (10, None, 1, None) in outputs

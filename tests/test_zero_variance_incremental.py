@@ -21,6 +21,7 @@ import pandas as pd
 import pytest
 
 from diffdataflowmlpipelines_spark.operators.encoders import StandardScaler
+from diffdataflowmlpipelines_spark.streaming import incremental_transform
 from diffdataflowmlpipelines_spark.streaming.incremental_transform import (
     IncrementalMultiScalerPipeline,
     IncrementalScalerPipeline,
@@ -39,12 +40,13 @@ def _same(a, b):
     return a == b
 
 
-def test_constant_column_distributed_cascade(spark, tmp_path):
-    # small_epoch_rows=0 forces every lane distributed: epoch 0 fits a
+def test_constant_column_distributed_cascade(spark, tmp_path, monkeypatch):
+    # SMALL_EPOCH_ROWS=0 forces every lane distributed: epoch 0 fits a
     # constant column (var == 0.0 exactly) and the meta-changed cascade
     # encodes through F.lit(0.0) — the shape that threw DIVIDE_BY_ZERO
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalScalerPipeline(
-        spark, str(tmp_path / "p"), ["id"], "x", small_epoch_rows=0
+        spark, str(tmp_path / "p"), ["id"], "x"
     )
     df = spark.createDataFrame([(0, 5.0), (1, 5.0)], "id bigint, x double")
     pipe.process_epoch(df, 0)
@@ -59,17 +61,19 @@ def test_constant_column_distributed_cascade(spark, tmp_path):
     assert out[2] == pytest.approx((8.0 - 6.0) / 2.0)
 
 
-def test_rounded_variance_collapses_to_zero_matches_batch(spark, tmp_path):
+def test_rounded_variance_collapses_to_zero_matches_batch(
+    spark, tmp_path, monkeypatch
+):
     # round_to=(-2,-1) rounds var to the nearest 0.1: a genuinely small
     # variance rounds to 0.0 on DISTINCT values -> +/-inf, NaN at the mean
     rows = [(i, 10.0 + (0.1 if i == 0 else 0.0)) for i in range(100)]
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalScalerPipeline(
         spark,
         str(tmp_path / "p"),
         ["id"],
         "x",
         round_to=(-2, -1),
-        small_epoch_rows=0,
     )
     df = spark.createDataFrame(rows, "id bigint, x double")
     pipe.process_epoch(df, 0)
@@ -87,13 +91,14 @@ def test_rounded_variance_collapses_to_zero_matches_batch(spark, tmp_path):
     assert math.isnan(got[1])  # 10.0 == rounded mean
 
 
-def test_small_epoch_scalar_lane_keeps_nan_value(spark, tmp_path):
+def test_small_epoch_scalar_lane_keeps_nan_value(spark, tmp_path, monkeypatch):
     # driver-local lanes: first single-row epoch cascades distributed
     # (meta changed), second identical row takes the insert-only SCALAR
     # lane — its FloatingArray construction must keep the IEEE NaN as a
     # VALUE (pd.array would silently collapse it to parquet NULL)
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 64)
     pipe = IncrementalScalerPipeline(
-        spark, str(tmp_path / "p"), ["id"], "x", small_epoch_rows=64
+        spark, str(tmp_path / "p"), ["id"], "x"
     )
     pipe.process_epoch_local(
         pd.DataFrame({"id": pd.array([0], dtype="Int64"), "x": [5.0]}), 0
@@ -113,11 +118,12 @@ def test_small_epoch_scalar_lane_keeps_nan_value(spark, tmp_path):
     assert rows[2]["scaled"] is None
 
 
-def test_small_epoch_series_lane_zero_variance(spark, tmp_path):
+def test_small_epoch_series_lane_zero_variance(spark, tmp_path, monkeypatch):
     # multi-row driver-local epoch (insert-only Series lane) under an
     # unchanged zero-variance meta: inf above the mean, NaN at it
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 64)
     pipe = IncrementalScalerPipeline(
-        spark, str(tmp_path / "p"), ["id"], "x", small_epoch_rows=64
+        spark, str(tmp_path / "p"), ["id"], "x"
     )
     pipe.process_epoch_local(
         pd.DataFrame({"id": pd.array([0, 1], dtype="Int64"), "x": [5.0, 5.0]}), 0
@@ -134,10 +140,11 @@ def test_small_epoch_series_lane_zero_variance(spark, tmp_path):
     assert out[3] is None
 
 
-def test_multi_pipeline_constant_column(spark, tmp_path):
+def test_multi_pipeline_constant_column(spark, tmp_path, monkeypatch):
     # one constant column + one varying column through the F.array encode
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalMultiScalerPipeline(
-        spark, str(tmp_path / "p"), ["id"], ["a", "b"], small_epoch_rows=0
+        spark, str(tmp_path / "p"), ["id"], ["a", "b"]
     )
     df = spark.createDataFrame(
         [(0, 7.0, 1.0), (1, 7.0, 3.0)], "id bigint, a double, b double"
@@ -149,9 +156,10 @@ def test_multi_pipeline_constant_column(spark, tmp_path):
     assert out[1][1] == pytest.approx((3.0 - 2.0) / 1.0)
 
 
-def test_multi_pipeline_scalar_and_series_lanes(spark, tmp_path):
+def test_multi_pipeline_scalar_and_series_lanes(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 64)
     pipe = IncrementalMultiScalerPipeline(
-        spark, str(tmp_path / "p"), ["id"], ["a", "b"], small_epoch_rows=64
+        spark, str(tmp_path / "p"), ["id"], ["a", "b"]
     )
     pipe.process_epoch_local(
         pd.DataFrame(

@@ -44,6 +44,7 @@ DICT_BASES = [
 def bench_scaler(spark) -> dict:
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from diffdataflowmlpipelines_spark.streaming.incremental_transform import (
         IncrementalScalerPipeline,
@@ -152,20 +153,15 @@ def bench_scaler(spark) -> dict:
         # without durability. The gap between this lane and the local
         # entry above IS the price of the two exactly-once parquet
         # commits per update.
+        fold_schema = pa.schema(
+            [("row_id", pa.int64()), ("x", pa.float64()), ("diff", pa.int64())]
+        )
         fold_ms = []
         for k in range(N_UPDATES):
-            pdf = pd.DataFrame(
-                {
-                    "row_id": np.array(
-                        [INIT_ROWS + 20_000 + k], dtype="int64"
-                    ),
-                    "x": rng.normal(100.0, 25.0, size=1),
-                    "diff": np.ones(1, dtype="int64"),
-                }
-            )
+            rows = [(INIT_ROWS + 20_000 + k, float(rng.normal(100.0, 25.0)), 1)]
             t0 = time.time()
-            meta = pipe._fold_pdf(pdf)
-            pipe._emit_pdf(pdf, meta)
+            meta = pipe._fold_rows(rows, fold_schema)
+            pipe._emit_rows(rows, fold_schema, meta)
             fold_ms.append((time.time() - t0) * 1000)
 
         return {
@@ -208,6 +204,7 @@ def bench_multi(spark) -> dict:
     per epoch for ALL columns, zero-join columnar assembly."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from diffdataflowmlpipelines_spark.streaming.incremental_transform import (
         IncrementalMultiScalerPipeline,
@@ -258,20 +255,18 @@ def bench_multi(spark) -> dict:
         # fold-only lane (run LAST; no sink commit follows): all 21
         # statistic folds + the net-row re-encode with no durability —
         # the reference's Fig.3 per-row condition
+        fold_schema = pa.schema(
+            [("row_id", pa.int64())]
+            + [(c, pa.float64()) for c in cols]
+            + [("diff", pa.int64())]
+        )
         fold_ms = []
         for k in range(N_UPDATES):
-            data = {
-                "row_id": np.array(
-                    [MULTI_INIT_ROWS + 20_000 + k], dtype="int64"
-                )
-            }
-            for j, c in enumerate(cols):
-                data[c] = rng.normal(float(j), 0.5, size=1)
-            data["diff"] = np.ones(1, dtype="int64")
-            pdf = pd.DataFrame(data)
+            values = [float(rng.normal(float(j), 0.5)) for j in range(len(cols))]
+            rows = [(MULTI_INIT_ROWS + 20_000 + k, *values, 1)]
             t0 = time.time()
-            meta = pipe._fold_pdf(pdf)
-            pipe._emit_pdf(pdf, meta)
+            meta = pipe._fold_rows(rows, fold_schema)
+            pipe._emit_rows(rows, fold_schema, meta)
             fold_ms.append((time.time() - t0) * 1000)
 
         return {
