@@ -22,10 +22,11 @@ Spark re-expression (driven per micro-batch from ``foreachBatch``):
 
 Epochs of at most ``SMALL_EPOCH_ROWS`` rows take the driver lane
 instead: the ``limit(n + 1).collect()`` size probe is the epoch's only
-Spark job unless the statistic moves or the epoch retracts. The lane
-works on the collected rows as Spark holds them (None is NULL, a float
-NaN is NaN): one per-row fold of the statistic, one per-row encode, and
-pyarrow tables for both sink commits.
+Spark job unless the statistic moves. The lane works on the collected
+rows as Spark holds them (None is NULL, a float NaN is NaN): one
+per-row fold of the statistic, one per-row encode, and pyarrow tables
+for both sink commits. A retraction reads the touched keys' input
+history with one pyarrow scan (``read_keys_local``), not a Spark job.
 
 Every output epoch carries exactly (*key_cols, *value_cols, diff) plus
 the encoder's column, whichever lane wrote it.
@@ -54,9 +55,9 @@ from diffdataflowmlpipelines_spark.operators.encoders import standard_scale_expr
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 from diffdataflowmlpipelines_spark.streaming.stats import _round_to
 
-# epochs at or under this row count take the driver lane: ONE Spark job
-# (the collect probe) plus pyarrow commits, instead of 3-4 distributed
-# jobs. 0 sends every epoch distributed.
+# epochs at or under this row count take the driver lane: at most ONE
+# Spark job (the collect probe) plus pyarrow reads and commits, instead
+# of 3-4 distributed jobs. 0 sends every epoch distributed.
 SMALL_EPOCH_ROWS = 64
 
 _NAN, _INF = float("nan"), float("inf")
@@ -75,6 +76,11 @@ def _table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
     return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
     )
+
+
+def _rows(table: pa.Table) -> list[tuple]:
+    """The rows of ``table`` as tuples in its column order."""
+    return list(zip(*(c.to_pylist() for c in table.columns)))
 
 
 def _scale(x, mean: float, var: float):
@@ -264,7 +270,9 @@ class _ScalerEpochs:
         return df.groupBy(*self._grain).agg(F.sum(DIFF).alias(DIFF))
 
     def _affected(self, keys: DataFrame) -> DataFrame:
-        """The consolidated history of ``keys`` only. O(snapshot)."""
+        """The consolidated history of ``keys`` only. O(snapshot). The
+        distributed lane and the output repair read it; the driver lane
+        reads the same history with ``read_keys_local``."""
         return self._consolidated().join(keys, on=self.key_cols, how="left_semi")
 
     def _emit(self, df: DataFrame, meta: tuple) -> DataFrame:
@@ -278,10 +286,12 @@ class _ScalerEpochs:
         return self._encode(df.select(*self._grain, DIFF), meta)
 
     def _emit_rows(self, rows: list[tuple], schema: pa.Schema, meta: tuple):
-        """Driver-lane twin of _emit for an insert-only epoch: consolidate
-        the rows on the grain and encode each net row into a pa.Table of
-        the pinned projection. The grain groups as Spark's groupBy does:
-        NULLs form one group and NaNs form one group."""
+        """Driver-lane twin of _emit: consolidate the rows (an
+        insert-only epoch's own rows, or a retraction's touched-key
+        history) on the grain and encode each net row, net-zero
+        tombstones included, into a pa.Table of the pinned projection.
+        The grain groups as Spark's groupBy does: NULLs form one group
+        and NaNs form one group."""
         at = [schema.get_field_index(c) for c in self._grain]
         d_at = schema.get_field_index(DIFF)
         net: dict[tuple, int] = {}
@@ -344,11 +354,11 @@ class _ScalerEpochs:
         """The reference's per-row-update shape (``src/main.rs:306-374``:
         single-row epochs at 1.45 ms in-process). A tiny delta, held as
         row tuples in ``schema`` order, needs no distributed jobs: input
-        commit, statistic fold, consolidation, and (when the rounded
-        statistic is unchanged) the output commit all happen driver-side
-        — the exactly-once layout is identical. Only a statistic CHANGE
-        (the DD cascade, O(snapshot) by design) or a retraction-bearing
-        batch (needs key history) goes distributed."""
+        commit, statistic fold, the touched keys' history (for a
+        retraction), consolidation, and (when the rounded statistic is
+        unchanged) the output commit all happen driver-side — the
+        exactly-once layout is identical. Only a statistic CHANGE (the
+        DD cascade, O(snapshot) by design) goes distributed."""
         diff = pa.field(DIFF, pa.int64())
         if DIFF in schema.names:
             schema = schema.set(schema.get_field_index(DIFF), diff)
@@ -364,14 +374,18 @@ class _ScalerEpochs:
             out = self._emit(self._consolidated(), meta)
             self.output_sink.write_batch(out, epoch_id)
             self.full_reencodes += 1
-        elif self._last_batch_insert_only:
+        else:
+            if not self._last_batch_insert_only:
+                # the touched keys' net state needs their history: read
+                # it from the committed input epochs, this one included
+                hist = self.input_sink.read_keys_local(
+                    table.select(self.key_cols),
+                    pa.schema([schema.field(c) for c in (*self._grain, DIFF)]),
+                )
+                rows, schema = _rows(hist), hist.schema
             self.output_sink.write_batch_local(
                 self._emit_rows(rows, schema, meta), epoch_id
             )
-        else:
-            keys = self.spark.createDataFrame(table.select(self.key_cols))
-            out = self._emit(self._affected(keys), meta)
-            self.output_sink.write_batch(out, epoch_id)
         self.last_meta = meta
 
     # -- replay -----------------------------------------------------------------
@@ -473,8 +487,8 @@ class _ScalerEpochs:
         if not SMALL_EPOCH_ROWS or len(table) > SMALL_EPOCH_ROWS:
             self.process_epoch(self.spark.createDataFrame(table), epoch_id)
             return
-        rows = list(zip(*(c.to_pylist() for c in table.columns)))
-        self._process_small_epoch(rows, table.schema.remove_metadata(), epoch_id)
+        schema = table.schema.remove_metadata()
+        self._process_small_epoch(_rows(table), schema, epoch_id)
 
     def foreach_batch(self):
         return lambda df, eid: self.process_epoch(df, eid)

@@ -24,7 +24,9 @@ HIGHEST committed epoch wins (later epochs supersede earlier ones);
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import re
 import shutil
@@ -32,9 +34,21 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# the one NaN object every NaN key value maps to: a tuple compares its
+# elements by identity first, so two NaN keys compare (and hash) equal
+_NAN = float("nan")
+
+
+def _key_tuples(table: pa.Table, cols: list[str]):
+    """The (NaN-normalized) key tuple of each row of ``table``."""
+    for t in zip(*(table[c].to_pylist() for c in cols)):
+        yield tuple(_NAN if v != v else v for v in t)
 
 
 class ExactlyOnceParquetSink:
@@ -292,6 +306,53 @@ class ExactlyOnceParquetSink:
             spark.read.option("basePath", self.root)
             .parquet(*[self.epoch_dir(e) for e in epochs])
         )
+
+    def read_keys_local(self, keys: pa.Table, schema: pa.Schema) -> pa.Table:
+        """Driver-local keyed read, zero Spark jobs: every committed row
+        whose ``key_cols`` tuple is a row of ``keys``, projected and cast
+        to ``schema``. It matches as Spark's left-semi equi-join on
+        ``key_cols`` does: a key with a NULL never matches, a NaN key
+        matches NaN and -0.0 matches 0.0.
+
+        One pyarrow scan of the live epochs' part files pushes an
+        ``isin`` per non-float key column down to the files. A float
+        key column is matched in memory: pruning by parquet's min/max
+        statistics, which leave NaN out, drops matching NaN and 0.0
+        rows. More than one key column is then narrowed from the
+        per-column cross product to the exact key tuples."""
+        self._recover_compaction()
+        files = [
+            os.path.join(self.epoch_dir(e), name)
+            for e in self._live_epoch_dirs()
+            for name in sorted(os.listdir(self.epoch_dir(e)))
+            if name.startswith("part-") and name.endswith(".parquet")
+        ]
+        keys = keys.select(self.key_cols).drop_null()
+        if not files or not len(keys):
+            return schema.empty_table()
+        floats = [c for c in self.key_cols if pa.types.is_floating(keys[c].type)]
+        pushed = [
+            pc.field(c).isin(pc.unique(keys[c]))
+            for c in self.key_cols
+            if c not in floats
+        ]
+        table = ds.dataset(files, schema=schema, format="parquet").to_table(
+            filter=functools.reduce(operator.and_, pushed) if pushed else None
+        )
+        for c in floats:
+            # + 0.0 turns -0.0 into 0.0; is_in matches NaN with NaN
+            table = table.filter(
+                pc.is_in(pc.add(table[c], 0.0), value_set=pc.add(keys[c], 0.0))
+            )
+        if len(self.key_cols) > 1:
+            want = set(_key_tuples(keys, self.key_cols))
+            table = table.filter(
+                pa.array(
+                    [t in want for t in _key_tuples(table, self.key_cols)],
+                    pa.bool_(),
+                )
+            )
+        return table
 
     def read_current(self, spark: SparkSession) -> DataFrame:
         """Latest value per key across committed epochs (upsert view).

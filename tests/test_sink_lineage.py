@@ -4,44 +4,20 @@ lineage from the committed files' parquet footers."""
 
 from __future__ import annotations
 
-import time
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 
 
-@contextmanager
-def _job_group(sc, group: str):
-    """Runs the block in job group ``group``; yields a function that
-    lists the Spark job ids the status store has seen in that group."""
-    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-    saved = {k: sc.getLocalProperty(k) for k in props}
-    sc.setJobGroup(group, group)
-    try:
-        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        for k, v in saved.items():
-            sc.setLocalProperty(k, v)
-
-
-def test_write_batch_one_job_and_footer_lineage(spark, tmp_path):
-    sc = spark.sparkContext
+def test_write_batch_one_job_and_footer_lineage(spark, tmp_path, job_group):
     # four range partitions; the filter leaves the last one empty
     df = spark.range(0, 1000, 1, 4).filter(F.col("id") < 600)
     sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["id"])
-    with _job_group(sc, "sink-write") as write_jobs:
+    with job_group("sink-write") as write_jobs:
         sink.write_batch(df, 0)
-    with _job_group(sc, "sink-ref") as ref_jobs:
-        rows = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
-    # the status store sees job events in order: once the reference
-    # job has arrived, every job of the write has too
-    deadline = time.time() + 30
-    while not ref_jobs() and time.time() < deadline:
-        time.sleep(0.1)
-    assert ref_jobs()
     assert len(write_jobs()) == 1
+
+    rows = df.groupBy(F.spark_partition_id().alias("p")).count().collect()
 
     (rec,) = sink.lineage()
     want = {str(r["p"]): r["count"] for r in rows}

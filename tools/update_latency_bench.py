@@ -3,7 +3,8 @@ published micro-benchmarks:
 
 - ``scaler``: StandardScaler init/update (BASELINE.md rows: init 10.28s
   @ 1e6 rows, single-row update 1.45ms, 1e5-row update 1.0s; reference
-  ``python/standard_scale_bench.py``, ``src/main.rs:306-374``).
+  ``python/standard_scale_bench.py``, ``src/main.rs:306-374``): single-row
+  inserts, single-row retractions of base rows, and a bulk update.
 - ``multi``: the headline diabetes experiment — 21 StandardScalers with
   rounding maintained per-row-update with columnar assembly
   (``src/pipelines/pipeline_3_diabetes.rs:12-60``, paper Figure 3; init
@@ -56,18 +57,23 @@ def bench_scaler(spark) -> dict:
     )
     rng = np.random.default_rng(42)
 
-    def mkdf(start, n):
-        pdf = pd.DataFrame(
+    def mkpdf(start, n):
+        return pd.DataFrame(
             {
                 "row_id": np.arange(start, start + n, dtype="int64"),
                 "x": rng.normal(100.0, 25.0, size=n),
                 "diff": np.ones(n, dtype="int64"),
             }
         )
-        return spark.createDataFrame(pdf, "row_id long, x double, diff long")
+
+    def mkdf(start, n):
+        return spark.createDataFrame(
+            mkpdf(start, n), "row_id long, x double, diff long"
+        )
 
     try:
-        init_df = mkdf(0, INIT_ROWS)
+        init_pdf = mkpdf(0, INIT_ROWS)
+        init_df = spark.createDataFrame(init_pdf, "row_id long, x double, diff long")
         t0 = time.time()
         pipe.process_epoch(init_df, 0)
         init_sec = time.time() - t0
@@ -96,9 +102,22 @@ def bench_scaler(spark) -> dict:
             pipe.process_epoch_local(pdf, N_UPDATES + 1 + k)
             local_ms.append((time.time() - t0) * 1000)
 
+        # single-row retractions of base rows through the same entry:
+        # the touched key's history is read from the input sink with
+        # pyarrow; a retraction that moves the rounded statistic
+        # cascades instead (counted apart)
+        retract_ms = []
+        reencodes0 = pipe.full_reencodes
+        for k in range(N_UPDATES):
+            pdf = init_pdf.iloc[[k]].assign(diff=-1)
+            t0 = time.time()
+            pipe.process_epoch_local(pdf, 2 * N_UPDATES + 1 + k)
+            retract_ms.append((time.time() - t0) * 1000)
+        retract_reencodes = pipe.full_reencodes - reencodes0
+
         bulk_df = mkdf(INIT_ROWS + N_UPDATES, BULK_ROWS)
         t0 = time.time()
-        pipe.process_epoch(bulk_df, 2 * N_UPDATES + 1)
+        pipe.process_epoch(bulk_df, 3 * N_UPDATES + 1)
         bulk_sec = time.time() - t0
 
         # bulk fold-only lane (non-committing; only the other
@@ -174,6 +193,11 @@ def bench_scaler(spark) -> dict:
                 statistics.median(local_ms), 1
             ),
             "single_row_update_local_ms_min": round(min(local_ms), 1),
+            "single_row_retract_local_ms_median": round(
+                statistics.median(retract_ms), 1
+            ),
+            "single_row_retract_local_ms_min": round(min(retract_ms), 1),
+            "single_row_retract_full_reencodes": retract_reencodes,
             "single_row_fold_only_ms_median": round(
                 statistics.median(fold_ms), 2
             ),
