@@ -1,7 +1,7 @@
 """Pure-Python XXH64 matching Spark's ``F.xxhash64`` (seed 42) on
-string columns — lets driver-local fast paths compute the SAME shard
-routing as the distributed keyed projections without launching a Spark
-job per tiny epoch (DriverVocabularyPipeline.process_epoch_local).
+string columns — ``DriverVocabularyPipeline`` routes every epoch's
+collected rows with it, to the shards ``incremental_vocabulary``'s
+``pmod(xxhash64(cast(token as string)))`` computes in Spark.
 
 Spark's XxHash64 expression is the standard XXH64 algorithm over the
 UTF-8 bytes of the string (catalyst XXH64, little-endian strides of

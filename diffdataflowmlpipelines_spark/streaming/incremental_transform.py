@@ -52,7 +52,7 @@ from diffdataflowmlpipelines_spark.operators.collection import (
     with_diff,
 )
 from diffdataflowmlpipelines_spark.operators.encoders import standard_scale_expr
-from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
+from diffdataflowmlpipelines_spark.streaming.sink import _DriverEpochs, _rows, _table
 from diffdataflowmlpipelines_spark.streaming.stats import _round_to
 
 # epochs at or under this row count take the driver lane: at most ONE
@@ -67,22 +67,6 @@ _NAN, _INF = float("nan"), float("inf")
 _NAN_META = (_NAN, _NAN)
 
 
-def _table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
-    """Row tuples in ``schema`` order -> a pa.Table of that schema. None
-    is NULL and a float NaN stays a NaN value. A naive datetime in a UTC
-    timestamp field is read as UTC: ``collect()`` renders timestamps in
-    the driver process's local zone, which this lane assumes is UTC."""
-    cols = list(zip(*rows)) if rows else [()] * len(schema)
-    return pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
-    )
-
-
-def _rows(table: pa.Table) -> list[tuple]:
-    """The rows of ``table`` as tuples in its column order."""
-    return list(zip(*(c.to_pylist() for c in table.columns)))
-
-
 def _scale(x, mean: float, var: float):
     """``standard_scale_expr`` for one value: (x - mean) / var, with the
     IEEE results of a zero variance that Python's float division raises
@@ -95,10 +79,12 @@ def _scale(x, mean: float, var: float):
     return _NAN if d != d or d == 0.0 else math.copysign(_INF, d)
 
 
-class _ScalerEpochs:
+class _ScalerEpochs(_DriverEpochs):
     """The exactly-once epoch protocol of the incremental scalers: one
     (mean, var) statistic per column of ``value_cols``, rounded by
-    ``round_to`` (the reference's update suppression).
+    ``round_to`` (the reference's update suppression). The output sink
+    is keyed by the grain (*key_cols, *value_cols), so a key holding
+    several live values keeps one output row per value.
 
     Subclasses supply only the encoder: ``_encode`` (distributed) adds
     the column ``_out_field`` names to a frame projected to
@@ -115,18 +101,15 @@ class _ScalerEpochs:
         value_cols: list[str],
         round_to: tuple[int, int] | None = None,
     ):
-        self.spark = spark
         self.key_cols = list(key_cols)
         self.value_cols = list(value_cols)
         # the consolidation grain, and (with diff) the pinned output
         # projection every lane encodes
         self._grain = [*self.key_cols, *self.value_cols]
+        super().__init__(spark, workdir, self.key_cols, self._grain)
         self.round_to = round_to
-        self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", key_cols)
-        self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", key_cols)
         self.last_meta: tuple | None = None
         self.full_reencodes = 0
-        self.epochs = 0
         # running abelian statistic per column: n, the NaN, +inf and
         # -inf counts, and the sum and sum of squares of the finite
         # values — DD's incremental aggregate: each epoch folds in the
@@ -135,11 +118,6 @@ class _ScalerEpochs:
         k = len(self.value_cols)
         self._n, self._nan, self._pinf, self._ninf = ([0] * k for _ in range(4))
         self._s1, self._s2 = [0.0] * k, [0.0] * k
-        # epochs whose partial sums THIS object has folded (restored
-        # prefix counts as folded): distinguishes the two crash windows
-        # on replay — before the fold (re-fold it) vs after (repair the
-        # missing output only)
-        self._folded_epochs: set[int] = set()
         self._restore_from_sink()
 
     # -- statistic ------------------------------------------------------------
@@ -270,10 +248,14 @@ class _ScalerEpochs:
         return df.groupBy(*self._grain).agg(F.sum(DIFF).alias(DIFF))
 
     def _affected(self, keys: DataFrame) -> DataFrame:
-        """The consolidated history of ``keys`` only. O(snapshot). The
-        distributed lane and the output repair read it; the driver lane
-        reads the same history with ``read_keys_local``."""
-        return self._consolidated().join(keys, on=self.key_cols, how="left_semi")
+        """The consolidated history of ``keys`` only, matched null-safely
+        (a NULL key is a key). O(snapshot). The distributed lane and the
+        output repair read it; the driver lane reads the same history
+        with ``read_keys_local``."""
+        hist = self._consolidated()
+        keys = keys.toDF(*[f"__key_{c}" for c in self.key_cols])
+        on = [hist[c].eqNullSafe(keys[f"__key_{c}"]) for c in self.key_cols]
+        return hist.join(keys, on=on, how="left_semi")
 
     def _emit(self, df: DataFrame, meta: tuple) -> DataFrame:
         """Encode under the pinned projection (*key_cols, *value_cols,
@@ -388,28 +370,16 @@ class _ScalerEpochs:
             )
         self.last_meta = meta
 
-    # -- replay -----------------------------------------------------------------
+    # -- replay (the hooks of _DriverEpochs._replayed) ----------------------------
 
-    def _replayed(self, epoch_id: int) -> bool:
-        """Replay triage: True when the input of ``epoch_id`` is already
-        committed, after bringing the statistic and the output of that
-        epoch up to date."""
-        if not self.input_sink.is_committed(epoch_id):
-            return False
-        if epoch_id not in self._folded_epochs:
-            self._replay_unfolded(epoch_id)
-        elif not self.output_sink.is_committed(epoch_id):
-            self._repair_output(epoch_id)
-        else:
-            # both committed: the only same-process replay that lands
-            # here with stale driver state is a crash between the
-            # output rename and the last_meta assignment (e.g. the
-            # lineage write threw). Post-fold, last_meta ==
-            # _current_meta() invariantly, so restore it — else the
-            # NEXT epoch's driver lane could encode new rows with a meta
-            # older than the committed snapshot.
-            self.last_meta = self._current_meta()
-        return True
+    def _resync(self) -> None:
+        # both committed: the only same-process replay that lands here
+        # with stale driver state is a crash between the output rename
+        # and the last_meta assignment (e.g. the lineage write threw).
+        # Post-fold, last_meta == _current_meta() invariantly, so restore
+        # it — else the NEXT epoch's driver lane could encode new rows
+        # with a meta older than the committed snapshot.
+        self.last_meta = self._current_meta()
 
     def _replay_unfolded(self, epoch_id: int) -> None:
         """Same-process crash window BEFORE the statistic fold: the
@@ -490,11 +460,9 @@ class _ScalerEpochs:
         schema = table.schema.remove_metadata()
         self._process_small_epoch(_rows(table), schema, epoch_id)
 
-    def foreach_batch(self):
-        return lambda df, eid: self.process_epoch(df, eid)
-
     def current_output(self) -> DataFrame:
-        """Live outputs: latest row per key, tombstones dropped."""
+        """Live outputs: latest row per (*key_cols, *value_cols),
+        tombstones dropped."""
         cur = self.output_sink.read_current(self.spark)
         return cur.filter(F.col(DIFF) > 0).drop(DIFF)
 

@@ -51,6 +51,23 @@ def _key_tuples(table: pa.Table, cols: list[str]):
         yield tuple(_NAN if v != v else v for v in t)
 
 
+def _table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    """Row tuples in ``schema`` order -> a pa.Table of that schema. None
+    is NULL and a float NaN stays a NaN value. A naive datetime in a UTC
+    timestamp field is read as UTC: ``collect()`` renders timestamps in
+    the driver process's local zone, which the driver lanes assume is
+    UTC."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def _rows(table: pa.Table) -> list[tuple]:
+    """The rows of ``table`` as tuples in its column order."""
+    return list(zip(*(c.to_pylist() for c in table.columns)))
+
+
 class ExactlyOnceParquetSink:
     """Each committed epoch gets a lineage record: its row count and its
     rows per Spark partition, read from the committed files' names and
@@ -107,15 +124,11 @@ class ExactlyOnceParquetSink:
         idempotence and read_current behave exactly as for Spark-written
         epochs.
 
-        ``table``'s column order must match the Spark-written epochs (a
-        pandas frame is converted with ``pa.Table.from_pandas(...,
-        preserve_index=False)``). Timestamp columns must be tz-aware UTC:
-        Spark-written epochs store isAdjustedToUTC micros, and a naive
-        column would read back TIMESTAMP_NTZ and break the cross-epoch
-        schema merge.
+        ``table``'s column order must match the Spark-written epochs.
+        Timestamp columns must be tz-aware UTC: Spark-written epochs
+        store isAdjustedToUTC micros, and a naive column would read back
+        TIMESTAMP_NTZ and break the cross-epoch schema merge.
         """
-        if not isinstance(table, pa.Table):
-            table = pa.Table.from_pandas(table, preserve_index=False)
 
         def write(staging: str) -> None:
             os.makedirs(staging)
@@ -178,11 +191,7 @@ class ExactlyOnceParquetSink:
 
     def committed_epochs(self) -> list[int]:
         self._recover_compaction()
-        dirs = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("epoch=")
-        }
+        dirs = set(self._live_epoch_dirs())
         m = self._manifest()
         if m is not None:
             dirs |= set(m["epochs"])
@@ -225,17 +234,10 @@ class ExactlyOnceParquetSink:
         if len(fold) < 2:
             return None
         target = max(fold)
-        df = spark.read.option("basePath", self.root).parquet(
-            *[self.epoch_dir(e) for e in fold]
-        )
-        order = [F.col("epoch").desc()]
-        if "diff" in df.columns:
-            order.append(F.col("diff").desc())
-        w = Window.partitionBy(*self.key_cols).orderBy(*order)
-        snap = (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "epoch")
+        snap = self._latest(
+            spark.read.option("basePath", self.root).parquet(
+                *[self.epoch_dir(e) for e in fold]
+            )
         )
         staging = os.path.join(
             self.root, "_staging", f"compact.{uuid.uuid4().hex[:8]}"
@@ -310,9 +312,9 @@ class ExactlyOnceParquetSink:
     def read_keys_local(self, keys: pa.Table, schema: pa.Schema) -> pa.Table:
         """Driver-local keyed read, zero Spark jobs: every committed row
         whose ``key_cols`` tuple is a row of ``keys``, projected and cast
-        to ``schema``. It matches as Spark's left-semi equi-join on
-        ``key_cols`` does: a key with a NULL never matches, a NaN key
-        matches NaN and -0.0 matches 0.0.
+        to ``schema``. It matches as a null-safe (``eqNullSafe``)
+        left-semi join on ``key_cols`` does: NULL matches NULL, as a NULL
+        group is a group; a NaN key matches NaN and -0.0 matches 0.0.
 
         One pyarrow scan of the live epochs' part files pushes an
         ``isin`` per non-float key column down to the files. A float
@@ -327,7 +329,7 @@ class ExactlyOnceParquetSink:
             for name in sorted(os.listdir(self.epoch_dir(e)))
             if name.startswith("part-") and name.endswith(".parquet")
         ]
-        keys = keys.select(self.key_cols).drop_null()
+        keys = keys.select(self.key_cols)
         if not files or not len(keys):
             return schema.empty_table()
         floats = [c for c in self.key_cols if pa.types.is_floating(keys[c].type)]
@@ -340,7 +342,8 @@ class ExactlyOnceParquetSink:
             filter=functools.reduce(operator.and_, pushed) if pushed else None
         )
         for c in floats:
-            # + 0.0 turns -0.0 into 0.0; is_in matches NaN with NaN
+            # + 0.0 turns -0.0 into 0.0; is_in matches NaN with NaN and
+            # NULL with NULL
             table = table.filter(
                 pc.is_in(pc.add(table[c], 0.0), value_set=pc.add(keys[c], 0.0))
             )
@@ -355,7 +358,11 @@ class ExactlyOnceParquetSink:
         return table
 
     def read_current(self, spark: SparkSession) -> DataFrame:
-        """Latest value per key across committed epochs (upsert view).
+        """Latest value per key across committed epochs (upsert view)."""
+        return self._latest(self.read_all(spark))
+
+    def _latest(self, df: DataFrame) -> DataFrame:
+        """The row of the highest epoch per key of epoch-tagged ``df``.
 
         Ties WITHIN an epoch are broken by net multiplicity descending
         when the payload carries a ``diff`` column: a value-update epoch
@@ -363,7 +370,6 @@ class ExactlyOnceParquetSink:
         row and a net-positive row for the same key in the same epoch,
         and the live row must deterministically win over the tombstone.
         """
-        df = self.read_all(spark)
         order = [F.col("epoch").desc()]
         if "diff" in df.columns:
             order.append(F.col("diff").desc())
@@ -386,3 +392,43 @@ class ExactlyOnceParquetSink:
             with open(os.path.join(ldir, name)) as f:
                 out.append(json.load(f))
         return out
+
+
+class _DriverEpochs:
+    """The exactly-once epoch protocol of the driver-state pipelines (the
+    incremental scalers, ``DriverVocabularyPipeline``): an epoch's rows
+    commit to ``input_sink``, fold into driver-held state, and its output
+    commits to ``output_sink``. Subclasses supply ``process_epoch`` and
+    the hooks of the replay triage ``_replayed``: ``_replay_unfolded``
+    (input committed, never folded), ``_repair_output`` (folded, output
+    missing) and optionally ``_resync`` (both committed)."""
+
+    def __init__(self, spark: SparkSession, workdir: str, input_keys, output_keys):
+        self.spark = spark
+        self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", input_keys)
+        self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", output_keys)
+        self.epochs = 0
+        # epochs whose rows THIS object has folded (a restored prefix
+        # counts as folded): on replay, a crash before the fold (fold it
+        # now) vs after it (repair the missing output only)
+        self._folded_epochs: set[int] = set()
+
+    def _replayed(self, epoch_id: int) -> bool:
+        """Replay triage: True when the input of ``epoch_id`` is already
+        committed, after bringing the driver state and the output of
+        that epoch up to date."""
+        if not self.input_sink.is_committed(epoch_id):
+            return False
+        if epoch_id not in self._folded_epochs:
+            self._replay_unfolded(epoch_id)
+        elif not self.output_sink.is_committed(epoch_id):
+            self._repair_output(epoch_id)
+        else:
+            self._resync()
+        return True
+
+    def _resync(self) -> None:
+        pass
+
+    def foreach_batch(self):
+        return lambda df, eid: self.process_epoch(df, eid)

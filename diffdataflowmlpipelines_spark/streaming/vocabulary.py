@@ -16,7 +16,12 @@ update through one worker. Here the token space is hash-sharded across
 ``n_shards`` state keys, and each shard assigns LOCAL indices; the
 global index is ``local * n_shards + shard`` — collision-free and dense
 up to shard imbalance, with zero cross-shard coordination. Determinism:
-within a micro-batch, rows are applied in (event_time, token) order.
+within a micro-batch, rows are applied in (event_time, token) order, a
+NULL event_time last.
+
+``incremental_vocabulary`` (executor state) and
+``DriverVocabularyPipeline`` (driver state, pyarrow commits) share one
+per-shard fold on (event_time, token, diff) tuples, ``_apply_rows``.
 
 Compression renumbers a shard's local indices densely over live values
 in sorted order (the reference renumbers in hash-map iteration order,
@@ -33,20 +38,42 @@ values only.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
+from datetime import datetime, timezone
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-VOCAB_OUTPUT_SCHEMA = (
-    "shard int, token string, idx long, count long, vec_len long"
-)
+from diffdataflowmlpipelines_spark.functions.xxhash import spark_shard
+from diffdataflowmlpipelines_spark.streaming.sink import _DriverEpochs, _rows, _table
+
 VOCAB_STATE_SCHEMA = (
     "tokens array<string>, local_idx array<long>, counts array<long>, "
     "free array<long>, next_local long, length long"
 )
+VOCAB_OUTPUT_SCHEMA = pa.schema(
+    [
+        ("shard", pa.int32()),
+        ("token", pa.string()),
+        ("idx", pa.int64()),
+        ("count", pa.int64()),
+        ("vec_len", pa.int64()),
+    ]
+)
+# the driver pipeline's input sink rows
+_INPUT = pa.schema(
+    [
+        ("shard", pa.int32()),
+        ("token", pa.string()),
+        ("diff", pa.int64()),
+        ("event_time", pa.timestamp("us", tz="UTC")),
+    ]
+)
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 class ShardDict:
@@ -130,53 +157,61 @@ class ShardDict:
         return d
 
 
-def _apply_shard_batch(
-    d: ShardDict, shard: int, pdf: pd.DataFrame, n_shards: int
-) -> pd.DataFrame:
-    """Apply one shard's batch rows (in (event_time, token) order) and
-    return the update-mode output rows. Shared by the stateful streaming
-    operator and the driver-state pipeline so their emissions are
+def _entries(d: ShardDict, shard: int, tokens, n_shards: int) -> list[tuple]:
+    """The (shard, token, idx, count, vec_len) emission tuples of
+    ``tokens`` in shard ``d``; idx is the global index, -1 for a value
+    that is currently dead."""
+    vec_len = d.length * n_shards
+    return [
+        (
+            shard,
+            t,
+            d.val_to_index[t] * n_shards + shard if t in d.val_to_index else -1,
+            d.val_to_count[t],
+            vec_len,
+        )
+        for t in tokens
+    ]
+
+
+def _apply_rows(
+    d: ShardDict, shard: int, rows: list[tuple], n_shards: int
+) -> list[tuple]:
+    """Apply one shard's (event_time, token, diff) rows in (event_time,
+    token) order, a NULL event_time last, and return the emission
+    tuples of the tokens it touched. The one fold of the streaming
+    operator and the driver-state pipeline, so their emissions are
     identical by construction."""
     # snapshot assignments before the batch: a compression triggered
     # mid-batch renumbers live tokens that this batch never touched;
     # those must be re-emitted or the sink's upsert view keeps their
     # stale indices.
     before = dict(d.val_to_index)
-    touched: dict[str, Any] = {}
-    pdf = pdf.sort_values(["event_time", "token"], kind="stable")
-    for token, diff in zip(pdf["token"], pdf["diff"]):
-        d.update(str(token), int(diff))
-        touched[str(token)] = True
+    touched: dict[str, None] = {}
+    for _, token, diff in sorted(rows, key=lambda r: (r[0] is None, r[0], r[1])):
+        d.update(token, diff)
+        touched[token] = None
     for t, i in d.val_to_index.items():
         if before.get(t) != i:
-            touched[t] = True
-    return _emission(d, shard, list(touched), n_shards)
+            touched[t] = None
+    return _entries(d, shard, touched, n_shards)
 
 
-def _emission(d: ShardDict, shard: int, tokens: list, n_shards: int) -> pd.DataFrame:
-    """The typed (shard, token, idx, count, vec_len) emission rows of
-    ``tokens`` in shard ``d`` — the one place the output frame of both
-    the streaming operator and the driver-state pipeline is built."""
-    return pd.DataFrame(
-        {
-            "shard": pd.array([shard] * len(tokens), dtype="int32"),
-            # explicit dtype: an empty emission's object column would be
-            # pyarrow-inferred as null type (parquet schema conflict)
-            "token": pd.array(tokens, dtype="string"),
-            "idx": pd.array(
-                [
-                    # global index; -1 when the value is currently dead
-                    (d.val_to_index[t] * n_shards + shard)
-                    if t in d.val_to_index
-                    else -1
-                    for t in tokens
-                ],
-                dtype="int64",
-            ),
-            "count": pd.array([d.val_to_count[t] for t in tokens], dtype="int64"),
-            "vec_len": pd.array([d.length * n_shards] * len(tokens), dtype="int64"),
-        }
-    )
+def _emission(rows: list[tuple]) -> pa.Table:
+    """Emission tuples -> the output table of both vocabulary paths."""
+    return _table(rows, VOCAB_OUTPUT_SCHEMA)
+
+
+def _apply_shard_batch(
+    d: ShardDict, shard: int, pdf: pd.DataFrame, n_shards: int
+) -> pd.DataFrame:
+    """``_apply_rows`` over a pandas frame of (token, diff, event_time)
+    columns, for the ``applyInPandasWithState`` boundary."""
+    rows = [
+        (None if pd.isna(t) else t, str(token), int(diff))
+        for t, token, diff in zip(pdf["event_time"], pdf["token"], pdf["diff"])
+    ]
+    return _emission(_apply_rows(d, shard, rows, n_shards)).to_pandas()
 
 
 def _vocab_fn(n_shards: int):
@@ -199,16 +234,17 @@ def _vocab_fn(n_shards: int):
 
 
 def _shard_keyed(df: DataFrame, n_shards: int, token_col: str) -> DataFrame:
-    """The sharding invariant of both vocabulary paths: raw
-    (token, diff, event_time) rows -> (shard, token, diff, event_time),
-    with shard = pmod(xxhash64(string token), n_shards)."""
+    """The sharding of ``incremental_vocabulary``: raw (token, diff,
+    event_time) rows -> (shard, token, diff, event_time), with shard =
+    pmod(xxhash64(string token), n_shards). ``DriverVocabularyPipeline
+    ._route`` computes the same rows in Python."""
     # NULL tokens/diffs are not updates (str(None) would merge with a
     # real token spelled 'None'; int(None) aborts the batch)
     return df.filter(
         F.col(token_col).isNotNull() & F.col("diff").isNotNull()
     ).select(
         # hash the STRING-cast token: the stored key is the string cast,
-        # and the driver-local routing (_route_pdf) hashes
+        # and the driver pipeline's routing (_route) hashes
         # XXH64(str(token)) — hashing the raw typed column would shard a
         # LongType token differently than its stored string, splitting
         # one token across two ShardDicts when paths mix
@@ -231,14 +267,14 @@ def incremental_vocabulary(
     keyed = _shard_keyed(df, n_shards, token_col)
     return keyed.groupBy("shard").applyInPandasWithState(
         _vocab_fn(n_shards),
-        outputStructType=VOCAB_OUTPUT_SCHEMA,
+        outputStructType=from_arrow_schema(VOCAB_OUTPUT_SCHEMA),
         stateStructType=VOCAB_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-class DriverVocabularyPipeline:
+class DriverVocabularyPipeline(_DriverEpochs):
     """Latency-oriented driver-state twin of ``incremental_vocabulary``
     (reference latency protocol ``src/main.rs:376-435``: 25 single-row
     dictionary updates, constant-time in base size).
@@ -247,164 +283,113 @@ class DriverVocabularyPipeline:
     per epoch (~0.7-2 s measured locally: state-store restore/commit,
     WAL, python worker round trips) — 2-3 orders over the reference's
     in-process 1.45 ms. This twin keeps the ``n_shards`` ShardDicts in
-    DRIVER memory and commits epochs through the same exactly-once
-    parquet sink protocol: a tiny epoch costs ONE Spark job (the collect
-    probe, which also computes the JVM-side xxhash64 sharding) plus two
-    pyarrow commits.
+    DRIVER memory. Every epoch takes one lane: its rows (collected by
+    ``process_epoch``, the epoch's ONE Spark job) are routed in Python
+    by the XXH64 twin of Spark's xxhash64, folded as tuples, and
+    committed as two pyarrow tables through the exactly-once sinks.
 
-    Scope trade (documented, by design): the dictionary must fit the
-    driver — true for vocabularies up to ~10^7 entries; beyond that use
-    ``incremental_vocabulary`` (executor-sharded state). Sharding,
-    apply order, and emission rule are IDENTICAL to the streaming
-    operator (same ``_apply_shard_batch``), so outputs are parity-equal
-    row for row.
-
-    Restore after driver restart replays the committed input prefix
-    (driver-local parquet reads, no Spark jobs). The crash window
-    between the input and output commits is repaired on replay by
-    re-emitting the full current dictionary for that epoch.
+    Scope trade (by design): the dictionary must fit the driver — true
+    for vocabularies up to ~10^7 entries; beyond that use
+    ``incremental_vocabulary``. Sharding, NULL filter, apply order and
+    emission rule are the streaming operator's, so outputs are
+    parity-equal row for row. A restart replays the committed input
+    prefix through the replay triage, with no Spark job.
     """
 
     def __init__(self, spark, workdir: str, n_shards: int = 4, token_col: str = "token"):
-        from diffdataflowmlpipelines_spark.streaming.sink import (
-            ExactlyOnceParquetSink,
-        )
-
-        self.spark = spark
+        super().__init__(spark, workdir, ["shard", "token"], ["shard", "token"])
         self.n_shards = n_shards
         self.token_col = token_col
-        self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", ["shard", "token"])
-        self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", ["shard", "token"])
         self.shards: dict[int, ShardDict] = {}
-        self.epochs = 0
-        # epochs whose diffs THIS process has applied to the ShardDicts:
-        # distinguishes (on replay) a crash before the apply — which
-        # must apply the committed input now — from one after it
-        self._applied_epochs: set[int] = set()
-        self._restore_from_sink()
-
-    # -- plumbing -------------------------------------------------------------
-
-    @staticmethod
-    def _rows_to_pdf(rows) -> pd.DataFrame:
-        pdf = pd.DataFrame(
-            {
-                "shard": pd.array([r["shard"] for r in rows], dtype="int32"),
-                # explicit string dtype: an EMPTY epoch's object column
-                # would be pyarrow-inferred (null type), writing a
-                # conflicting parquet schema into the sink
-                "token": pd.array([r["token"] for r in rows], dtype="string"),
-                "diff": pd.array([r["diff"] for r in rows], dtype="int64"),
-                "event_time": pd.to_datetime(
-                    [r["event_time"] for r in rows]
-                ).tz_localize("UTC"),
-            }
-        )
-        return pdf
-
-    def _apply_pdf(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for shard, g in pdf.groupby("shard", sort=True):
-            d = self.shards.setdefault(int(shard), ShardDict())
-            outs.append(_apply_shard_batch(d, int(shard), g, self.n_shards))
-        return pd.concat(outs, ignore_index=True) if outs else self._no_emission()
-
-    def _full_state_pdf(self) -> pd.DataFrame:
-        outs = []
-        for shard in sorted(self.shards):
-            d = self.shards[shard]
-            outs.append(_emission(d, shard, sorted(d.val_to_count), self.n_shards))
-        return pd.concat(outs, ignore_index=True) if outs else self._no_emission()
-
-    def _no_emission(self) -> pd.DataFrame:
-        return _emission(ShardDict(), 0, [], self.n_shards)
-
-    def _restore_from_sink(self) -> None:
         for e in self.input_sink.committed_epochs():
-            pdf = pd.read_parquet(self.input_sink.epoch_dir(e))
-            self._apply_pdf(pdf)
-            self._applied_epochs.add(e)
-            self.epochs += 1
-            if not self.output_sink.is_committed(e):
-                # crash window: input committed, output missing
-                self.output_sink.write_batch_local(self._full_state_pdf(), e)
+            self._replayed(e)
 
-    # -- foreachBatch body ------------------------------------------------------
+    # -- the lane -----------------------------------------------------------------
 
-    def process_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if self.input_sink.is_committed(epoch_id):
-            if epoch_id not in self._applied_epochs:
-                # same-process crash BEFORE the apply: fold the committed
-                # input now (the old code emitted full state from
-                # ShardDicts that never saw this epoch and dropped its
-                # updates for the rest of the process lifetime)
-                pdf = pd.read_parquet(self.input_sink.epoch_dir(epoch_id))
-                out = self._apply_pdf(pdf)
-                self._applied_epochs.add(epoch_id)
-                self.epochs += 1
-                self.output_sink.write_batch_local(out, epoch_id)
-            elif not self.output_sink.is_committed(epoch_id):
-                self.output_sink.write_batch_local(self._full_state_pdf(), epoch_id)
-            return
-        keyed = _shard_keyed(batch_df, self.n_shards, self.token_col)
-        pdf = self._rows_to_pdf(keyed.collect())  # one job
-        self.input_sink.write_batch_local(pdf, epoch_id)
-        out = self._apply_pdf(pdf)
-        self._applied_epochs.add(epoch_id)
-        self.output_sink.write_batch_local(out, epoch_id)
-        self.epochs += 1
-
-    def _route_pdf(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        """Null-filter + python-XXH64 shard routing of a raw delta into
-        the keyed (shard, token, diff, event_time) frame the fold and
-        the sinks consume — the pure in-process half of
-        process_epoch_local, exposed so the latency bench can time
-        route+fold without the durable commits."""
-        from diffdataflowmlpipelines_spark.functions.xxhash import spark_shard
-
-        keep = pdf[pdf[self.token_col].notna() & pdf["diff"].notna()]
-        toks = keep[self.token_col].astype(str)
-        keyed = pd.DataFrame(
-            {
-                "shard": pd.array(
-                    [spark_shard(t, self.n_shards) for t in toks], dtype="int32"
-                ),
-                "token": pd.array(toks, dtype="string"),
-                "diff": pd.array(keep["diff"], dtype="int64"),
-                # reset_index: a Series keeps its source index and the
-                # DataFrame constructor would align it against the fresh
-                # arrays above, leaving NaT holes after the null filter
-                "event_time": (
-                    pd.to_datetime(keep["event_time"]).reset_index(drop=True)
-                    if "event_time" in keep.columns
-                    else pd.to_datetime([pd.Timestamp(0)] * len(keep))
-                ),
-            }
-        )
-        if keyed["event_time"].dt.tz is None:
-            keyed["event_time"] = keyed["event_time"].dt.tz_localize("UTC")
+    def _route(self, rows, names: list[str]) -> list[tuple]:
+        """Rows with the columns ``names`` -> the input sink's (shard,
+        token, diff, event_time) tuples, as ``_shard_keyed`` computes
+        them. Only a str or int token stringifies as Spark's
+        ``cast("string")`` does: any other raises TypeError. A missing
+        ``event_time`` column reads as the Unix epoch."""
+        tok_at, diff_at = names.index(self.token_col), names.index("diff")
+        et_at = names.index("event_time") if "event_time" in names else None
+        shard_of: dict[str, int] = {}
+        keyed = []
+        for r in rows:
+            token, diff = r[tok_at], r[diff_at]
+            if token is None or diff is None:
+                continue
+            if isinstance(token, bool) or not isinstance(token, (str, int)):
+                raise TypeError(
+                    f"vocabulary token {token!r} is {type(token).__name__}, "
+                    "not str or int"
+                )
+            token = str(token)
+            shard = shard_of.get(token)
+            if shard is None:
+                shard = shard_of[token] = spark_shard(token, self.n_shards)
+            t = _EPOCH if et_at is None else r[et_at]
+            keyed.append((shard, token, int(diff), t))
         return keyed
 
-    def process_epoch_local(self, pdf: pd.DataFrame, epoch_id: int) -> None:
-        """Driver-local ingestion of a (token, diff[, event_time]) delta
-        the caller already holds as pandas — zero Spark jobs on the hot
-        path (``process_epoch``'s keyed collect costs ~30-40 ms of job
-        launch alone). The shard routing uses the pure-python XXH64
-        twin of ``F.xxhash64`` (functions/xxhash.py, hypothesis-pinned
-        to the JVM value), so emitted (shard, idx) assignments are
-        bit-identical to the Spark-df path and the streaming operator.
-        Exactly-once layout and replay semantics are unchanged."""
-        if self.input_sink.is_committed(epoch_id):
-            return self.process_epoch(None, epoch_id)  # replay/repair only
-        keyed = self._route_pdf(pdf)
-        self.input_sink.write_batch_local(keyed, epoch_id)
-        out = self._apply_pdf(keyed)
-        self._applied_epochs.add(epoch_id)
-        self.output_sink.write_batch_local(out, epoch_id)
-        self.epochs += 1
+    def _apply(self, keyed: list[tuple]) -> list[tuple]:
+        """Fold routed (shard, token, diff, event_time) tuples into the
+        ShardDicts; returns the emission tuples, shard by shard."""
+        by_shard: dict[int, list[tuple]] = {}
+        for shard, token, diff, t in keyed:
+            by_shard.setdefault(shard, []).append((t, token, diff))
+        out = []
+        for shard in sorted(by_shard):
+            d = self.shards.setdefault(shard, ShardDict())
+            out += _apply_rows(d, shard, by_shard[shard], self.n_shards)
+        return out
 
-    def foreach_batch(self):
-        return lambda df, eid: self.process_epoch(df, eid)
+    def _fold(self, keyed: list[tuple], epoch_id: int) -> None:
+        """Fold a committed input epoch and commit its output."""
+        out = self._apply(keyed)
+        self._folded_epochs.add(epoch_id)
+        self.epochs += 1
+        self.output_sink.write_batch_local(_emission(out), epoch_id)
+
+    def _commit(self, keyed: list[tuple], epoch_id: int) -> None:
+        self.input_sink.write_batch_local(_table(keyed, _INPUT), epoch_id)
+        self._fold(keyed, epoch_id)
+
+    # -- replay (the hooks of _DriverEpochs._replayed) ----------------------------
+
+    def _replay_unfolded(self, epoch_id: int) -> None:
+        """The input epoch committed but these ShardDicts never saw it:
+        a restart's restore, or a same-process crash before the apply."""
+        table = pq.read_table(self.input_sink.epoch_dir(epoch_id), schema=_INPUT)
+        self._fold(_rows(table), epoch_id)
+
+    def _repair_output(self, epoch_id: int) -> None:
+        """Input committed and applied, output missing: emit the whole
+        current dictionary for the epoch."""
+        out = []
+        for shard in sorted(self.shards):
+            d = self.shards[shard]
+            out += _entries(d, shard, sorted(d.val_to_count), self.n_shards)
+        self.output_sink.write_batch_local(_emission(out), epoch_id)
+
+    # -- entry points -------------------------------------------------------------
+
+    def process_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """foreachBatch body: one Spark job, the epoch's ``collect()``."""
+        if self._replayed(epoch_id):
+            return
+        self._commit(self._route(batch_df.collect(), batch_df.columns), epoch_id)
+
+    def process_epoch_local(self, pdf, epoch_id: int) -> None:
+        """Driver-local ingestion of a (token, diff[, event_time]) frame
+        the caller already holds in-process — zero Spark jobs. The frame
+        becomes a pa.Table once, here; its rows take ``process_epoch``'s
+        lane. Timestamp columns must be tz-aware UTC."""
+        if self._replayed(epoch_id):
+            return
+        table = pa.Table.from_pandas(pdf, preserve_index=False)
+        self._commit(self._route(_rows(table), table.column_names), epoch_id)
 
     def current_vocabulary(self) -> DataFrame:
         """Upsert view: latest row per (shard, token)."""

@@ -35,7 +35,7 @@ CASES = {
         "row_id long, x double, diff long",
         [*BASE, (None, 5.0, 1)],
         [(None, 5.0, -1)],
-        [],  # a NULL key never equi-joins: no history, no output row
+        [(None, 5.0, 0)],  # a NULL key is a key: its net-zero tombstone
     ),
     "nan_value": (
         {"key_cols": ["row_id"], "value_col": "x"},
@@ -91,6 +91,19 @@ def _pipeline(spark, workdir, kwargs):
     multi = "value_cols" in kwargs
     cls = IncrementalMultiScalerPipeline if multi else IncrementalScalerPipeline
     return cls(spark, workdir, round_to=(0, 0), **kwargs)
+
+
+def _batch_scaled(spark, rows: pd.DataFrame) -> dict:
+    """The batch StandardScaler over the consolidated live (row_id, x)
+    rows: (row_id, x) -> scaled."""
+    net = rows.groupby(["row_id", "x"], as_index=False)["diff"].sum()
+    net = net[net["diff"] > 0]
+    return {
+        (r["row_id"], r["x"]): r["y"]
+        for r in StandardScaler(round_to=(0, 0))
+        .fit_transform(spark.createDataFrame(net), "x", "y")
+        .collect()
+    }
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
@@ -169,15 +182,7 @@ def test_failed_output_commit_of_a_retraction_is_repaired(spark, tmp_path, monke
     assert pipe.output_sink.is_committed(2)
     assert pipe.full_reencodes == 1
 
-    full = pd.concat(epochs, ignore_index=True)
-    net = full.groupby(["row_id", "x"], as_index=False)["diff"].sum()
-    net = net[net["diff"] > 0]
-    want = {
-        (r["row_id"], r["x"]): r["y"]
-        for r in StandardScaler(round_to=(0, 0))
-        .fit_transform(spark.createDataFrame(net), "x", "y")
-        .collect()
-    }
+    want = _batch_scaled(spark, pd.concat(epochs, ignore_index=True))
     got = {(r["row_id"], r["x"]): r["scaled"] for r in pipe.current_output().collect()}
     assert got.keys() == want.keys()
     for k in want:
@@ -185,10 +190,10 @@ def test_failed_output_commit_of_a_retraction_is_repaired(spark, tmp_path, monke
 
 
 def test_read_keys_local_matches_as_a_left_semi_join(tmp_path):
-    """NULL keys never match; NaN matches NaN and -0.0 matches 0.0, in
-    every committed file (parquet statistics leave NaN out); only the
-    exact key tuples of a multi-column key match; part files alone are
-    read, cast to the requested schema."""
+    """NULL matches NULL (a null-safe left-semi join); NaN matches NaN
+    and -0.0 matches 0.0, in every committed file (parquet statistics
+    leave NaN out); only the exact key tuples of a multi-column key
+    match; part files alone are read, cast to the requested schema."""
     sink = ExactlyOnceParquetSink(str(tmp_path / "s"), ["f", "g"])
     sink.write_batch_local(
         pa.table({
@@ -216,9 +221,30 @@ def test_read_keys_local_matches_as_a_left_semi_join(tmp_path):
     })
     got = sink.read_keys_local(keys, schema)
     assert got.schema == schema
-    # (1.0, 2) and (NaN, 2) are in the cross product only; the NULL
-    # tuples match nothing
-    assert sorted(got["v"].to_pylist()) == ["a", "b", "d", "f", "g"]
-    assert sink.read_keys_local(keys.slice(3), schema).num_rows == 0
+    # (1.0, 2) and (NaN, 2) are in the cross product only; (NULL, 1)
+    # matches its row, and no row has the key (2.0, NULL)
+    assert sorted(got["v"].to_pylist()) == ["a", "b", "c", "d", "f", "g"]
+    assert sink.read_keys_local(keys.slice(3), schema)["v"].to_pylist() == ["c"]
     absent = pa.table({"f": [5.0], "g": pa.array([1], pa.int64())})
     assert sink.read_keys_local(absent, schema).num_rows == 0
+
+
+@pytest.mark.parametrize("small", [0, 64])
+def test_hot_key_keeps_every_live_output_row(spark, tmp_path, monkeypatch, small):
+    """A key holding two live values keeps both output rows: the output
+    sink is keyed by the grain (key, value), so ``current_output()``
+    holds what the batch StandardScaler returns, on both lanes."""
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", small)
+    pipe = IncrementalScalerPipeline(
+        spark, str(tmp_path / "p"), ["row_id"], "x", round_to=(0, 0)
+    )
+    cols = ["row_id", "x", "diff"]
+    epochs = [BASE, [(300, 2.0, 1), (300, 7.0, 1)]]
+    for i, rows in enumerate(epochs):
+        pipe.process_epoch_local(pd.DataFrame(rows, columns=cols), i)
+    want = _batch_scaled(spark, pd.DataFrame([*BASE, *epochs[1]], columns=cols))
+    got = {(r["row_id"], r["x"]): r["scaled"] for r in pipe.current_output().collect()}
+    assert len(want) == len(got) == 102
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k] == pytest.approx(want[k], rel=1e-9), k

@@ -8,22 +8,23 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pyarrow as pa
 
-from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
+from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink, _table
+
+_SCHEMA = pa.schema([("k", pa.string()), ("v", pa.int64()), ("diff", pa.int64())])
 
 
-def _pdf(rows):
-    return pd.DataFrame(rows, columns=["k", "v", "diff"]).astype(
-        {"k": "string", "v": "int64", "diff": "int64"}
-    )
+def _batch(rows):
+    return _table(rows, _SCHEMA)
 
 
 def _mk(tmp_path, name):
     sink = ExactlyOnceParquetSink(str(tmp_path / name), ["k"])
-    sink.write_batch_local(_pdf([("a", 1, 1), ("b", 2, 1)]), 0)
-    sink.write_batch_local(_pdf([("a", 10, 1)]), 1)
-    sink.write_batch_local(_pdf([("c", 3, 1)]), 2)
-    sink.write_batch_local(_pdf([("b", 20, 1)]), 3)
+    sink.write_batch_local(_batch([("a", 1, 1), ("b", 2, 1)]), 0)
+    sink.write_batch_local(_batch([("a", 10, 1)]), 1)
+    sink.write_batch_local(_batch([("c", 3, 1)]), 2)
+    sink.write_batch_local(_batch([("b", 20, 1)]), 3)
     return sink
 
 
@@ -54,11 +55,11 @@ def test_compact_preserves_upsert_view_and_replay_contract(spark, tmp_path):
     assert _current(spark, sink) == before
 
     # a replayed delivery of a folded epoch must STILL be dropped
-    sink.write_batch_local(_pdf([("a", 999, 1)]), 1)
+    sink.write_batch_local(_batch([("a", 999, 1)]), 1)
     assert _current(spark, sink) == before
 
     # epochs after the snapshot keep winning
-    sink.write_batch_local(_pdf([("c", 30, 1)]), 4)
+    sink.write_batch_local(_batch([("c", 30, 1)]), 4)
     assert _current(spark, sink)["c"] == 30
 
 
@@ -68,8 +69,8 @@ def test_compact_all_then_again_is_incremental(spark, tmp_path):
     assert _current(spark, sink) == {"a": 10, "b": 20, "c": 3}
     # nothing left to fold
     assert sink.compact(spark) is None
-    sink.write_batch_local(_pdf([("d", 4, 1)]), 4)
-    sink.write_batch_local(_pdf([("d", 40, 1)]), 5)
+    sink.write_batch_local(_batch([("d", 4, 1)]), 4)
+    sink.write_batch_local(_batch([("d", 40, 1)]), 5)
     assert sink.compact(spark) == 5
     assert sink.committed_epochs() == [0, 1, 2, 3, 4, 5]
     assert _current(spark, sink) == {"a": 10, "b": 20, "c": 3, "d": 40}

@@ -213,13 +213,13 @@ def test_epoch_files_reach_the_stream_in_order(spark, tmp_path, monkeypatch):
 
 
 def test_lineage_numeric_order(spark, tmp_path):
-    import pandas as pd
+    import pyarrow as pa
 
     from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 
     sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["v"])
     for e in range(12):
-        sink.write_batch_local(pd.DataFrame({"v": [e]}), e)
+        sink.write_batch_local(pa.table({"v": [e]}), e)
     assert [l["epoch"] for l in sink.lineage()] == list(range(12))
 
 

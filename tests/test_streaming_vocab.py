@@ -4,9 +4,11 @@ stateful streaming op, asserted against a pure-python oracle replay."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from datetime import datetime, timedelta
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
@@ -23,6 +25,9 @@ TOK_SCHEMA = T.StructType(
         T.StructField("diff", T.LongType(), False),
         T.StructField("event_time", T.TimestampType(), False),
     ]
+)
+NULLABLE_TOK_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in TOK_SCHEMA.fields]
 )
 
 
@@ -238,16 +243,29 @@ def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
     """DriverVocabularyPipeline (latency twin: driver-held ShardDicts,
     one Spark job per epoch) must emit row-for-row the SAME per-epoch
     outputs as the applyInPandasWithState operator — same xxhash64
-    sharding, same apply order, same emission rule."""
+    sharding, same apply order, same emission rule. The last epoch pins
+    the NULL rules: a NULL token is dropped and a NULL event_time is
+    applied after every timed row."""
     from diffdataflowmlpipelines_spark.streaming.vocabulary import (
         DriverVocabularyPipeline,
     )
 
-    epochs = _epochs()
+    t = datetime(2024, 1, 1, 0, 1)
+    epochs = _epochs() + [
+        pd.DataFrame(
+            {
+                # date and fig share shard 0: the timed fig takes the
+                # shard's next index before date does
+                "token": ["date", None, "fig"],
+                "diff": [1, 1, 1],
+                "event_time": [None, t, t],
+            }
+        )
+    ]
     n_shards = 2
 
     # streaming-operator run (per-epoch availableNow)
-    src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
+    src = EpochFileSource(spark, str(tmp_path / "src"), NULLABLE_TOK_SCHEMA)
     sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["shard", "token"])
     for i, ep in enumerate(epochs):
         src.add_epoch(ep)
@@ -266,7 +284,7 @@ def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
         spark, str(tmp_path / "drv"), n_shards=n_shards
     )
     for i, ep in enumerate(epochs):
-        pipe.process_epoch(spark.createDataFrame(ep, TOK_SCHEMA), i)
+        pipe.process_epoch(spark.createDataFrame(ep, NULLABLE_TOK_SCHEMA), i)
 
     def rows_of(sink_obj, e):
         import pandas as pd  # noqa: F811
@@ -283,6 +301,10 @@ def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
     ]
     for se, de in zip(stream_epochs, pipe.output_sink.committed_epochs()):
         assert rows_of(sink, se) == rows_of(pipe.output_sink, de), (se, de)
+    last = {r[1]: r for r in rows_of(pipe.output_sink, len(epochs) - 1)}
+    assert set(last) == {"date", "fig"}
+    assert last["date"][0] == last["fig"][0] == 0
+    assert last["fig"][2] < last["date"][2]
 
     # driver restart: a fresh object restores state from the input
     # prefix and keeps assigning consistently
@@ -301,15 +323,17 @@ def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
         r["token"]: (r["idx"], r["count"])
         for r in pipe2.current_vocabulary().filter(F.col("idx") >= 0).collect()
     }
-    # oracle replay: pure-python ShardDicts over all epochs,
-    # sharded via the committed input (authoritative)
+    # oracle replay: pure-python ShardDicts over all epochs, each in
+    # (event_time, token) order, sharded via the committed input
+    # (authoritative)
     dicts = {s: ShardDict() for s in range(n_shards)}
     inp = pd.concat(
         [pd.read_parquet(pipe2.input_sink.epoch_dir(e))
+         .sort_values(["event_time", "token"], kind="stable")
          for e in pipe2.input_sink.committed_epochs()],
         ignore_index=True,
     )
-    for _, r in inp.sort_values(["event_time", "token"], kind="stable").iterrows():
+    for _, r in inp.iterrows():
         dicts[int(r["shard"])].update(str(r["token"]), int(r["diff"]))
     want = {}
     for s, d in dicts.items():
@@ -345,25 +369,33 @@ def test_driver_vocabulary_crash_window_repair(spark, tmp_path):
     assert after == before
 
 
-def test_driver_vocabulary_same_process_replay_before_apply(spark, tmp_path):
+def test_driver_vocabulary_same_process_replay_before_apply(
+    spark, tmp_path, monkeypatch
+):
     """Crash after the input commit but before the ShardDict apply, then
     a replay on the SAME object: the epoch's diffs must be applied (the
     old path emitted full state from dictionaries that never saw the
     epoch and dropped its updates for the process lifetime)."""
     from diffdataflowmlpipelines_spark.streaming.vocabulary import (
         DriverVocabularyPipeline,
-        _shard_keyed,
     )
 
     epochs = _epochs()
     pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=2)
     pipe.process_epoch(spark.createDataFrame(epochs[0], TOK_SCHEMA), 0)
-    # crash window: input epoch 1 committed, apply never ran
-    keyed = _shard_keyed(spark.createDataFrame(epochs[1], TOK_SCHEMA), 2, "token")
-    pipe.input_sink.write_batch_local(
-        pipe._rows_to_pdf(keyed.collect()),
-        1,
-    )
+    # crash window: the apply of epoch 1 raises once, after its input
+    # commit
+    apply = pipe._apply
+
+    def crash_once(keyed):
+        monkeypatch.setattr(pipe, "_apply", apply)
+        raise OSError("injected: crash before the apply")
+
+    monkeypatch.setattr(pipe, "_apply", crash_once)
+    with pytest.raises(OSError, match="injected"):
+        pipe.process_epoch(spark.createDataFrame(epochs[1], TOK_SCHEMA), 1)
+    assert pipe.input_sink.is_committed(1)
+    assert not pipe.output_sink.is_committed(1)
     pipe.process_epoch(spark.createDataFrame(epochs[1], TOK_SCHEMA), 1)
     pipe.process_epoch(spark.createDataFrame(epochs[2], TOK_SCHEMA), 2)
     got = {
@@ -426,3 +458,95 @@ def test_driver_vocab_long_tokens_route_identically(spark, tmp_path):
 
     va, vb = vocab(pa), vocab(pb)
     assert va == vb and set(va) == {"42", "7", "123456789", "9"}
+
+
+@contextmanager
+def _py4j_calls(spark, monkeypatch):
+    """The py4j commands the driver sends in the block, but for the
+    releases of Java objects the Python side freed ("m\nd\n..."): when
+    those go out depends on the garbage collector, not on the block."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    try:
+        yield calls
+    finally:
+        monkeypatch.setattr(client, "send_command", send)
+
+
+def test_single_row_epoch_cost(spark, tmp_path, job_group, monkeypatch):
+    """A single-row epoch: ``process_epoch`` starts one Spark job, its
+    ``collect()``, and makes a handful of py4j calls, where building a
+    Spark plan per epoch makes hundreds; ``process_epoch_local`` starts
+    no job, makes no py4j call and builds no pandas DataFrame."""
+    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
+        DriverVocabularyPipeline,
+    )
+
+    pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=4)
+    base = pd.concat(_epochs(), ignore_index=True)
+    pipe.process_epoch(spark.createDataFrame(base, TOK_SCHEMA), 0)
+    t = datetime(2024, 1, 1, 1)
+    # a file-backed frame, as a micro-batch is: its collect() is a job
+    # (a createDataFrame frame collects on the driver without one)
+    path = str(tmp_path / "one")
+    spark.createDataFrame(
+        pd.DataFrame({"token": ["mango"], "diff": [1], "event_time": [t]}), TOK_SCHEMA
+    ).write.parquet(path)
+    one = spark.read.parquet(path)
+    with job_group("spark-epoch") as jobs, _py4j_calls(spark, monkeypatch) as calls:
+        pipe.process_epoch(one, 1)
+    assert len(jobs()) == 1
+    assert len(calls) <= 9, calls
+
+    local = pd.DataFrame(
+        {
+            "token": ["mango"],
+            "diff": [-1],
+            "event_time": pd.to_datetime([t]).tz_localize("UTC"),
+        }
+    )
+    frames = []
+    init = pd.DataFrame.__init__
+
+    def counted_init(self, *args, **kwargs):
+        frames.append(1)
+        init(self, *args, **kwargs)
+
+    with job_group("local-epoch") as jobs, _py4j_calls(spark, monkeypatch) as calls:
+        monkeypatch.setattr(pd.DataFrame, "__init__", counted_init)
+        pipe.process_epoch_local(local, 2)
+    assert jobs() == [] and calls == [] and frames == []
+    assert pipe.output_sink.is_committed(2)
+    got = {
+        r["token"]: r["count"] for r in pipe.current_vocabulary().collect()
+    }
+    assert got["mango"] == 0
+
+
+def test_driver_vocab_route_types_and_default_event_time(spark, tmp_path):
+    """Only a str or int token stringifies as Spark's cast to string: a
+    float or bool token raises before anything commits. A delta without
+    an event_time column commits the Unix epoch (UTC)."""
+    import pyarrow.parquet as pq
+
+    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
+        DriverVocabularyPipeline,
+    )
+
+    pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=2)
+    for tok in (1.5, True):
+        with pytest.raises(TypeError, match="not str or int"):
+            pipe.process_epoch_local(pd.DataFrame({"token": [tok], "diff": [1]}), 0)
+    assert not pipe.input_sink.is_committed(0)
+    pipe.process_epoch_local(pd.DataFrame({"token": ["a", None], "diff": [1, 1]}), 0)
+    got = pq.read_table(pipe.input_sink.epoch_dir(0)).to_pylist()
+    assert [(r["token"], r["diff"]) for r in got] == [("a", 1)]
+    assert got[0]["event_time"] == pd.Timestamp(0, tz="UTC")

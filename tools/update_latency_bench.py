@@ -484,15 +484,9 @@ def bench_dict(spark) -> dict:
                     val = str(fold_unique)
                 else:
                     val = str(i % uniques)
-                one = pd.DataFrame(
-                    {
-                        "token": [val],
-                        "diff": [1],
-                        "event_time": [t0_ts + timedelta(seconds=300 + i)],
-                    }
-                )
+                one = [(val, 1, t0_ts + timedelta(seconds=300 + i))]
                 t0 = time.time()
-                pipe._apply_pdf(pipe._route_pdf(one))
+                pipe._apply(pipe._route(one, ["token", "diff", "event_time"]))
                 fold_ms.append((time.time() - t0) * 1000)
 
             results.append(
