@@ -31,6 +31,11 @@ history with one pyarrow scan (``read_keys_local``), not a Spark job.
 Every output epoch carries exactly (*key_cols, *value_cols, diff) plus
 the encoder's column, whichever lane wrote it.
 
+A replayed epoch takes the one rule of ``sink._DriverEpochs._replayed``:
+fold the committed input if this object has not, and write a missing
+output epoch as the cascade does, the consolidated input encoded under
+the current meta: a function of the two, so correct for any epoch.
+
 The parity invariant (tested): at every epoch, the output sink equals
 a from-scratch batch fit_transform over the consolidated input prefix —
 the reference's incremental-update trace oracle (FIXTURES.md F3).
@@ -41,6 +46,7 @@ from __future__ import annotations
 import math
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -85,6 +91,12 @@ class _ScalerEpochs(_DriverEpochs):
     ``round_to`` (the reference's update suppression). The output sink
     is keyed by the grain (*key_cols, *value_cols), so a key holding
     several live values keeps one output row per value.
+
+    ``_write_state`` is the one whole-snapshot write: the cascade of
+    either lane, and the output of a replayed epoch whose output a crash
+    lost. ``full_reencodes`` counts its writes under a rounded meta that
+    moved from ``last_meta``, so a replay counts what a crash-free run
+    counts.
 
     Subclasses supply only the encoder: ``_encode`` (distributed) adds
     the column ``_out_field`` names to a frame projected to
@@ -197,7 +209,6 @@ class _ScalerEpochs(_DriverEpochs):
             return
         _, stats = self._sums(self.input_sink.read_all(self.spark))
         self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2 = stats
-        self.epochs = len(committed)
         self.last_meta = self._current_meta()
 
     def _fold_batch(self, batch_df: DataFrame) -> tuple:
@@ -249,9 +260,9 @@ class _ScalerEpochs(_DriverEpochs):
 
     def _affected(self, keys: DataFrame) -> DataFrame:
         """The consolidated history of ``keys`` only, matched null-safely
-        (a NULL key is a key). O(snapshot). The distributed lane and the
-        output repair read it; the driver lane reads the same history
-        with ``read_keys_local``."""
+        (a NULL key is a key). O(snapshot). The distributed lane reads
+        it; the driver lane reads the same history with
+        ``read_keys_local``."""
         hist = self._consolidated()
         keys = keys.toDF(*[f"__key_{c}" for c in self.key_cols])
         on = [hist[c].eqNullSafe(keys[f"__key_{c}"]) for c in self.key_cols]
@@ -285,48 +296,46 @@ class _ScalerEpochs(_DriverEpochs):
         fields = [schema.field(c) for c in (*self._grain, DIFF)]
         return _table(out, pa.schema([*fields, self._out_field]))
 
-    def _epoch_output(
-        self,
-        ep: DataFrame,
-        epoch_id: int,
-        meta: tuple,
-        prev: tuple | None,
-        insert_only: bool,
-    ) -> DataFrame:
-        """Output rows of the committed, folded input epoch ``ep``, given
-        the meta before it (``prev``) and after it (``meta``)."""
-        if meta != prev:
-            # DD cascade: statistic changed -> every live output row is
-            # re-emitted; dead keys get their <=0 net rows as tombstones
-            # (the upsert view drops them). O(snapshot) — by design, as
-            # in the reference's full re-transform on meta change.
+    def _write_state(self, epoch_id: int, state: DataFrame | None = None) -> None:
+        """Commit the whole consolidated input (``state``, by default
+        ``_consolidated()``) encoded under the current meta as the output
+        of ``epoch_id``: the DD cascade, O(snapshot) as the reference's
+        full re-transform, and the output of a replayed epoch. Dead keys
+        get their <=0 net rows as tombstones (the upsert view drops
+        them)."""
+        meta = self._current_meta()
+        if meta != self.last_meta:
+            # set before the write: a replay of a cascade whose output
+            # write failed does not count it twice
             self.full_reencodes += 1
-            if insert_only and self.input_sink.committed_epochs() == [epoch_id]:
-                # first-ever epoch: the snapshot IS this batch — encode
-                # from the in-memory cache instead of re-scanning the
-                # parquet snapshot (saves a full input re-read at init,
-                # the reference's dominant init phase)
-                return self._emit(consolidate(ep, self._grain), meta)
-            return self._emit(self._consolidated(), meta)
-        if insert_only:
-            # inserts of (key, value) rows only touch their own keys;
-            # their net state is the batch itself. O(batch).
-            return self._emit(consolidate(ep, self._grain), meta)
-        # retraction-bearing batch with unchanged statistic: the touched
-        # keys' net state needs the history
-        keys = ep.select(*self.key_cols).dropDuplicates()
-        return self._emit(self._affected(keys), meta)
+            self.last_meta = meta
+        if state is None:
+            state = self._consolidated()
+        self.output_sink.write_batch(self._emit(state, meta), epoch_id)
 
     def _fold_and_emit(self, ep: DataFrame, epoch_id: int) -> None:
         """Fold a committed input epoch and commit its output (O(batch)
         aggregate job + the output write)."""
         meta = self._fold_batch(ep)
         self._folded_epochs.add(epoch_id)
-        out = self._epoch_output(
-            ep, epoch_id, meta, self.last_meta, self._last_batch_insert_only
-        )
-        self.output_sink.write_batch(out, epoch_id)
-        self.last_meta = meta
+        insert_only = self._last_batch_insert_only
+        if meta != self.last_meta:
+            # first-ever epoch: the snapshot IS this batch — encode from
+            # the in-memory cache instead of re-scanning the parquet
+            # snapshot (saves a full input re-read at init, the
+            # reference's dominant init phase)
+            first = insert_only and self.input_sink.committed_epochs() == [epoch_id]
+            self._write_state(epoch_id, consolidate(ep, self._grain) if first else None)
+            return
+        if insert_only:
+            # inserts of (key, value) rows only touch their own keys;
+            # their net state is the batch itself. O(batch).
+            out = consolidate(ep, self._grain)
+        else:
+            # retraction-bearing batch with unchanged statistic: the
+            # touched keys' net state needs the history
+            out = self._affected(ep.select(*self.key_cols).dropDuplicates())
+        self.output_sink.write_batch(self._emit(out, meta), epoch_id)
 
     # -- driver lane ------------------------------------------------------------
 
@@ -349,76 +358,41 @@ class _ScalerEpochs(_DriverEpochs):
             rows = [(*r, 1) for r in rows]
         table = _table(rows, schema)
         self.input_sink.write_batch_local(table, epoch_id)
-        self.epochs += 1
         meta = self._fold_rows(rows, schema)
         self._folded_epochs.add(epoch_id)
         if meta != self.last_meta:
-            out = self._emit(self._consolidated(), meta)
-            self.output_sink.write_batch(out, epoch_id)
-            self.full_reencodes += 1
-        else:
-            if not self._last_batch_insert_only:
-                # the touched keys' net state needs their history: read
-                # it from the committed input epochs, this one included
-                hist = self.input_sink.read_keys_local(
-                    table.select(self.key_cols),
-                    pa.schema([schema.field(c) for c in (*self._grain, DIFF)]),
-                )
-                rows, schema = _rows(hist), hist.schema
-            self.output_sink.write_batch_local(
-                self._emit_rows(rows, schema, meta), epoch_id
+            self._write_state(epoch_id)
+            return
+        if not self._last_batch_insert_only:
+            # the touched keys' net state needs their history: read it
+            # from the committed input epochs, this one included
+            hist = self.input_sink.read_keys_local(
+                table.select(self.key_cols),
+                pa.schema([schema.field(c) for c in (*self._grain, DIFF)]),
             )
-        self.last_meta = meta
+            rows, schema = _rows(hist), hist.schema
+        self.output_sink.write_batch_local(
+            self._emit_rows(rows, schema, meta), epoch_id
+        )
 
     # -- replay (the hooks of _DriverEpochs._replayed) ----------------------------
 
-    def _resync(self) -> None:
-        # both committed: the only same-process replay that lands here
-        # with stale driver state is a crash between the output rename
-        # and the last_meta assignment (e.g. the lineage write threw).
-        # Post-fold, last_meta == _current_meta() invariantly, so restore
-        # it — else the NEXT epoch's driver lane could encode new rows
-        # with a meta older than the committed snapshot.
-        self.last_meta = self._current_meta()
-
-    def _replay_unfolded(self, epoch_id: int) -> None:
-        """Same-process crash window BEFORE the statistic fold: the
-        input epoch committed but this object's statistic never saw it
-        (a restart would re-fold it via _restore_from_sink, but a
-        replay on the same long-lived object must fold it here — the
-        old repair path assumed the fold had happened and silently
-        corrupted every later statistic)."""
-        ep = with_diff(
-            self.spark.read.parquet(self.input_sink.epoch_dir(epoch_id))
-        ).persist()
-        try:
-            self.epochs = len(self.input_sink.committed_epochs())
-            self._fold_and_emit(ep, epoch_id)
-        finally:
-            ep.unpersist()
-
-    def _repair_output(self, epoch_id: int) -> None:
-        """Crash-window repair: the input epoch committed AND was folded
-        into the statistic, but the output didn't commit. Cascade-vs-
-        affected is re-decided by recomputing the PRE-epoch meta from
-        the input history EXCLUDING this epoch — an exact recomputation,
-        not a float subtraction (a-b+b != a can misclassify the branch
-        when round_to is None)."""
-        ep = with_diff(self.spark.read.parquet(self.input_sink.epoch_dir(epoch_id)))
-        history = (
-            self.input_sink.read_all(self.spark)
-            .filter(F.col("epoch") != epoch_id)
-            .drop("epoch")
+    def _fold_committed(self, epoch_id: int) -> None:
+        """Same-process crash window BEFORE the statistic fold: the input
+        epoch committed but this object's statistic never saw it (a
+        restart re-folds it in _restore_from_sink). One pyarrow read of
+        the epoch, folded as the driver lane folds its rows."""
+        table = pq.read_table(
+            self.input_sink.epoch_dir(epoch_id), columns=[*self.value_cols, DIFF]
         )
-        meta_before = self._meta(*self._sums(history)[1])
-        meta = self._current_meta()
-        # the affected-keys re-encode is correct for any batch shape
-        out = self._epoch_output(ep, epoch_id, meta, meta_before, insert_only=False)
-        self.output_sink.write_batch(out, epoch_id)
-        # the crash skipped the post-output assignment: a stale last_meta
-        # would let the NEXT epoch encode new rows with a different meta
-        # than the rows just emitted
-        self.last_meta = meta
+        self._fold_rows(_rows(table), table.schema)
+
+    def _resync(self) -> None:
+        # both epochs committed: last_meta is the meta of the committed
+        # output, _current_meta(). Restore it if anything left it stale,
+        # else the NEXT epoch's driver lane would encode new rows with a
+        # meta older than the committed snapshot
+        self.last_meta = self._current_meta()
 
     # -- entry points -----------------------------------------------------------
 
@@ -435,7 +409,6 @@ class _ScalerEpochs(_DriverEpochs):
         batch_df = with_diff(batch_df).persist()
         try:
             self.input_sink.write_batch(batch_df, epoch_id)
-            self.epochs += 1
             self._fold_and_emit(batch_df, epoch_id)  # O(batch), one aggregate job
         finally:
             batch_df.unpersist()

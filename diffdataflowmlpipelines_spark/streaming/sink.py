@@ -139,50 +139,54 @@ class ExactlyOnceParquetSink:
                 allow_truncated_timestamps=True,
             )
 
-        self._commit(epoch_id, write, local=True)
+        self._commit(epoch_id, write)
 
-    def _commit(self, epoch_id: int, write, **record) -> None:
+    def _commit(self, epoch_id: int, write) -> None:
         """The commit body of both writes: ``write(staging)`` fills a
-        fresh staging directory, the atomic rename to ``epoch=<id>`` is
-        the commit point, and the lineage record (``record`` plus the row
-        count and rows per Spark partition) is read from the committed
-        files' names and parquet footers, so it adds no Spark job."""
-        if self.is_committed(epoch_id):
-            return  # replay after failure: already committed, drop it
-        staging = os.path.join(
-            self.root, "_staging", f"epoch={epoch_id}.{uuid.uuid4().hex[:8]}"
-        )
-        write(staging)
+        fresh staging directory and the atomic rename to ``epoch=<id>``
+        is the commit point. A replay of a committed epoch writes only
+        the lineage record, if a crash after the rename lost it."""
+        if not self.is_committed(epoch_id):
+            staging = os.path.join(
+                self.root, "_staging", f"epoch={epoch_id}.{uuid.uuid4().hex[:8]}"
+            )
+            try:
+                write(staging)
+                os.rename(staging, self.epoch_dir(epoch_id))  # atomic commit
+            except Exception:
+                shutil.rmtree(staging, ignore_errors=True)
+                # a concurrent/replayed commit that won the rename is a
+                # commit; anything else (a failed write, EACCES, EXDEV,
+                # ...) is DATA LOSS if swallowed: the checkpoint would
+                # advance past an epoch that was never committed
+                if not self.is_committed(epoch_id):
+                    raise
+        self._write_lineage(epoch_id)
+
+    def _write_lineage(self, epoch_id: int) -> None:
+        """Record committed ``epoch_id`` unless its record exists: the row
+        count and rows per Spark partition, read from the committed
+        files' names and parquet footers so that lineage adds no Spark
+        job, and ``local`` when pyarrow wrote the files in the driver."""
+        path = os.path.join(self.root, "_lineage", f"epoch={epoch_id}.json")
         committed = self.epoch_dir(epoch_id)
-        try:
-            os.rename(staging, committed)  # atomic commit
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-            if self.is_committed(epoch_id):
-                return  # concurrent/replayed commit won the rename
-            # anything else (EACCES, EXDEV, ...) is DATA LOSS if
-            # swallowed: the checkpoint would advance past an epoch that
-            # was never committed
-            raise
+        if os.path.exists(path) or not os.path.isdir(committed):
+            return  # recorded, or compacted (its record outlives its files)
+        record = {"epoch": epoch_id, "committed_at": time.time()}
         # each write task names its files part-<partition id>...
         partitions: dict[str, int] = {}
         for name in os.listdir(committed):
             if not name.endswith(".parquet"):
                 continue
-            rows = pq.read_metadata(os.path.join(committed, name)).num_rows
-            if rows:
+            meta = pq.read_metadata(os.path.join(committed, name))
+            if meta.created_by.startswith("parquet-cpp"):
+                record["local"] = True  # Spark's writer is parquet-mr
+            if meta.num_rows:
                 part = str(int(re.match(r"part-(\d+)", name).group(1)))
-                partitions[part] = partitions.get(part, 0) + rows
-        self._write_lineage(
-            epoch_id, rows=sum(partitions.values()), partitions=partitions, **record
-        )
-
-    def _write_lineage(self, epoch_id: int, **record) -> None:
-        lineage = {"epoch": epoch_id, "committed_at": time.time(), **record}
-        with open(
-            os.path.join(self.root, "_lineage", f"epoch={epoch_id}.json"), "w"
-        ) as f:
-            json.dump(lineage, f)
+                partitions[part] = partitions.get(part, 0) + meta.num_rows
+        record.update(rows=sum(partitions.values()), partitions=partitions)
+        with open(path, "w") as f:
+            json.dump(record, f)
 
     def foreach_batch(self):
         return lambda df, epoch_id: self.write_batch(df, epoch_id)
@@ -399,32 +403,42 @@ class _DriverEpochs:
     incremental scalers, ``DriverVocabularyPipeline``): an epoch's rows
     commit to ``input_sink``, fold into driver-held state, and its output
     commits to ``output_sink``. Subclasses supply ``process_epoch`` and
-    the hooks of the replay triage ``_replayed``: ``_replay_unfolded``
-    (input committed, never folded), ``_repair_output`` (folded, output
-    missing) and optionally ``_resync`` (both committed)."""
+    the hooks of the one replay triage ``_replayed``: ``_fold_committed``
+    (fold a committed input epoch into the state, write nothing),
+    ``_write_state`` (commit the output of the whole current state as an
+    epoch's output) and optionally ``_resync`` (both epochs committed)."""
 
     def __init__(self, spark: SparkSession, workdir: str, input_keys, output_keys):
         self.spark = spark
         self.input_sink = ExactlyOnceParquetSink(f"{workdir}/input", input_keys)
         self.output_sink = ExactlyOnceParquetSink(f"{workdir}/output", output_keys)
-        self.epochs = 0
         # epochs whose rows THIS object has folded (a restored prefix
-        # counts as folded): on replay, a crash before the fold (fold it
-        # now) vs after it (repair the missing output only)
+        # counts as folded): a replay folds a committed epoch not in it
         self._folded_epochs: set[int] = set()
+
+    @property
+    def epochs(self) -> int:
+        """The number of input epochs this object has folded."""
+        return len(self._folded_epochs)
 
     def _replayed(self, epoch_id: int) -> bool:
         """Replay triage: True when the input of ``epoch_id`` is already
-        committed, after bringing the driver state and the output of
-        that epoch up to date."""
+        committed, after bringing the driver state, the output of that
+        epoch and both lineage records up to date. A missing output is
+        the whole current state, correct for any epoch because an
+        encoder's output is a function of its consolidated input and
+        fitted statistic."""
         if not self.input_sink.is_committed(epoch_id):
             return False
         if epoch_id not in self._folded_epochs:
-            self._replay_unfolded(epoch_id)
-        elif not self.output_sink.is_committed(epoch_id):
-            self._repair_output(epoch_id)
-        else:
-            self._resync()
+            self._fold_committed(epoch_id)
+            self._folded_epochs.add(epoch_id)
+        if not self.output_sink.is_committed(epoch_id):
+            self._write_state(epoch_id)
+        self._resync()
+        # a record that a crash after the rename lost
+        self.input_sink._write_lineage(epoch_id)
+        self.output_sink._write_lineage(epoch_id)
         return True
 
     def _resync(self) -> None:

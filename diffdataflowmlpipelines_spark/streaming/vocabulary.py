@@ -345,28 +345,24 @@ class DriverVocabularyPipeline(_DriverEpochs):
             out += _apply_rows(d, shard, by_shard[shard], self.n_shards)
         return out
 
-    def _fold(self, keyed: list[tuple], epoch_id: int) -> None:
-        """Fold a committed input epoch and commit its output."""
+    def _commit(self, keyed: list[tuple], epoch_id: int) -> None:
+        """Commit routed tuples as the input epoch, fold them, and commit
+        the emission tuples as the output epoch."""
+        self.input_sink.write_batch_local(_table(keyed, _INPUT), epoch_id)
         out = self._apply(keyed)
         self._folded_epochs.add(epoch_id)
-        self.epochs += 1
         self.output_sink.write_batch_local(_emission(out), epoch_id)
-
-    def _commit(self, keyed: list[tuple], epoch_id: int) -> None:
-        self.input_sink.write_batch_local(_table(keyed, _INPUT), epoch_id)
-        self._fold(keyed, epoch_id)
 
     # -- replay (the hooks of _DriverEpochs._replayed) ----------------------------
 
-    def _replay_unfolded(self, epoch_id: int) -> None:
+    def _fold_committed(self, epoch_id: int) -> None:
         """The input epoch committed but these ShardDicts never saw it:
         a restart's restore, or a same-process crash before the apply."""
         table = pq.read_table(self.input_sink.epoch_dir(epoch_id), schema=_INPUT)
-        self._fold(_rows(table), epoch_id)
+        self._apply(_rows(table))
 
-    def _repair_output(self, epoch_id: int) -> None:
-        """Input committed and applied, output missing: emit the whole
-        current dictionary for the epoch."""
+    def _write_state(self, epoch_id: int) -> None:
+        """Emit the whole current dictionary as the output of the epoch."""
         out = []
         for shard in sorted(self.shards):
             d = self.shards[shard]

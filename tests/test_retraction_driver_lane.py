@@ -148,6 +148,31 @@ def test_single_row_retraction_starts_no_spark_job(spark, tmp_path, job_group):
     assert 5 not in {r["row_id"] for r in pipe.current_output().collect()}
 
 
+def test_file_backed_single_row_epoch_cost(spark, tmp_path, job_group):
+    """process_epoch on a single-row micro-batch read from one parquet
+    file, as a file stream's foreachBatch hands one over (a
+    createDataFrame frame collects on the driver without a job): an
+    insert and a retraction that keep the rounded statistic start one
+    Spark job each, the size probe ``limit(n + 1).collect()``."""
+    pipe = IncrementalScalerPipeline(
+        spark, str(tmp_path / "p"), ["row_id"], "x", round_to=(0, 0)
+    )
+    cols = ["row_id", "x", "diff"]
+    pipe.process_epoch_local(pd.DataFrame(BASE, columns=cols), 0)
+    for epoch, row in enumerate([(500, 4.0, 1), (5, 5.0, -1)], start=1):
+        path = str(tmp_path / f"batch{epoch}")
+        batch = spark.createDataFrame([row], "row_id long, x double, diff long")
+        batch.coalesce(1).write.parquet(path)
+        one = spark.read.parquet(path)
+        with job_group(f"epoch-{epoch}") as jobs:
+            pipe.process_epoch(one, epoch)
+        assert len(jobs()) == 1, epoch
+    assert pipe.full_reencodes == 1
+    assert pipe.output_sink.lineage()[2].get("local")
+    live = {r["row_id"] for r in pipe.current_output().collect()}
+    assert 500 in live and 5 not in live
+
+
 def test_failed_output_commit_of_a_retraction_is_repaired(spark, tmp_path, monkeypatch):
     """The output ``write_batch_local`` of a driver-lane retraction
     raises once: the input epoch is committed and folded, the output is
