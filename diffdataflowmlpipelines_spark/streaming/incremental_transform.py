@@ -10,26 +10,32 @@ statistics, one per column of ``value_cols``. Two encoders sit on it:
 ``IncrementalScalerPipeline`` is the k=1 case and writes ``scaled``;
 ``IncrementalMultiScalerPipeline`` assembles all k into ``features``.
 
-Spark re-expression (driven per micro-batch from ``foreachBatch``):
+Every epoch is one pa.Table on the driver (driven per micro-batch from
+``foreachBatch``, or handed over in-process by ``process_epoch_local``):
 
-  epoch k: append batch rows to the input snapshot (exactly-once sink)
-           fold the batch's signed partial sums (n, Σx, Σx²) of every
-             column into the running statistic — retraction-correct,
-             one aggregate job
+  epoch k: commit the table as the input epoch (exactly-once sink)
+           fold its signed partial sums (n, Σx, Σx²) of every column
+             into the running statistic — retraction-correct, O(batch)
            round; compare with the previous epoch's rounded statistic
-           changed   -> re-encode the WHOLE snapshot (the DD cascade)
-           unchanged -> encode only this batch's rows with current meta
+           changed   -> re-encode the WHOLE consolidated input (the DD
+                        cascade)
+           unchanged -> encode this epoch's rows (an insert-only epoch)
+                        or its touched keys' history (a retraction)
 
-Epochs of at most ``SMALL_EPOCH_ROWS`` rows take the driver lane
-instead: the ``limit(n + 1).collect()`` size probe is the epoch's only
-Spark job unless the statistic moves. The lane works on the collected
-rows as Spark holds them (None is NULL, a float NaN is NaN): one
-per-row fold of the statistic, one per-row encode, and pyarrow tables
-for both sink commits. A retraction reads the touched keys' input
-history with one pyarrow scan (``read_keys_local``), not a Spark job.
+Each step has one pyarrow implementation: ``_fold`` (``pyarrow.compute``
+sums), ``_emit`` (``Table.group_by`` on the grain, then the encoder's
+vectorized ``_encode``) and the input sink's ``read_keys_local``, which
+reads the touched keys' history, the cascade's whole input and a
+restart's restore. ``SMALL_EPOCH_ROWS`` only chooses how a Spark batch
+reaches the driver: the ``limit(n + 1).collect()`` size probe, or
+``toArrow()``. Neither sink commit starts a Spark job.
+
+Scope trade (by design): an epoch, and for a cascade the consolidated
+input, must fit the driver as Arrow — the reference's in-process trace
+does too.
 
 Every output epoch carries exactly (*key_cols, *value_cols, diff) plus
-the encoder's column, whichever lane wrote it.
+the encoder's column.
 
 A replayed epoch takes the one rule of ``sink._DriverEpochs._replayed``:
 fold the committed input if this object has not, and write a missing
@@ -45,25 +51,23 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from diffdataflowmlpipelines_spark.operators.collection import (
-    DIFF,
-    _obs_diff,
-    consolidate,
-    with_diff,
-)
-from diffdataflowmlpipelines_spark.operators.encoders import standard_scale_expr
-from diffdataflowmlpipelines_spark.streaming.sink import _DriverEpochs, _rows, _table
+from diffdataflowmlpipelines_spark.operators.collection import DIFF
+from diffdataflowmlpipelines_spark.streaming.sink import _DriverEpochs, _table
 from diffdataflowmlpipelines_spark.streaming.stats import _round_to
 
-# epochs at or under this row count take the driver lane: at most ONE
-# Spark job (the collect probe) plus pyarrow reads and commits, instead
-# of 3-4 distributed jobs. 0 sends every epoch distributed.
+# a Spark batch of at most this many rows reaches the driver through the
+# size probe ``limit(n + 1).collect()`` (7.4 ms on a 1-row local relation
+# against toArrow()'s 17.5, 4-core host), a larger one through
+# ``toArrow()``. 0 sends every batch through toArrow().
 SMALL_EPOCH_ROWS = 64
 
 _NAN, _INF = float("nan"), float("inf")
@@ -73,16 +77,33 @@ _NAN, _INF = float("nan"), float("inf")
 _NAN_META = (_NAN, _NAN)
 
 
-def _scale(x, mean: float, var: float):
-    """``standard_scale_expr`` for one value: (x - mean) / var, with the
-    IEEE results of a zero variance that Python's float division raises
-    on (+/-inf, NaN at x == mean or for a NaN x). NULL stays None."""
-    if x is None:
-        return None
-    d = float(x) - mean
-    if var != 0.0:
-        return d / var
-    return _NAN if d != d or d == 0.0 else math.copysign(_INF, d)
+def _arrival(batch_df: DataFrame) -> pa.Table:
+    """A Spark batch as one pa.Table in its Arrow schema: the rows of the
+    size probe if it holds at most ``SMALL_EPOCH_ROWS`` rows, else
+    ``toArrow()``."""
+    schema = to_arrow_schema(batch_df.schema)
+    if SMALL_EPOCH_ROWS:
+        rows = batch_df.limit(SMALL_EPOCH_ROWS + 1).collect()
+        if len(rows) <= SMALL_EPOCH_ROWS:
+            return _table(rows, schema)
+    return batch_df.toArrow().cast(schema)
+
+
+def _with_diff(table: pa.Table) -> pa.Table:
+    """``collection.with_diff`` for a pa.Table: an int64 ``diff``, 1 on
+    every row of a table without one."""
+    if DIFF not in table.column_names:
+        return table.append_column(DIFF, pa.repeat(1, len(table)))
+    i = table.schema.get_field_index(DIFF)
+    return table.set_column(i, DIFF, table[DIFF].cast(pa.int64()))
+
+
+def _scaled(x, mean, var):
+    """``standard_scale_expr`` on a pyarrow column: (x - mean) / var, with
+    ``mean`` and ``var`` a float or one per element. The float divide
+    gives a zero variance's IEEE results (+/-inf, NaN at x == mean or
+    for a NaN x); NULL stays NULL."""
+    return pc.divide(pc.subtract(x.cast(pa.float64()), mean), var)
 
 
 class _ScalerEpochs(_DriverEpochs):
@@ -92,17 +113,17 @@ class _ScalerEpochs(_DriverEpochs):
     is keyed by the grain (*key_cols, *value_cols), so a key holding
     several live values keeps one output row per value.
 
-    ``_write_state`` is the one whole-snapshot write: the cascade of
-    either lane, and the output of a replayed epoch whose output a crash
+    ``_process`` is the one lane of every epoch, a pa.Table with an
+    int64 ``diff``. ``_write_state`` is the one whole-state write: the
+    cascade, and the output of a replayed epoch whose output a crash
     lost. ``full_reencodes`` counts its writes under a rounded meta that
     moved from ``last_meta``, so a replay counts what a crash-free run
     counts.
 
-    Subclasses supply only the encoder: ``_encode`` (distributed) adds
-    the column ``_out_field`` names to a frame projected to
-    (*key_cols, *value_cols, diff); its driver-lane twin ``_encode_row``
-    returns that column's value for one row's value tuple. Both take a
-    meta tuple of one (mean, var) per value column.
+    Subclasses supply only the encoder: ``_encode`` returns the column
+    ``_out_field`` names for a consolidated table of (*key_cols,
+    *value_cols, diff), under a meta tuple of one (mean, var) per value
+    column.
     """
 
     def __init__(
@@ -116,7 +137,7 @@ class _ScalerEpochs(_DriverEpochs):
         self.key_cols = list(key_cols)
         self.value_cols = list(value_cols)
         # the consolidation grain, and (with diff) the pinned output
-        # projection every lane encodes
+        # projection
         self._grain = [*self.key_cols, *self.value_cols]
         super().__init__(spark, workdir, self.key_cols, self._grain)
         self.round_to = round_to
@@ -134,44 +155,27 @@ class _ScalerEpochs(_DriverEpochs):
 
     # -- statistic ------------------------------------------------------------
 
-    def _sum_exprs(self) -> list:
-        # per-column observation counts under the batch StandardScaler's
-        # rule (operators/collection._obs_diff): a NULL is not an
-        # observation; a NaN or an infinity is one. NaNs and infinities
-        # are counted apart and kept out of s1/s2, which they would
-        # poison for good (a retraction cannot subtract inf or NaN back
-        # out). Spark orders NaN above +inf, so |x| < inf keeps exactly
-        # the finite values.
-        def count(cond):
-            return F.sum(F.when(cond, F.col(DIFF)).otherwise(F.lit(0)))
-
-        exprs = [F.min(F.col(DIFF)).alias("min_diff")]
+    def _fold(self, table: pa.Table) -> None:
+        """Fold a signed table's partial sums of every value column into
+        the running statistic, under the batch StandardScaler's rule
+        (operators/collection._obs_diff): a NULL is not an observation;
+        a NaN or an infinity is one. NaNs and infinities are counted
+        apart and kept out of s1/s2, which they would poison for good (a
+        retraction cannot subtract inf or NaN back out). The sums run in
+        numpy over each column's Arrow buffer, where a NULL reads NaN
+        and the validity mask tells it from a NaN value."""
+        d = table[DIFF].to_numpy()
         for i, c in enumerate(self.value_cols):
-            x = F.col(c).cast("double")
-            finite = F.when(F.abs(x) < F.lit(_INF), x)
-            exprs += [
-                F.sum(_obs_diff(x)).alias(f"n_{i}"),
-                count(F.isnan(x)).alias(f"nan_{i}"),
-                count(x == F.lit(_INF)).alias(f"pinf_{i}"),
-                count(x == F.lit(-_INF)).alias(f"ninf_{i}"),
-                F.sum(finite * F.col(DIFF)).alias(f"s1_{i}"),
-                F.sum(finite * finite * F.col(DIFF)).alias(f"s2_{i}"),
-            ]
-        return exprs
-
-    def _sums(self, df: DataFrame) -> tuple:
-        """ONE aggregate job over a signed frame, all k columns at once:
-        (min diff, (n, NaN, +inf, -inf, s1, s2)), one list per field."""
-        row = with_diff(df).agg(*self._sum_exprs()).first()
-        k = range(len(self.value_cols))
-        counts = tuple(
-            [int(row[f"{f}_{i}"] or 0) for i in k] for f in ("n", "nan", "pinf", "ninf")
-        )
-        sums = tuple([float(row[f"{f}_{i}"] or 0.0) for i in k] for f in ("s1", "s2"))
-        return row["min_diff"], counts + sums
-
-    def _stats(self) -> tuple:
-        return self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2
+            col = table[c].cast(pa.float64())
+            x, obs = col.to_numpy(), col.is_valid().to_numpy()
+            finite = np.isfinite(x)
+            xd = x[finite] * d[finite]
+            self._n[i] += int(d[obs].sum())
+            self._nan[i] += int(d[obs & np.isnan(x)].sum())
+            self._pinf[i] += int(d[x == _INF].sum())
+            self._ninf[i] += int(d[x == -_INF].sum())
+            self._s1[i] += float(xd.sum())
+            self._s2[i] += float((xd * x[finite]).sum())
 
     def _meta(self, n, nan, pinf, ninf, s1, s2) -> tuple:
         """Rounded (mean, var) per column, what the batch StandardScaler
@@ -196,184 +200,86 @@ class _ScalerEpochs(_DriverEpochs):
         return tuple(metas)
 
     def _current_meta(self) -> tuple:
-        return self._meta(*self._stats())
+        stats = (self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2)
+        return self._meta(*stats)
 
     def _restore_from_sink(self) -> None:
         """Driver-restart recovery: the running statistic lives in driver
         memory, so after a restart ``process_epoch`` would skip committed
         epochs without folding them. Rebuild the sums and last_meta
-        from the committed input prefix (one aggregate job, once)."""
+        from the committed input prefix (one pyarrow read, once)."""
         committed = self.input_sink.committed_epochs()
         self._folded_epochs = set(committed)
-        if not committed:
-            return
-        _, stats = self._sums(self.input_sink.read_all(self.spark))
-        self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2 = stats
-        self.last_meta = self._current_meta()
+        if committed:
+            self._fold(self._history())
+            self.last_meta = self._current_meta()
 
-    def _fold_batch(self, batch_df: DataFrame) -> tuple:
-        """Fold the batch's signed partial sums into the running
-        statistic and return the current (rounded) meta. n counts
-        OBSERVATIONS (see _sum_exprs)."""
-        min_diff, part = self._sums(batch_df)
-        self._last_batch_insert_only = (min_diff or 1) > 0
-        for acc, p in zip(self._stats(), part):
-            for i, v in enumerate(p):
-                acc[i] += v
-        return self._current_meta()
+    # -- history, consolidation and the pinned output projection ---------------
 
-    def _fold_rows(self, rows: list[tuple], schema: pa.Schema) -> tuple:
-        """Driver-lane twin of _fold_batch: fold collected row tuples (in
-        ``schema`` order) one by one, under the same observation rule."""
-        d_at = schema.get_field_index(DIFF)
-        at = [schema.get_field_index(c) for c in self.value_cols]
-        n, nan, pinf, ninf, s1, s2 = self._stats()
-        insert_only = True
-        for r in rows:
-            d = r[d_at]
-            insert_only = insert_only and d > 0
-            for i, j in enumerate(at):
-                if r[j] is None:
-                    continue
-                x = float(r[j])
-                n[i] += d
-                if x != x:
-                    nan[i] += d
-                elif x == _INF:
-                    pinf[i] += d
-                elif x == -_INF:
-                    ninf[i] += d
-                else:
-                    s1[i] += x * d
-                    s2[i] += x * x * d
-        self._last_batch_insert_only = insert_only
-        return self._current_meta()
-
-    # -- consolidated snapshot and the pinned output projection ----------------
-
-    def _consolidated(self) -> DataFrame:
-        """Net multiplicity per row INCLUDING net-zero rows (which
-        ``consolidate`` drops but we keep — they tombstone the outputs
-        of fully-retracted inputs)."""
-        df = with_diff(self.input_sink.read_all(self.spark).drop("epoch"))
-        return df.groupBy(*self._grain).agg(F.sum(DIFF).alias(DIFF))
-
-    def _affected(self, keys: DataFrame) -> DataFrame:
-        """The consolidated history of ``keys`` only, matched null-safely
-        (a NULL key is a key). O(snapshot). The distributed lane reads
-        it; the driver lane reads the same history with
-        ``read_keys_local``."""
-        hist = self._consolidated()
-        keys = keys.toDF(*[f"__key_{c}" for c in self.key_cols])
-        on = [hist[c].eqNullSafe(keys[f"__key_{c}"]) for c in self.key_cols]
-        return hist.join(keys, on=on, how="left_semi")
-
-    def _emit(self, df: DataFrame, meta: tuple) -> DataFrame:
-        """Encode under the pinned projection (*key_cols, *value_cols,
-        diff): the cascade paths encode _consolidated() (which has
-        exactly these columns) while the insert-only paths encode the
-        raw batch — without the select, output epochs would carry
-        path-dependent extra columns (e.g. event_time) and
-        read_current's schema would depend on which epoch's parquet
-        footer Spark samples."""
-        return self._encode(df.select(*self._grain, DIFF), meta)
-
-    def _emit_rows(self, rows: list[tuple], schema: pa.Schema, meta: tuple):
-        """Driver-lane twin of _emit: consolidate the rows (an
-        insert-only epoch's own rows, or a retraction's touched-key
-        history) on the grain and encode each net row, net-zero
-        tombstones included, into a pa.Table of the pinned projection.
-        The grain groups as Spark's groupBy does: NULLs form one group
-        and NaNs form one group."""
-        at = [schema.get_field_index(c) for c in self._grain]
-        d_at = schema.get_field_index(DIFF)
-        net: dict[tuple, int] = {}
-        for r in rows:
-            g = tuple(_NAN if r[j] != r[j] else r[j] for j in at)
-            net[g] = net.get(g, 0) + r[d_at]
-        k = len(self.key_cols)
-        out = [(*g, d, self._encode_row(g[k:], meta)) for g, d in net.items()]
+    def _history(self, keys: pa.Table | None = None, schema: pa.Schema | None = None):
+        """The committed input rows whose key is a row of ``keys`` (None:
+        every row), as (*key_cols, *value_cols, diff) in the types of
+        ``schema`` (None: those of the first committed epoch)."""
+        if schema is None:
+            first = self.input_sink.epoch_dir(self.input_sink.committed_epochs()[0])
+            schema = ds.dataset(first, format="parquet").schema
         fields = [schema.field(c) for c in (*self._grain, DIFF)]
-        return _table(out, pa.schema([*fields, self._out_field]))
+        return self.input_sink.read_keys_local(keys, pa.schema(fields))
 
-    def _write_state(self, epoch_id: int, state: DataFrame | None = None) -> None:
-        """Commit the whole consolidated input (``state``, by default
-        ``_consolidated()``) encoded under the current meta as the output
-        of ``epoch_id``: the DD cascade, O(snapshot) as the reference's
-        full re-transform, and the output of a replayed epoch. Dead keys
-        get their <=0 net rows as tombstones (the upsert view drops
-        them)."""
+    def _emit(self, table: pa.Table, meta: tuple) -> pa.Table:
+        """Consolidate ``table`` on the grain and encode each net row,
+        net-zero tombstones included (they tombstone the outputs of
+        fully-retracted inputs), into the pinned projection (*key_cols,
+        *value_cols, diff, encoder column). The grain groups as a Spark
+        GROUP BY does: NULLs form one group, NaNs form one group, and
+        -0.0 joins 0.0 (the + 0.0; pyarrow keeps them apart)."""
+        grain = [
+            pc.add(table[c], pa.scalar(0.0, table[c].type))
+            if pa.types.is_floating(table[c].type)
+            else table[c]
+            for c in self._grain
+        ]
+        net = (
+            pa.table([*grain, table[DIFF]], names=[*self._grain, DIFF])
+            .group_by(self._grain)
+            .aggregate([(DIFF, "sum")])
+            .select([*self._grain, f"{DIFF}_sum"])
+            .rename_columns([*self._grain, DIFF])
+        )
+        return net.append_column(self._out_field, self._encode(net, meta))
+
+    def _write_state(self, epoch_id: int) -> None:
+        """Commit the whole consolidated input encoded under the current
+        meta as the output of ``epoch_id``: the DD cascade, O(snapshot) as
+        the reference's full re-transform, and the output of a replayed
+        epoch. Dead keys get their <=0 net rows as tombstones (the upsert
+        view drops them)."""
         meta = self._current_meta()
         if meta != self.last_meta:
             # set before the write: a replay of a cascade whose output
             # write failed does not count it twice
             self.full_reencodes += 1
             self.last_meta = meta
-        if state is None:
-            state = self._consolidated()
-        self.output_sink.write_batch(self._emit(state, meta), epoch_id)
+        self.output_sink.write_batch_local(self._emit(self._history(), meta), epoch_id)
 
-    def _fold_and_emit(self, ep: DataFrame, epoch_id: int) -> None:
-        """Fold a committed input epoch and commit its output (O(batch)
-        aggregate job + the output write)."""
-        meta = self._fold_batch(ep)
-        self._folded_epochs.add(epoch_id)
-        insert_only = self._last_batch_insert_only
-        if meta != self.last_meta:
-            # first-ever epoch: the snapshot IS this batch — encode from
-            # the in-memory cache instead of re-scanning the parquet
-            # snapshot (saves a full input re-read at init, the
-            # reference's dominant init phase)
-            first = insert_only and self.input_sink.committed_epochs() == [epoch_id]
-            self._write_state(epoch_id, consolidate(ep, self._grain) if first else None)
-            return
-        if insert_only:
-            # inserts of (key, value) rows only touch their own keys;
-            # their net state is the batch itself. O(batch).
-            out = consolidate(ep, self._grain)
-        else:
-            # retraction-bearing batch with unchanged statistic: the
-            # touched keys' net state needs the history
-            out = self._affected(ep.select(*self.key_cols).dropDuplicates())
-        self.output_sink.write_batch(self._emit(out, meta), epoch_id)
+    # -- the lane ---------------------------------------------------------------
 
-    # -- driver lane ------------------------------------------------------------
-
-    def _process_small_epoch(
-        self, rows: list[tuple], schema: pa.Schema, epoch_id: int
-    ) -> None:
-        """The reference's per-row-update shape (``src/main.rs:306-374``:
-        single-row epochs at 1.45 ms in-process). A tiny delta, held as
-        row tuples in ``schema`` order, needs no distributed jobs: input
-        commit, statistic fold, the touched keys' history (for a
-        retraction), consolidation, and (when the rounded statistic is
-        unchanged) the output commit all happen driver-side — the
-        exactly-once layout is identical. Only a statistic CHANGE (the
-        DD cascade, O(snapshot) by design) goes distributed."""
-        diff = pa.field(DIFF, pa.int64())
-        if DIFF in schema.names:
-            schema = schema.set(schema.get_field_index(DIFF), diff)
-        else:
-            schema = schema.append(diff)
-            rows = [(*r, 1) for r in rows]
-        table = _table(rows, schema)
+    def _process(self, table: pa.Table, epoch_id: int) -> None:
+        """Commit ``table`` as the input epoch, fold it, and commit its
+        output: the whole state when the rounded statistic moved, else
+        this epoch's rows (inserts of (key, value) rows only touch their
+        own keys) or, for a retraction, the touched keys' history, this
+        epoch included. O(batch) unless the statistic moves."""
         self.input_sink.write_batch_local(table, epoch_id)
-        meta = self._fold_rows(rows, schema)
+        self._fold(table)
         self._folded_epochs.add(epoch_id)
-        if meta != self.last_meta:
+        if self._current_meta() != self.last_meta:
             self._write_state(epoch_id)
             return
-        if not self._last_batch_insert_only:
-            # the touched keys' net state needs their history: read it
-            # from the committed input epochs, this one included
-            hist = self.input_sink.read_keys_local(
-                table.select(self.key_cols),
-                pa.schema([schema.field(c) for c in (*self._grain, DIFF)]),
-            )
-            rows, schema = _rows(hist), hist.schema
-        self.output_sink.write_batch_local(
-            self._emit_rows(rows, schema, meta), epoch_id
-        )
+        rows = table.select([*self._grain, DIFF])
+        if pc.any(pc.less_equal(table[DIFF], 0)).as_py():
+            rows = self._history(table.select(self.key_cols), rows.schema)
+        self.output_sink.write_batch_local(self._emit(rows, self.last_meta), epoch_id)
 
     # -- replay (the hooks of _DriverEpochs._replayed) ----------------------------
 
@@ -381,57 +287,44 @@ class _ScalerEpochs(_DriverEpochs):
         """Same-process crash window BEFORE the statistic fold: the input
         epoch committed but this object's statistic never saw it (a
         restart re-folds it in _restore_from_sink). One pyarrow read of
-        the epoch, folded as the driver lane folds its rows."""
-        table = pq.read_table(
-            self.input_sink.epoch_dir(epoch_id), columns=[*self.value_cols, DIFF]
+        the epoch, folded as a live epoch is."""
+        self._fold(
+            pq.read_table(
+                self.input_sink.epoch_dir(epoch_id), columns=[*self.value_cols, DIFF]
+            )
         )
-        self._fold_rows(_rows(table), table.schema)
 
     def _resync(self) -> None:
         # both epochs committed: last_meta is the meta of the committed
         # output, _current_meta(). Restore it if anything left it stale,
-        # else the NEXT epoch's driver lane would encode new rows with a
-        # meta older than the committed snapshot
+        # else the NEXT epoch would encode new rows with a meta older
+        # than the committed snapshot
         self.last_meta = self._current_meta()
 
     # -- entry points -----------------------------------------------------------
 
     def process_epoch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch body."""
+        """foreachBatch body: the batch reaches the driver as one pa.Table
+        in its Arrow schema, through the size probe (at most
+        ``SMALL_EPOCH_ROWS`` rows) or ``toArrow()``, and takes the lane."""
         if self._replayed(epoch_id):
             return
-        if SMALL_EPOCH_ROWS:
-            rows = batch_df.limit(SMALL_EPOCH_ROWS + 1).collect()
-            if len(rows) <= SMALL_EPOCH_ROWS:
-                schema = to_arrow_schema(batch_df.schema)
-                self._process_small_epoch(rows, schema, epoch_id)
-                return
-        batch_df = with_diff(batch_df).persist()
-        try:
-            self.input_sink.write_batch(batch_df, epoch_id)
-            self._fold_and_emit(batch_df, epoch_id)  # O(batch), one aggregate job
-        finally:
-            batch_df.unpersist()
+        self._process(_with_diff(_arrival(batch_df)), epoch_id)
 
     def process_epoch_local(self, pdf, epoch_id: int) -> None:
         """Driver-local ingestion for callers that already hold the
         delta in-process as pandas (the reference's per-row shape) —
-        skips ``process_epoch``'s size probe (``limit(n).collect()``),
-        whose job launch dominates the single-row latency. Exactly-once
-        layout, replay, and crash-window repair are identical to
-        ``process_epoch``. The frame becomes a pa.Table once, here: a
-        NaN in a numpy float column becomes NULL (as pyarrow would
-        persist it), a NaN in a masked ``Float64`` column stays a NaN.
-        Timestamp columns must be tz-aware UTC. Deltas larger than
-        ``SMALL_EPOCH_ROWS`` go through ``process_epoch``."""
+        skips ``process_epoch``'s size probe, whose job launch dominates
+        the single-row latency, and starts no Spark job, whatever the
+        delta's size. Exactly-once layout, replay, and crash-window
+        repair are identical to ``process_epoch``. The frame becomes a
+        pa.Table once, here: a NaN in a numpy float column becomes NULL
+        (as pyarrow would persist it), a NaN in a masked ``Float64``
+        column stays a NaN. Timestamp columns must be tz-aware UTC."""
         if self._replayed(epoch_id):
             return
         table = pa.Table.from_pandas(pdf, preserve_index=False)
-        if not SMALL_EPOCH_ROWS or len(table) > SMALL_EPOCH_ROWS:
-            self.process_epoch(self.spark.createDataFrame(table), epoch_id)
-            return
-        schema = table.schema.remove_metadata()
-        self._process_small_epoch(_rows(table), schema, epoch_id)
+        self._process(_with_diff(table.replace_schema_metadata()), epoch_id)
 
     def current_output(self) -> DataFrame:
         """Live outputs: latest row per (*key_cols, *value_cols),
@@ -461,16 +354,9 @@ class IncrementalScalerPipeline(_ScalerEpochs):
     ):
         super().__init__(spark, workdir, key_cols, [value_col], round_to)
 
-    def _encode(self, df: DataFrame, meta: tuple) -> DataFrame:
+    def _encode(self, net: pa.Table, meta: tuple):
         ((mean, var),) = meta
-        return df.withColumn(
-            self._out_field.name,
-            standard_scale_expr(F.col(self.value_cols[0]), mean, var),
-        )
-
-    def _encode_row(self, values: tuple, meta: tuple):
-        ((mean, var),) = meta
-        return _scale(values[0], mean, var)
+        return _scaled(net[self.value_cols[0]], mean, var)
 
 
 class IncrementalMultiScalerPipeline(_ScalerEpochs):
@@ -484,9 +370,10 @@ class IncrementalMultiScalerPipeline(_ScalerEpochs):
     - the reference maintains one dataflow per encoder and assembles the
       feature vector through a left-deep chain of k−1 row-id joins (its
       paper names that chain the end-to-end bottleneck). Here ALL k
-      statistics fold in ONE aggregate job per epoch (3k+1 signed partial
-      sums in a single pass) and assembly is one ``F.array`` projection —
-      zero joins at any k.
+      statistics fold in one columnar pass per epoch (pyarrow sums of
+      every column of the epoch's table) and assembly builds one
+      ``list<double>`` array from the k scaled columns — zero joins at
+      any k.
     - re-encode granularity is the row: if ANY column's rounded (mean,
       var) moved, the assembled feature row changes, so the snapshot is
       re-encoded once (the reference re-emits per changed column; same
@@ -501,16 +388,16 @@ class IncrementalMultiScalerPipeline(_ScalerEpochs):
 
     _out_field = pa.field("features", pa.list_(pa.float64()))
 
-    def _encode(self, df: DataFrame, meta: tuple) -> DataFrame:
-        # columnar assembly: one array projection, zero joins
-        feats = F.array(
-            *[
-                standard_scale_expr(F.col(c), m, v)
-                for c, (m, v) in zip(self.value_cols, meta)
-            ]
+    def _encode(self, net: pa.Table, meta: tuple):
+        # the k value columns end to end, scaled in one pass: row i's k
+        # values, NULL elements kept, are elements [i * k, (i + 1) * k)
+        # of the transposed result
+        n, k = len(net), len(meta)
+        x = pa.chunked_array(
+            [ch for c in self.value_cols for ch in net[c].cast(pa.float64()).chunks],
+            pa.float64(),
         )
-        return df.withColumn(self._out_field.name, feats)
-
-    def _encode_row(self, values: tuple, meta: tuple) -> list:
-        # a NULL value is a NULL element, as in the distributed F.array
-        return [_scale(x, m, v) for x, (m, v) in zip(values, meta)]
+        mean, var = (np.repeat(v, n) for v in zip(*meta))
+        values = _scaled(x, mean, var).take(np.arange(n * k).reshape(k, n).T.ravel())
+        offsets = pa.array(np.arange(0, (n + 1) * k, k), pa.int32())
+        return pa.ListArray.from_arrays(offsets, values.combine_chunks())

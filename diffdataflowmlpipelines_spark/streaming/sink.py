@@ -116,13 +116,13 @@ class ExactlyOnceParquetSink:
         )
 
     def write_batch_local(self, table: pa.Table, epoch_id: int) -> None:
-        """Driver-local exactly-once commit for TINY epochs: the same
-        commit protocol, but the one part file is written in-process by
-        pyarrow — zero Spark jobs. This is the single-row-update fast
-        path (the reference's per-row epochs, ``src/main.rs:306-374``):
-        the commit layout and readers are unchanged, so replay
-        idempotence and read_current behave exactly as for Spark-written
-        epochs.
+        """Driver-local exactly-once commit of a table the driver holds:
+        the same commit protocol, but the one part file is written
+        in-process by pyarrow — zero Spark jobs. The driver-state
+        pipelines commit every epoch so (the reference's per-row epochs,
+        ``src/main.rs:306-374``, among them): the commit layout and
+        readers are unchanged, so replay idempotence and read_current
+        behave exactly as for Spark-written epochs.
 
         ``table``'s column order must match the Spark-written epochs.
         Timestamp columns must be tz-aware UTC: Spark-written epochs
@@ -313,12 +313,13 @@ class ExactlyOnceParquetSink:
             .parquet(*[self.epoch_dir(e) for e in epochs])
         )
 
-    def read_keys_local(self, keys: pa.Table, schema: pa.Schema) -> pa.Table:
+    def read_keys_local(self, keys: pa.Table | None, schema: pa.Schema) -> pa.Table:
         """Driver-local keyed read, zero Spark jobs: every committed row
-        whose ``key_cols`` tuple is a row of ``keys``, projected and cast
-        to ``schema``. It matches as a null-safe (``eqNullSafe``)
-        left-semi join on ``key_cols`` does: NULL matches NULL, as a NULL
-        group is a group; a NaN key matches NaN and -0.0 matches 0.0.
+        whose ``key_cols`` tuple is a row of ``keys`` (None: every
+        committed row), projected and cast to ``schema``. It matches as
+        a null-safe (``eqNullSafe``) left-semi join on ``key_cols``
+        does: NULL matches NULL, as a NULL group is a group; a NaN key
+        matches NaN and -0.0 matches 0.0.
 
         One pyarrow scan of the live epochs' part files pushes an
         ``isin`` per non-float key column down to the files. A float
@@ -333,16 +334,19 @@ class ExactlyOnceParquetSink:
             for name in sorted(os.listdir(self.epoch_dir(e)))
             if name.startswith("part-") and name.endswith(".parquet")
         ]
-        keys = keys.select(self.key_cols)
-        if not files or not len(keys):
+        if not files or (keys is not None and not len(keys)):
             return schema.empty_table()
+        dataset = ds.dataset(files, schema=schema, format="parquet")
+        if keys is None:
+            return dataset.to_table()
+        keys = keys.select(self.key_cols)
         floats = [c for c in self.key_cols if pa.types.is_floating(keys[c].type)]
         pushed = [
             pc.field(c).isin(pc.unique(keys[c]))
             for c in self.key_cols
             if c not in floats
         ]
-        table = ds.dataset(files, schema=schema, format="parquet").to_table(
+        table = dataset.to_table(
             filter=functools.reduce(operator.and_, pushed) if pushed else None
         )
         for c in floats:

@@ -1,6 +1,7 @@
 """Injected raises at the commit points of the driver-state epoch protocol
-(``sink._DriverEpochs``): the incremental scaler on both lanes, the
-multi-column scaler and ``DriverVocabularyPipeline``.
+(``sink._DriverEpochs``): the incremental scaler at both
+``SMALL_EPOCH_ROWS`` settings, the multi-column scaler and
+``DriverVocabularyPipeline``.
 
 Each case raises once at one commit point of an insert epoch, of a
 retraction epoch and of an epoch that moves the statistic, and replays
@@ -60,9 +61,9 @@ def _vocab(spark, workdir):
 
 # name -> (SMALL_EPOCH_ROWS, pipeline factory, its fold)
 PIPELINES = {
-    "scaler-driver": (64, _scaler, "_fold_rows"),
-    "scaler-distributed": (0, _scaler, "_fold_batch"),
-    "multi": (64, _multi, "_fold_rows"),
+    "scaler-driver": (64, _scaler, "_fold"),
+    "scaler-distributed": (0, _scaler, "_fold"),
+    "multi": (64, _multi, "_fold"),
     "vocab": (64, _vocab, "_apply"),
 }
 # a restarted object finds the epochs of a crashed fold on disk as a

@@ -210,10 +210,11 @@ def test_incremental_value_update_same_epoch_no_cascade(spark, tmp_path):
 
 
 def test_small_epoch_fast_path_lineage_and_replay(spark, tmp_path):
-    """Tiny epochs take the driver-local path (pyarrow-written commits,
-    lineage marked local); replaying a committed epoch is a no-op; the
-    output equals the batch oracle across mixed local/distributed
-    epochs."""
+    """Every epoch commits driver-locally (pyarrow-written commits,
+    lineage marked local), a tiny one collected by the size probe and
+    the 500-row epoch 0 read by toArrow() alike; replaying a committed
+    epoch is a no-op; the output equals the batch oracle across both
+    arrivals."""
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "pipe"), ["row_id"], "x", round_to=(-1, 0)
     )
@@ -224,12 +225,12 @@ def test_small_epoch_fast_path_lineage_and_replay(spark, tmp_path):
     ]
     for i, e in enumerate(epochs):
         pipe.process_epoch(spark.createDataFrame(e, SCHEMA), i)
-    # tiny epochs committed driver-locally (input AND output)
+    # every epoch committed driver-locally (input AND output)
     lin_in = {l["epoch"]: l for l in pipe.input_sink.lineage()}
     lin_out = {l["epoch"]: l for l in pipe.output_sink.lineage()}
     assert lin_in[1].get("local") and lin_in[2].get("local")
     assert lin_out[1].get("local") and lin_out[2].get("local")
-    assert not lin_in[0].get("local")
+    assert lin_in[0].get("local")
     # replay: same epoch again must change nothing
     n_before = pipe._n[0]
     pipe.process_epoch(spark.createDataFrame(epochs[1], SCHEMA), 1)
@@ -323,9 +324,8 @@ def test_same_process_replay_before_fold(spark, tmp_path, monkeypatch):
 
 def test_small_epoch_null_rows_not_dropped(spark, tmp_path):
     """A null-bearing row in a <=64-row epoch must flow through the
-    driver-local fast path like the distributed path would: pandas'
-    groupby default silently drops null-keyed rows and astype('int64')
-    crashes on a null key."""
+    lane like any other row: pandas' groupby default silently drops
+    null-keyed rows and astype('int64') crashes on a null key."""
     nullable = T.StructType(
         [
             T.StructField("row_id", T.LongType(), True),
@@ -397,9 +397,9 @@ def test_process_epoch_local_parity_and_replay(spark, tmp_path):
     assert (pb._n[0], pb._s1[0], pb._s2[0]) == stat
 
 
-def test_process_epoch_local_routes_large_delta_distributed(
-    spark, tmp_path, monkeypatch
-):
+def test_process_epoch_local_takes_a_large_delta(spark, tmp_path, monkeypatch):
+    """A delta above ``SMALL_EPOCH_ROWS`` takes process_epoch_local's
+    lane too: both epochs commit and every row is folded."""
     monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 8)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "p"), ["row_id"], "x",
@@ -452,10 +452,10 @@ def test_replay_restores_stale_last_meta(spark, tmp_path, monkeypatch):
 
 
 def test_nan_is_an_observation_on_both_folds(spark, tmp_path, monkeypatch):
-    """A NaN value is an observation that makes the statistic NaN, on
-    the distributed fold and on the driver-side fold alike, as in the
-    batch StandardScaler. Retracting it restores the finite statistic
-    of the rows without it."""
+    """A NaN value is an observation that makes the statistic NaN, as
+    in the batch StandardScaler, whether the epoch arrives through
+    toArrow() or the size probe. Retracting it restores the finite
+    statistic of the rows without it."""
     import math
 
     rows = [
@@ -530,9 +530,9 @@ def test_driver_lane_commits_what_the_distributed_lane_commits(
     """One <=64-row insert epoch with a NULL key, a NULL value, a NaN
     value and two NaN-valued rows of one key, after an epoch whose NaN
     already makes the statistic NaN (so the epoch keeps the meta and
-    its output is encoded on the lane under test). The driver lane
-    commits the same input and output rows, NULL and NaN included, with
-    the same Spark-read schemas, as the distributed lane."""
+    its output is encoded under it). The epoch commits the same input
+    and output rows, NULL and NaN included, with the same Spark-read
+    schemas, through the size probe as through toArrow()."""
     import math
 
     schema = "row_id long, x double"

@@ -215,9 +215,8 @@ def test_multicolumn_value_update_same_epoch(spark, tmp_path):
 
 def test_multi_small_epoch_null_value_rows(spark, tmp_path):
     """A null value in a <=64-row epoch must produce a NULL feature
-    element (the distributed F.array behavior), not crash the
-    driver-local _encode_pdf (float(None)) or get dropped by the pandas
-    consolidation."""
+    element (the batch F.array behavior), not crash the encode
+    (float(None)) or get dropped by the consolidation."""
     nullable = T.StructType(
         [T.StructField("row_id", T.LongType(), False)]
         + [T.StructField(c, T.DoubleType(), True) for c in COLS]

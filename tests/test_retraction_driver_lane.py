@@ -1,9 +1,9 @@
-"""Retraction epochs on the incremental scalers' driver lane: the touched
+"""Retraction epochs on the incremental scalers' one lane: the touched
 keys' history is read from the input sink with pyarrow
 (``ExactlyOnceParquetSink.read_keys_local``), so a retraction that keeps
-the rounded statistic starts no Spark job and commits what the
-distributed lane (``_affected``: a groupBy and a left-semi join)
-commits."""
+the rounded statistic starts no Spark job, and a batch commits the same
+rows whether it reaches the driver through the size probe or through
+``toArrow()``."""
 
 from __future__ import annotations
 
@@ -76,6 +76,16 @@ CASES = {
         # cross product of the touched keys must not reach the output
         [("a", 1, 0.0, 10.0, 0), ("b", 2, 0.0, 10.0, 0)],
     ),
+    "signed_zero_grain": (
+        {"key_cols": ["k"], "value_col": "x"},
+        "k double, x double, diff long",
+        [(float(i), v, d) for i, v, d in BASE],
+        # key 300.0 holds the values -0.0 and 0.0, and the float key
+        # -0.0 retracts the row of key 0.0
+        [(300.0, -0.0, 1), (300.0, 0.0, 1), (-0.0, 0.0, -1)],
+        # one net row per group, as Spark's groupBy merges -0.0 and 0.0
+        [(0.0, 0.0, 0), (300.0, 0.0, 2)],
+    ),
 }
 
 
@@ -109,8 +119,8 @@ def _batch_scaled(spark, rows: pd.DataFrame) -> dict:
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_retraction_lanes_commit_the_same_rows(spark, tmp_path, monkeypatch, case):
     """A retraction epoch that keeps the rounded statistic commits the
-    same input and output rows, with the same Spark-read schemas, on the
-    driver lane (``read_keys_local``) as on the distributed lane."""
+    same input and output rows, with the same Spark-read schemas, whether
+    it arrives through the size probe or through ``toArrow()``."""
     kwargs, schema, rows0, rows1, want = CASES[case]
 
     def committed(sink):
@@ -146,6 +156,46 @@ def test_single_row_retraction_starts_no_spark_job(spark, tmp_path, job_group):
     assert pipe.full_reencodes == 1
     assert pipe.output_sink.lineage()[1].get("local")
     assert 5 not in {r["row_id"] for r in pipe.current_output().collect()}
+
+
+def test_single_row_cascade_starts_no_spark_job(spark, tmp_path, job_group):
+    """process_epoch_local: a one-row insert that moves the rounded
+    statistic re-encodes the whole consolidated input with pyarrow
+    alone, and the live output equals the batch StandardScaler's."""
+    pipe = IncrementalScalerPipeline(
+        spark, str(tmp_path / "p"), ["row_id"], "x", round_to=(0, 0)
+    )
+    cols = ["row_id", "x", "diff"]
+    epochs = [BASE, [(200, 90.0, 1)]]
+    pipe.process_epoch_local(pd.DataFrame(epochs[0], columns=cols), 0)
+    with job_group("cascade") as jobs:
+        pipe.process_epoch_local(pd.DataFrame(epochs[1], columns=cols), 1)
+    assert jobs() == []
+    assert pipe.full_reencodes == 2
+    assert pq.read_table(pipe.output_sink.epoch_dir(1)).num_rows == 101
+    want = _batch_scaled(spark, pd.DataFrame([*BASE, *epochs[1]], columns=cols))
+    got = {(r["row_id"], r["x"]): r["scaled"] for r in pipe.current_output().collect()}
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k] == pytest.approx(want[k], rel=1e-9), k
+
+
+def test_file_backed_large_epoch_cost(spark, tmp_path, job_group):
+    """process_epoch on a file-backed batch above ``SMALL_EPOCH_ROWS``
+    starts the size probe's job and the toArrow() job and nothing else:
+    the fold, the cascade and both commits run in pyarrow."""
+    path = str(tmp_path / "batch")
+    base = spark.createDataFrame(BASE, "row_id long, x double, diff long")
+    base.coalesce(1).write.parquet(path)
+    pipe = IncrementalScalerPipeline(
+        spark, str(tmp_path / "p"), ["row_id"], "x", round_to=(0, 0)
+    )
+    batch = spark.read.parquet(path)
+    with job_group("large") as jobs:
+        pipe.process_epoch(batch, 0)
+    assert len(jobs()) == 2
+    assert pipe.full_reencodes == 1 and pipe._n == [len(BASE)]
+    assert all(r.get("local") for r in pipe.output_sink.lineage())
 
 
 def test_file_backed_single_row_epoch_cost(spark, tmp_path, job_group):

@@ -7,10 +7,10 @@ Spark 4 ANSI ``/`` instead THROWS on a 0.0 divisor; before
 standard_scale_expr was shared with streaming/incremental_transform.py
 both pipelines crashed mid-stream on any zero-variance epoch whose
 encode ran distributed (found in the round-5 streaming-core review).
-These tests pin: no crash on every encode lane (distributed cascade,
-driver-local scalar/Series, affected-keys), IEEE values matching the
-batch StandardScaler, and NaN-vs-NULL fidelity (computed NaN is a NaN
-VALUE in the sink, never collapsed to NULL).
+These tests pin: no crash on the cascade or on an epoch encoded under an
+unchanged meta, IEEE values matching the batch StandardScaler, and
+NaN-vs-NULL fidelity (computed NaN is a NaN VALUE in the sink, never
+collapsed to NULL).
 """
 
 from __future__ import annotations
@@ -41,9 +41,9 @@ def _same(a, b):
 
 
 def test_constant_column_distributed_cascade(spark, tmp_path, monkeypatch):
-    # SMALL_EPOCH_ROWS=0 forces every lane distributed: epoch 0 fits a
-    # constant column (var == 0.0 exactly) and the meta-changed cascade
-    # encodes through F.lit(0.0) — the shape that threw DIVIDE_BY_ZERO
+    # SMALL_EPOCH_ROWS=0 sends every batch through toArrow(): epoch 0
+    # fits a constant column (var == 0.0 exactly) and the meta-changed
+    # cascade divides by 0.0 — the shape that threw DIVIDE_BY_ZERO
     monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "p"), ["id"], "x"
@@ -92,10 +92,10 @@ def test_rounded_variance_collapses_to_zero_matches_batch(
 
 
 def test_small_epoch_scalar_lane_keeps_nan_value(spark, tmp_path, monkeypatch):
-    # driver-local lanes: first single-row epoch cascades distributed
-    # (meta changed), second identical row takes the insert-only SCALAR
-    # lane — its FloatingArray construction must keep the IEEE NaN as a
-    # VALUE (pd.array would silently collapse it to parquet NULL)
+    # the first single-row epoch cascades (meta changed), the second
+    # identical row is encoded under the unchanged meta — the IEEE NaN
+    # must stay a VALUE (pd.array would silently collapse it to parquet
+    # NULL)
     monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 64)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "p"), ["id"], "x"
@@ -110,7 +110,7 @@ def test_small_epoch_scalar_lane_keeps_nan_value(spark, tmp_path, monkeypatch):
     rows = {r["id"]: r for r in cur.collect()}
     # NaN, not NULL: isnan on a NULL would be NULL -> filter drops it
     assert rows[1]["scaled"] is not None and math.isnan(rows[1]["scaled"])
-    # a NULL input still encodes to NULL through the same scalar lane
+    # a NULL input still encodes to NULL
     pipe.process_epoch_local(
         pd.DataFrame({"id": pd.array([2], dtype="Int64"), "x": [None]}), 2
     )
@@ -119,8 +119,8 @@ def test_small_epoch_scalar_lane_keeps_nan_value(spark, tmp_path, monkeypatch):
 
 
 def test_small_epoch_series_lane_zero_variance(spark, tmp_path, monkeypatch):
-    # multi-row driver-local epoch (insert-only Series lane) under an
-    # unchanged zero-variance meta: inf above the mean, NaN at it
+    # multi-row insert-only epoch under an unchanged zero-variance
+    # meta: inf above the mean, NaN at it
     monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 64)
     pipe = IncrementalScalerPipeline(
         spark, str(tmp_path / "p"), ["id"], "x"
@@ -141,7 +141,7 @@ def test_small_epoch_series_lane_zero_variance(spark, tmp_path, monkeypatch):
 
 
 def test_multi_pipeline_constant_column(spark, tmp_path, monkeypatch):
-    # one constant column + one varying column through the F.array encode
+    # one constant column + one varying column through the list assembly
     monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     pipe = IncrementalMultiScalerPipeline(
         spark, str(tmp_path / "p"), ["id"], ["a", "b"]
@@ -171,7 +171,7 @@ def test_multi_pipeline_scalar_and_series_lanes(spark, tmp_path, monkeypatch):
         ),
         0,
     )
-    # insert-only scalar lane with unchanged meta: a stays constant at
+    # insert-only epoch with unchanged meta: a stays constant at
     # its mean (NaN), 9.0 sits above b's mean 2.0 with var 1.0
     pipe.process_epoch_local(
         pd.DataFrame(
@@ -185,9 +185,9 @@ def test_multi_pipeline_scalar_and_series_lanes(spark, tmp_path, monkeypatch):
     }
     assert math.isnan(out[2][0])  # constant column, x == mean -> IEEE NaN
     assert out[2][1] is None  # NULL input -> NULL element
-    # Series lane (multi-row epoch; a stays constant and the {1.0, 3.0}
-    # pair preserves b's mean 2 / var 1, so the meta is identical): NaN
-    # kept as a VALUE through the mask-based extraction, NULL from mask
+    # multi-row epoch (a stays constant and the {1.0, 3.0} pair
+    # preserves b's mean 2 / var 1, so the meta is identical): NaN kept
+    # as a VALUE, NULL as NULL
     pipe.process_epoch_local(
         pd.DataFrame(
             {

@@ -71,6 +71,10 @@ def bench_scaler(spark) -> dict:
             mkpdf(start, n), "row_id long, x double, diff long"
         )
 
+    fold_schema = pa.schema(
+        [("row_id", pa.int64()), ("x", pa.float64()), ("diff", pa.int64())]
+    )
+
     try:
         init_pdf = mkpdf(0, INIT_ROWS)
         init_df = spark.createDataFrame(init_pdf, "row_id long, x double, diff long")
@@ -124,44 +128,28 @@ def bench_scaler(spark) -> dict:
         # non-committing lane may follow): the reference's 1.0 s
         # 1e5-row update holds its collection trace in RAM and emits
         # re-encoded rows without durability. Apples-to-apples: the
-        # snapshot is pre-materialized in memory (localCheckpoint —
-        # the trace-in-RAM precondition, not part of the update), the
-        # batch likewise; the TIMED region is the same work the
-        # reference times — fold the batch into the statistic,
-        # consolidate trace ⊎ batch, re-encode every live row — run
-        # through the `noop` sink (full plan execution, zero I/O).
-        from pyspark.sql import functions as F
-
-        from diffdataflowmlpipelines_spark.operators.collection import (
-            with_diff,
-        )
-
-        snap = pipe._consolidated().localCheckpoint(eager=True)
+        # trace is read into driver memory once (pipe._history(), the
+        # trace-in-RAM precondition, not part of the update), the batch
+        # is built as a pa.Table likewise; the TIMED region is the same
+        # work the reference times — fold the batch into the statistic,
+        # consolidate trace ⊎ batch, re-encode every live row — with the
+        # pipeline's own _fold and _emit and no sink commit.
+        trace = pipe._history()
+        grain = [*pipe.key_cols, *pipe.value_cols, "diff"]
         # median of 3 reps, same convention as the single-row lanes:
         # each rep folds a FRESH 1e5-row batch against the same 1.1M-row
-        # trace (constant work per rep); the first rep additionally pays
-        # Spark's one-time whole-stage-codegen of this plan shape, which
-        # a deployment pays once per query lifetime, not per update —
-        # the median is the steady-state number, the max is disclosed.
+        # trace (constant work per rep); the max is disclosed.
         bulk_foldonly_secs = []
         for rep in range(3):
-            bulk2 = mkdf(
-                INIT_ROWS + N_UPDATES + (rep + 1) * BULK_ROWS, BULK_ROWS
-            ).localCheckpoint(eager=True)
-            t0 = time.time()
-            meta = pipe._fold_batch(bulk2)
-            net = (
-                snap.unionByName(
-                    with_diff(bulk2).select(
-                        *pipe.key_cols, *pipe.value_cols, "diff"
-                    )
-                )
-                .groupBy(*pipe.key_cols, *pipe.value_cols)
-                .agg(F.sum("diff").alias("diff"))
+            bulk2 = pa.Table.from_pandas(
+                mkpdf(INIT_ROWS + N_UPDATES + (rep + 1) * BULK_ROWS, BULK_ROWS),
+                schema=fold_schema,
+                preserve_index=False,
             )
-            pipe._emit(net, meta).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            t0 = time.time()
+            pipe._fold(bulk2)
+            both = pa.concat_tables([trace, bulk2.select(grain)])
+            pipe._emit(both, pipe._current_meta())
             bulk_foldonly_secs.append(time.time() - t0)
 
         # fold-only lane (run LAST; it advances the statistic without a
@@ -172,15 +160,15 @@ def bench_scaler(spark) -> dict:
         # without durability. The gap between this lane and the local
         # entry above IS the price of the two exactly-once parquet
         # commits per update.
-        fold_schema = pa.schema(
-            [("row_id", pa.int64()), ("x", pa.float64()), ("diff", pa.int64())]
-        )
         fold_ms = []
         for k in range(N_UPDATES):
-            rows = [(INIT_ROWS + 20_000 + k, float(rng.normal(100.0, 25.0)), 1)]
+            row = (INIT_ROWS + 20_000 + k, float(rng.normal(100.0, 25.0)), 1)
+            table = pa.Table.from_pylist(
+                [dict(zip(fold_schema.names, row))], schema=fold_schema
+            )
             t0 = time.time()
-            meta = pipe._fold_rows(rows, fold_schema)
-            pipe._emit_rows(rows, fold_schema, meta)
+            pipe._fold(table)
+            pipe._emit(table, pipe._current_meta())
             fold_ms.append((time.time() - t0) * 1000)
 
         return {
@@ -224,8 +212,8 @@ def bench_scaler(spark) -> dict:
 
 def bench_multi(spark) -> dict:
     """Diabetes shape: MULTI_COLS scalers, rounding (−2, −1), init
-    99.99%-style bulk epoch then single-row epochs — one aggregate job
-    per epoch for ALL columns, zero-join columnar assembly."""
+    99.99%-style bulk epoch then single-row epochs — one columnar fold
+    per epoch for ALL columns, zero-join list assembly."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -287,10 +275,13 @@ def bench_multi(spark) -> dict:
         fold_ms = []
         for k in range(N_UPDATES):
             values = [float(rng.normal(float(j), 0.5)) for j in range(len(cols))]
-            rows = [(MULTI_INIT_ROWS + 20_000 + k, *values, 1)]
+            row = (MULTI_INIT_ROWS + 20_000 + k, *values, 1)
+            table = pa.Table.from_pylist(
+                [dict(zip(fold_schema.names, row))], schema=fold_schema
+            )
             t0 = time.time()
-            meta = pipe._fold_rows(rows, fold_schema)
-            pipe._emit_rows(rows, fold_schema, meta)
+            pipe._fold(table)
+            pipe._emit(table, pipe._current_meta())
             fold_ms.append((time.time() - t0) * 1000)
 
         return {
@@ -312,9 +303,9 @@ def bench_multi(spark) -> dict:
             "reference_note": (
                 "pipeline_3_diabetes.rs:12-60 / paper Fig.3: DD loses to "
                 "sklearn end-to-end; bottleneck is the 21-way row-id join "
-                "to assemble vectors. This engine assembles with one "
-                "array projection (zero joins) and folds all 21 "
-                "statistics in one aggregate job per epoch."
+                "to assemble vectors. This engine assembles one list "
+                "array from the scaled columns (zero joins) and folds "
+                "all 21 statistics in one columnar pass per epoch."
             ),
         }
     finally:
