@@ -1,7 +1,8 @@
 """Pure-Python XXH64 matching Spark's ``F.xxhash64`` (seed 42) on
 string columns — ``DriverVocabularyPipeline`` routes every epoch's
-collected rows with it, to the shards ``incremental_vocabulary``'s
-``pmod(xxhash64(cast(token as string)))`` computes in Spark.
+collected rows with it, to the shards Spark's ``pmod(xxhash64(cast(token
+as string)), n_shards)`` computes: the rule perfbench's ``check_vocab``
+routes its oracle replay by.
 
 Spark's XxHash64 expression is the standard XXH64 algorithm over the
 UTF-8 bytes of the string (catalyst XXH64, little-endian strides of

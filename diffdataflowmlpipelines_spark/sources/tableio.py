@@ -1,36 +1,15 @@
-"""TableIO abstraction — batch/stream read and exactly-once write
-behind one interface (SURVEY.md §7.1 sink row).
-
-Production target is Iceberg (atomic snapshot commits give the
-(partition, epoch) idempotence natively via MERGE / overwrite-by-
-filter); this sandbox has no Iceberg jars or network, so the parquet
-implementation provides the same contract through the atomic-rename
-sink. ``IcebergTableIO`` carries the exact session config and write
-paths needed on a real cluster and raises cleanly here.
+"""Table I/O — batch/stream read and exactly-once write of named parquet
+tables under one root (SURVEY.md §7.1 sink row). The exactly-once write
+is the atomic-rename ``ExactlyOnceParquetSink``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 
 
-class TableIO:
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        raise NotImplementedError
-
-    def read_stream(self, spark: SparkSession, table: str, schema: T.StructType) -> DataFrame:
-        raise NotImplementedError
-
-    def exactly_once_sink(self, table: str, key_cols: list[str]):
-        """Returns an object with foreach_batch()/read_current()."""
-        raise NotImplementedError
-
-
-class ParquetTableIO(TableIO):
-    """Directory-per-table parquet implementation (sandbox + tests)."""
+class ParquetTableIO:
+    """Directory-per-table parquet implementation."""
 
     def __init__(self, root: str):
         self.root = root.rstrip("/")
@@ -53,53 +32,3 @@ class ParquetTableIO(TableIO):
 
     def exactly_once_sink(self, table: str, key_cols: list[str]) -> ExactlyOnceParquetSink:
         return ExactlyOnceParquetSink(f"{self.root}/{table}__sink", key_cols)
-
-
-# Iceberg session config for a real cluster (jars not present in this
-# sandbox). Catalog name 'ml' is arbitrary; point the warehouse at the
-# lake root.
-ICEBERG_CONF = {
-    "spark.sql.extensions": (
-        "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-    ),
-    "spark.sql.catalog.ml": "org.apache.iceberg.spark.SparkCatalog",
-    "spark.sql.catalog.ml.type": "hadoop",
-    # "spark.sql.catalog.ml.warehouse": "s3://<bucket>/warehouse",
-    "spark.jars.packages": "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0",
-}
-
-
-class IcebergTableIO(TableIO):
-    """Config-only Iceberg wiring: reads via the catalog, streaming
-    reads via Iceberg's incremental-snapshot stream, exactly-once via
-    overwrite-by-epoch MERGE. Raises in this sandbox (no jars)."""
-
-    def __init__(self, catalog: str = "ml", namespace: str = "pipeline"):
-        self.catalog, self.namespace = catalog, namespace
-
-    def _require(self, spark):
-        if "org.apache.iceberg" not in spark.conf.get("spark.sql.extensions", ""):
-            raise RuntimeError(
-                "Iceberg extensions not on the classpath; start the session "
-                "with ICEBERG_CONF (needs network/jars — not available in "
-                "this sandbox, parquet implementation is the tested path)"
-            )
-
-    def read(self, spark, table):
-        self._require(spark)
-        return spark.read.table(f"{self.catalog}.{self.namespace}.{table}")
-
-    def read_stream(self, spark, table, schema=None):
-        self._require(spark)
-        return (
-            spark.readStream.format("iceberg")
-            .option("stream-from-timestamp", "0")
-            .load(f"{self.catalog}.{self.namespace}.{table}")
-        )
-
-    def exactly_once_sink(self, table: str, key_cols: list[str]):
-        raise RuntimeError(
-            "use foreachBatch with MERGE INTO "
-            f"{self.catalog}.{self.namespace}.{table} keyed by "
-            f"{key_cols} + a committed-epoch audit table (cluster only)"
-        )

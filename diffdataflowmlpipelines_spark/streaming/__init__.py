@@ -31,7 +31,6 @@ from diffdataflowmlpipelines_spark.streaming.tokenizer import (
 )
 from diffdataflowmlpipelines_spark.streaming.cep import streaming_event_funnel
 from diffdataflowmlpipelines_spark.streaming.features import streaming_event_features
-from diffdataflowmlpipelines_spark.streaming.vocabulary import incremental_vocabulary
 from diffdataflowmlpipelines_spark.streaming.windows import (
     session_token_activity,
     sliding_token_frequency,
@@ -48,7 +47,6 @@ __all__ = [
     "StreamingTokenizerPipeline",
     "attach_progress_log",
     "incremental_scaler_stats",
-    "incremental_vocabulary",
     "label_join",
     "quant_params_from_stats",
     "salted_label_join",

@@ -1,14 +1,19 @@
 """Streaming dense CountVectorizer — the M3+M5 composition: the
-incremental sharded vocabulary (streaming/vocabulary.py, the reference's
-PositionAssignmentAggregate) feeds the dense bag-of-words encoding of
-the reference CountVectorizer (``count_vectorizer.rs:40-69``).
+incremental sharded vocabulary (``DriverVocabularyPipeline`` in
+streaming/vocabulary.py, the reference's PositionAssignmentAggregate)
+feeds the dense bag-of-words encoding of the reference CountVectorizer
+(``count_vectorizer.rs:40-69``).
 
 DD shares one arrangement between dataflows; the Spark analogue here is
 two queries sharing state THROUGH the exactly-once sink:
 
-  query A (stateful): token stream -> incremental_vocabulary -> vocab sink
-  query B (foreachBatch): same epochs -> join tokens against the vocab
+  query A (foreachBatch): token stream -> the vocabulary pipeline ->
+          its output sink
+  query B (foreachBatch): same epochs -> join tokens against that
           sink's CURRENT assignment -> dense count vector per doc
+
+A restarted object restores the dictionary from the pipeline's input
+sink, so query A resumes from its checkpoint with the same indices.
 
 B processes an epoch only after A committed it (the driver runs A then
 B per availableNow round), so every token a document carries is already
@@ -24,7 +29,7 @@ from pyspark.sql import functions as F
 
 from diffdataflowmlpipelines_spark.operators.collection import DIFF, with_diff
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
-from diffdataflowmlpipelines_spark.streaming.vocabulary import incremental_vocabulary
+from diffdataflowmlpipelines_spark.streaming.vocabulary import DriverVocabularyPipeline
 
 
 class StreamingCountVectorizer:
@@ -37,19 +42,16 @@ class StreamingCountVectorizer:
         binary: bool = False,
     ):
         self.spark = spark
-        self.n_shards = n_shards
         self.binary = binary
-        self.vocab_sink = ExactlyOnceParquetSink(f"{workdir}/vocab", ["token"])
+        self.vocab = DriverVocabularyPipeline(spark, f"{workdir}/vocab", n_shards=n_shards)
         self.vector_sink = ExactlyOnceParquetSink(f"{workdir}/vectors", ["doc_id"])
 
     # -- query A: vocabulary maintenance --------------------------------------
 
     def start_vocab_query(self, token_stream: DataFrame, ckpt: str):
-        """token_stream: (token, diff, event_time)."""
+        """token_stream: (token, diff, event_time), a str or int token."""
         return (
-            incremental_vocabulary(token_stream, n_shards=self.n_shards)
-            .writeStream.foreachBatch(self.vocab_sink.foreach_batch())
-            .outputMode("update")
+            token_stream.writeStream.foreachBatch(self.vocab.foreach_batch())
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -58,14 +60,14 @@ class StreamingCountVectorizer:
     # -- query B: encoding ------------------------------------------------------
 
     def current_vocab(self) -> DataFrame:
-        if not self.vocab_sink.committed_epochs():
+        if not self.vocab.output_sink.committed_epochs():
             # B outran A (explicitly allowed): no vocabulary yet — every
             # token routes to the overflow slot instead of crashing on
             # the empty sink
             return self.spark.createDataFrame(
                 [], "token string, idx long, vec_len long"
             )
-        cur = self.vocab_sink.read_current(self.spark)
+        cur = self.vocab.current_vocabulary()
         return cur.filter(F.col("idx") >= 0).select("token", "idx", "vec_len")
 
     def encode_batch(self, batch_df: DataFrame, epoch_id: int) -> None:

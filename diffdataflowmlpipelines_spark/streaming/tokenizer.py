@@ -3,8 +3,9 @@ INCREMENTALLY over a document stream: the streaming face of
 ``functions/bpe.tokenizer_pipeline`` (registry t20). Fixed learned BPE
 merges are applied as a pure Catalyst projection INSIDE the streaming
 plan (zero shuffle — the merge fold is an expression, not a join), the
-resulting unit stream feeds the incremental sharded vocabulary (C12,
-the reference's ``integer_assignment_aggregate.rs:43-95``), and a
+resulting unit stream feeds the incremental sharded vocabulary
+(``DriverVocabularyPipeline``, C12, the reference's
+``integer_assignment_aggregate.rs:43-95``), and a
 foreachBatch encode query maps each epoch's documents through the
 CURRENT unit assignment into the north-rule shape
 ``(doc_id, tokens array<int>, n_tok, source)``.
@@ -13,9 +14,9 @@ Two queries share state through the exactly-once sink — the DD
 shared-arrangement analogue, the same discipline as
 ``streaming/count_vectorizer.py``:
 
-  query A (stateful): doc stream -> explode words -> initial_symbols +
-          apply_merges (map-only) -> explode units ->
-          incremental_vocabulary -> unit-vocab sink
+  query A (foreachBatch): doc stream -> explode words ->
+          initial_symbols + apply_merges (map-only) -> explode units ->
+          the vocabulary pipeline -> its output sink
   query B (foreachBatch): same epochs -> batch ``bpe_encode`` (the
           distinct-word + hash-join fast path is legal inside
           foreachBatch) -> join units against the CURRENT assignment ->
@@ -24,7 +25,9 @@ shared-arrangement analogue, the same discipline as
 B processes an epoch only after A committed it (the driver alternates
 availableNow rounds); if B outruns A, a not-yet-assigned unit encodes
 as ``-1`` — the OrdinalEncoder unseen convention
-(``ordinal_encoder.rs``-parity surface) — instead of being dropped.
+(``ordinal_encoder.rs``-parity surface) — instead of being dropped. A
+restarted object restores the unit dictionary from the pipeline's input
+sink, so query A resumes from its checkpoint with the same ids.
 
 Contracts (pinned in tests/test_streaming_tokenizer.py):
 
@@ -59,9 +62,7 @@ from diffdataflowmlpipelines_spark.functions.bpe import (
 from diffdataflowmlpipelines_spark.functions.text import tokenize
 from diffdataflowmlpipelines_spark.operators.collection import DIFF, with_diff
 from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
-from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-    incremental_vocabulary,
-)
+from diffdataflowmlpipelines_spark.streaming.vocabulary import DriverVocabularyPipeline
 
 
 class StreamingTokenizerPipeline:
@@ -78,11 +79,10 @@ class StreamingTokenizerPipeline:
     ):
         self.spark = spark
         self.merges = list(merges)
-        self.n_shards = n_shards
         self.id_col = id_col
         self.text_col = text_col
         self.source_col = source_col
-        self.vocab_sink = ExactlyOnceParquetSink(f"{workdir}/units", ["token"])
+        self.vocab = DriverVocabularyPipeline(spark, f"{workdir}/units", n_shards=n_shards)
         self.token_sink = ExactlyOnceParquetSink(
             f"{workdir}/tokens", [id_col]
         )
@@ -93,10 +93,10 @@ class StreamingTokenizerPipeline:
         """(token, diff, event_time) BPE-unit stream — a map-only
         projection (tokenize split, per-codepoint symbols, the merge
         fold, two explodes), so it runs unchanged inside a streaming
-        plan with no shuffle before the vocabulary's own state exchange.
-        Keep learned merge tables handed to one expression modest (the
-        apply_merges depth note); streaming cannot checkpoint between
-        merge blocks the way batch ``bpe_encode`` does."""
+        plan with no shuffle. Keep learned merge tables handed to one
+        expression modest (the apply_merges depth note); streaming
+        cannot checkpoint between merge blocks the way batch
+        ``bpe_encode`` does."""
         docs = with_diff(docs)
         words = docs.select(
             F.explode(tokenize(self.text_col)).alias("word"),
@@ -113,11 +113,8 @@ class StreamingTokenizerPipeline:
 
     def start_vocab_query(self, docs_stream: DataFrame, ckpt: str):
         return (
-            incremental_vocabulary(
-                self.unit_stream(docs_stream), n_shards=self.n_shards
-            )
-            .writeStream.foreachBatch(self.vocab_sink.foreach_batch())
-            .outputMode("update")
+            self.unit_stream(docs_stream)
+            .writeStream.foreachBatch(self.vocab.foreach_batch())
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -126,11 +123,11 @@ class StreamingTokenizerPipeline:
     # -- query B: document encoding -------------------------------------------
 
     def current_units(self) -> DataFrame:
-        """(unit, __uid) live assignment from the vocab sink's upsert
+        """(unit, __uid) live assignment from the vocabulary's upsert
         view; empty frame (not a crash) when B outruns A entirely."""
-        if not self.vocab_sink.committed_epochs():
+        if not self.vocab.output_sink.committed_epochs():
             return self.spark.createDataFrame([], "unit string, __uid long")
-        cur = self.vocab_sink.read_current(self.spark)
+        cur = self.vocab.current_vocabulary()
         return cur.filter(F.col("idx") >= 0).select(
             F.col("token").alias("unit"), F.col("idx").alias("__uid")
         )

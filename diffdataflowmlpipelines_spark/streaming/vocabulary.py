@@ -1,6 +1,8 @@
 """Incremental vocabulary: the reference's PositionAssignmentAggregate
-(``src/types/integer_assignment_aggregate.rs``) as a sharded stateful
-streaming operator.
+(``src/types/integer_assignment_aggregate.rs``) as sharded dictionaries
+held in driver memory, ``DriverVocabularyPipeline``: the one
+incremental-vocabulary path of the package, which the streaming
+CountVectorizer and tokenizer drain their token streams into.
 
 Semantics ported (per shard):
 - value -> stable index assignment in arrival order (``:43-50``)
@@ -11,17 +13,13 @@ Semantics ported (per shard):
   (indices renumbered densely) and the length shrinks (``:84-93``)
 
 Architecture change vs the reference (deliberate, SURVEY.md §4): the
-reference keys the whole dictionary by a constant, serializing every
-update through one worker. Here the token space is hash-sharded across
-``n_shards`` state keys, and each shard assigns LOCAL indices; the
-global index is ``local * n_shards + shard`` — collision-free and dense
-up to shard imbalance, with zero cross-shard coordination. Determinism:
-within a micro-batch, rows are applied in (event_time, token) order, a
-NULL event_time last.
-
-``incremental_vocabulary`` (executor state) and
-``DriverVocabularyPipeline`` (driver state, pyarrow commits) share one
-per-shard fold on (event_time, token, diff) tuples, ``_apply_rows``.
+reference keeps one dictionary. Here the token space is hash-sharded
+across ``n_shards`` dictionaries by ``pmod(xxhash64(cast(token as
+string)), n_shards)``, and each shard assigns LOCAL indices; the global
+index is ``local * n_shards + shard`` — collision-free and dense up to
+shard imbalance, with zero cross-shard coordination. Determinism: within
+an epoch, rows are applied in (event_time, token) order, a NULL
+event_time last (``_apply_rows``, the one per-shard fold).
 
 Compression renumbers a shard's local indices densely over live values
 in sorted order (the reference renumbers in hash-map iteration order,
@@ -37,24 +35,16 @@ values only.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from datetime import datetime, timezone
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from diffdataflowmlpipelines_spark.functions.xxhash import spark_shard
 from diffdataflowmlpipelines_spark.streaming.sink import _DriverEpochs, _rows, _table
 
-VOCAB_STATE_SCHEMA = (
-    "tokens array<string>, local_idx array<long>, counts array<long>, "
-    "free array<long>, next_local long, length long"
-)
 VOCAB_OUTPUT_SCHEMA = pa.schema(
     [
         ("shard", pa.int32()),
@@ -77,8 +67,9 @@ _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 class ShardDict:
-    """Pure-python replica of the reference aggregate, for one shard.
-    Used both inside the stateful operator and as the test oracle."""
+    """Pure-python replica of the reference aggregate, for one shard:
+    the state ``DriverVocabularyPipeline`` holds per shard, and the
+    oracle of the tests and of perfbench's ``check_vocab``."""
 
     def __init__(self):
         self.val_to_index: dict[str, int] = {}
@@ -130,32 +121,6 @@ class ShardDict:
                 new_len = -int(-self.length * 0.66 // 1)  # ceil(len*0.66)
                 self.length = new_len if new_len < self.length else self.length - 1
 
-    # -- state (de)serialization -------------------------------------------
-
-    def to_state(self) -> tuple:
-        toks = sorted(self.val_to_count)
-        return (
-            toks,
-            [self.val_to_index.get(t, -1) for t in toks],
-            [self.val_to_count[t] for t in toks],
-            list(self.free),
-            self.next_index,
-            self.length,
-        )
-
-    @classmethod
-    def from_state(cls, row: tuple) -> "ShardDict":
-        d = cls()
-        toks, idxs, counts, free, next_local, length = row
-        for t, i, c in zip(toks, idxs, counts):
-            d.val_to_count[t] = int(c)
-            if i >= 0:
-                d.val_to_index[t] = int(i)
-        d.free = [int(x) for x in free]
-        d.next_index = int(next_local)
-        d.length = int(length)
-        return d
-
 
 def _entries(d: ShardDict, shard: int, tokens, n_shards: int) -> list[tuple]:
     """The (shard, token, idx, count, vec_len) emission tuples of
@@ -179,9 +144,8 @@ def _apply_rows(
 ) -> list[tuple]:
     """Apply one shard's (event_time, token, diff) rows in (event_time,
     token) order, a NULL event_time last, and return the emission
-    tuples of the tokens it touched. The one fold of the streaming
-    operator and the driver-state pipeline, so their emissions are
-    identical by construction."""
+    tuples of the tokens it touched: the one per-shard fold of the
+    vocabulary."""
     # snapshot assignments before the batch: a compression triggered
     # mid-batch renumbers live tokens that this batch never touched;
     # those must be re-emitted or the sink's upsert view keeps their
@@ -198,15 +162,16 @@ def _apply_rows(
 
 
 def _emission(rows: list[tuple]) -> pa.Table:
-    """Emission tuples -> the output table of both vocabulary paths."""
+    """Emission tuples -> the vocabulary's output table."""
     return _table(rows, VOCAB_OUTPUT_SCHEMA)
 
 
 def _apply_shard_batch(
     d: ShardDict, shard: int, pdf: pd.DataFrame, n_shards: int
 ) -> pd.DataFrame:
-    """``_apply_rows`` over a pandas frame of (token, diff, event_time)
-    columns, for the ``applyInPandasWithState`` boundary."""
+    """``_apply_rows`` over one shard's pandas frame of (token, diff,
+    event_time) columns: perfbench's ``check_vocab`` replays every epoch
+    through it as its oracle."""
     rows = [
         (None if pd.isna(t) else t, str(token), int(diff))
         for t, token, diff in zip(pdf["event_time"], pdf["token"], pdf["diff"])
@@ -214,86 +179,21 @@ def _apply_shard_batch(
     return _emission(_apply_rows(d, shard, rows, n_shards)).to_pandas()
 
 
-def _vocab_fn(n_shards: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        shard = int(key[0])
-        d = ShardDict.from_state(state.get) if state.exists else ShardDict()
-        chunks = list(pdfs)
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if chunks
-            else pd.DataFrame({"token": [], "diff": [], "event_time": []})
-        )
-        out = _apply_shard_batch(d, shard, batch, n_shards)
-        state.update(d.to_state())
-        yield out
-
-    return fn
-
-
-def _shard_keyed(df: DataFrame, n_shards: int, token_col: str) -> DataFrame:
-    """The sharding of ``incremental_vocabulary``: raw (token, diff,
-    event_time) rows -> (shard, token, diff, event_time), with shard =
-    pmod(xxhash64(string token), n_shards). ``DriverVocabularyPipeline
-    ._route`` computes the same rows in Python."""
-    # NULL tokens/diffs are not updates (str(None) would merge with a
-    # real token spelled 'None'; int(None) aborts the batch)
-    return df.filter(
-        F.col(token_col).isNotNull() & F.col("diff").isNotNull()
-    ).select(
-        # hash the STRING-cast token: the stored key is the string cast,
-        # and the driver pipeline's routing (_route) hashes
-        # XXH64(str(token)) — hashing the raw typed column would shard a
-        # LongType token differently than its stored string, splitting
-        # one token across two ShardDicts when paths mix
-        F.pmod(F.xxhash64(F.col(token_col).cast("string")), F.lit(n_shards))
-        .cast("int")
-        .alias("shard"),
-        F.col(token_col).cast("string").alias("token"),
-        F.col("diff").cast("long").alias("diff"),
-        F.col("event_time"),
-    )
-
-
-def incremental_vocabulary(
-    df: DataFrame, n_shards: int = 16, token_col: str = "token"
-) -> DataFrame:
-    """Stateful token->index assignment over a stream of
-    (token, diff, event_time). Emits per-batch updates
-    (shard, token, idx, count, vec_len); idx = -1 marks a freed value.
-    """
-    keyed = _shard_keyed(df, n_shards, token_col)
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _vocab_fn(n_shards),
-        outputStructType=from_arrow_schema(VOCAB_OUTPUT_SCHEMA),
-        stateStructType=VOCAB_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 class DriverVocabularyPipeline(_DriverEpochs):
-    """Latency-oriented driver-state twin of ``incremental_vocabulary``
-    (reference latency protocol ``src/main.rs:376-435``: 25 single-row
-    dictionary updates, constant-time in base size).
-
-    The stateful-streaming operator pays Spark's micro-batch machinery
-    per epoch (~0.7-2 s measured locally: state-store restore/commit,
-    WAL, python worker round trips) — 2-3 orders over the reference's
-    in-process 1.45 ms. This twin keeps the ``n_shards`` ShardDicts in
+    """The incremental vocabulary (reference latency protocol
+    ``src/main.rs:376-435``: 25 single-row dictionary updates,
+    constant-time in base size). It keeps the ``n_shards`` ShardDicts in
     DRIVER memory. Every epoch takes one lane: its rows (collected by
     ``process_epoch``, the epoch's ONE Spark job) are routed in Python
-    by the XXH64 twin of Spark's xxhash64, folded as tuples, and
-    committed as two pyarrow tables through the exactly-once sinks.
+    by an XXH64 that matches Spark's xxhash64, folded as tuples, and
+    committed as two pyarrow tables through the exactly-once sinks: the
+    routed rows to ``input_sink``, the emission rows (shard, token, idx,
+    count, vec_len; idx -1 marks a freed value) to ``output_sink``.
 
-    Scope trade (by design): the dictionary must fit the driver — true
-    for vocabularies up to ~10^7 entries; beyond that use
-    ``incremental_vocabulary``. Sharding, NULL filter, apply order and
-    emission rule are the streaming operator's, so outputs are
-    parity-equal row for row. A restart replays the committed input
-    prefix through the replay triage, with no Spark job.
+    Scope trade (by design): the dictionary must fit the driver, as the
+    reference's in-process aggregate fits its process — true for
+    vocabularies up to ~10^7 entries. A restart replays the committed
+    input prefix through the replay triage, with no Spark job.
     """
 
     def __init__(self, spark, workdir: str, n_shards: int = 4, token_col: str = "token"):
@@ -308,10 +208,12 @@ class DriverVocabularyPipeline(_DriverEpochs):
 
     def _route(self, rows, names: list[str]) -> list[tuple]:
         """Rows with the columns ``names`` -> the input sink's (shard,
-        token, diff, event_time) tuples, as ``_shard_keyed`` computes
-        them. Only a str or int token stringifies as Spark's
-        ``cast("string")`` does: any other raises TypeError. A missing
-        ``event_time`` column reads as the Unix epoch."""
+        token, diff, event_time) tuples, shard = Spark's
+        ``pmod(xxhash64(cast(token as string)), n_shards)``; a row with a
+        NULL token or diff is not an update and is dropped. Only a str or
+        int token stringifies as Spark's ``cast("string")`` does: any
+        other raises TypeError. A missing ``event_time`` column reads as
+        the Unix epoch."""
         tok_at, diff_at = names.index(self.token_col), names.index("diff")
         et_at = names.index("event_time") if "event_time" in names else None
         shard_of: dict[str, int] = {}

@@ -1,6 +1,7 @@
 """Injected raises at the commit points of the driver-state epoch protocol
-(``sink._DriverEpochs``): the incremental scaler at both
-``SMALL_EPOCH_ROWS`` settings, the multi-column scaler and
+(``sink._DriverEpochs``): the incremental scaler fed pandas frames and
+fed Spark batches through ``process_epoch``'s ``toArrow()`` arrival
+(``SMALL_EPOCH_ROWS = 0``), the multi-column scaler and
 ``DriverVocabularyPipeline``.
 
 Each case raises once at one commit point of an insert epoch, of a
@@ -59,12 +60,23 @@ def _vocab(spark, workdir):
     return DriverVocabularyPipeline(spark, workdir, n_shards=2)
 
 
-# name -> (SMALL_EPOCH_ROWS, pipeline factory, its fold)
+def _local(spark, pipe, frame, epoch_id):
+    pipe.process_epoch_local(frame, epoch_id)
+
+
+def _to_arrow(spark, pipe, frame, epoch_id):
+    """The frame as a Spark batch, which reaches the driver through
+    ``toArrow()`` under ``SMALL_EPOCH_ROWS = 0``."""
+    pipe.process_epoch(spark.createDataFrame(frame), epoch_id)
+
+
+# name -> (pipeline factory, its fold, how an epoch arrives); the
+# scaler-distributed row takes a Spark batch's toArrow() arrival
 PIPELINES = {
-    "scaler-driver": (64, _scaler, "_fold"),
-    "scaler-distributed": (0, _scaler, "_fold"),
-    "multi": (64, _multi, "_fold"),
-    "vocab": (64, _vocab, "_apply"),
+    "scaler-driver": (_scaler, "_fold", _local),
+    "scaler-distributed": (_scaler, "_fold", _to_arrow),
+    "multi": (_multi, "_fold", _local),
+    "vocab": (_vocab, "_apply", _local),
 }
 # a restarted object finds the epochs of a crashed fold on disk as a
 # crashed output write leaves them, so that pair is one case
@@ -162,13 +174,13 @@ def crash_free(spark, tmp_path_factory):
 
     def run(name: str):
         if name not in runs:
-            small, make, _ = PIPELINES[name]
+            make, _, feed = PIPELINES[name]
             with pytest.MonkeyPatch.context() as mp:
-                mp.setattr(incremental_transform, "SMALL_EPOCH_ROWS", small)
+                mp.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
                 pipe = make(spark, str(tmp_path_factory.mktemp(name)))
                 frames = _frames(name)
                 for i, frame in enumerate(frames):
-                    pipe.process_epoch_local(frame, i)
+                    feed(spark, pipe, frame, i)
                 live = _live(pipe)
             if name == "vocab":
                 # epoch 3 compresses a shard: it re-emits renumbered
@@ -188,20 +200,20 @@ def crash_free(spark, tmp_path_factory):
 def test_crash_at_a_commit_point_then_replay(
     spark, tmp_path, monkeypatch, crash_free, name, point, replay
 ):
-    small, make, fold = PIPELINES[name]
+    make, fold, feed = PIPELINES[name]
     live, full_reencodes = crash_free(name)
-    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", small)
+    monkeypatch.setattr(incremental_transform, "SMALL_EPOCH_ROWS", 0)
     workdir = str(tmp_path / "pipe")
     frames = _frames(name)
     pipe = make(spark, workdir)
-    pipe.process_epoch_local(frames[0], 0)
+    feed(spark, pipe, frames[0], 0)
     for i, frame in enumerate(frames[1:], start=1):
         _inject(pipe, point, fold)
         with pytest.raises(OSError, match="injected"):
-            pipe.process_epoch_local(frame, i)
+            feed(spark, pipe, frame, i)
         if replay == "restart":
             pipe = make(spark, workdir)
-        pipe.process_epoch_local(frame, i)
+        feed(spark, pipe, frame, i)
 
     assert _live(pipe) == live
     sum_diff = sum(

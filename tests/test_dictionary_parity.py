@@ -14,11 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from diffdataflowmlpipelines_spark.operators.encoders import fit_dictionary
-from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 from diffdataflowmlpipelines_spark.streaming.sources import EpochFileSource
-from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-    incremental_vocabulary,
-)
+from diffdataflowmlpipelines_spark.streaming.vocabulary import DriverVocabularyPipeline
 
 TOK_SCHEMA = T.StructType(
     [
@@ -56,14 +53,13 @@ def _epochs():
 def test_batch_first_seen_matches_streaming_vocabulary(spark, tmp_path):
     epochs = _epochs()
     src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["token"])
+    pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=1)
 
     for k, ep in enumerate(epochs):
         src.add_epoch(ep)
         q = (
-            incremental_vocabulary(src.stream(), n_shards=1)
-            .writeStream.foreachBatch(sink.foreach_batch())
-            .outputMode("update")
+            src.stream()
+            .writeStream.foreachBatch(pipe.foreach_batch())
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
             .start()
@@ -72,7 +68,7 @@ def test_batch_first_seen_matches_streaming_vocabulary(spark, tmp_path):
 
         streaming_map = {
             r["token"]: r["idx"]
-            for r in sink.read_current(spark).collect()
+            for r in pipe.current_vocabulary().collect()
             if r["idx"] >= 0
         }
 

@@ -1,6 +1,7 @@
 """M3: incremental vocabulary — reference PositionAssignmentAggregate
-policy (stable indices, hole reuse, x1.5/0.66 sizing) as a sharded
-stateful streaming op, asserted against a pure-python oracle replay."""
+policy (stable indices, hole reuse, x1.5/0.66 sizing) as sharded
+driver-held dictionaries fed by a stream, asserted against a pure-python
+oracle replay."""
 
 from __future__ import annotations
 
@@ -11,11 +12,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from diffdataflowmlpipelines_spark.streaming.sink import ExactlyOnceParquetSink
 from diffdataflowmlpipelines_spark.streaming.sources import EpochFileSource
 from diffdataflowmlpipelines_spark.streaming.vocabulary import (
+    DriverVocabularyPipeline,
     ShardDict,
-    incremental_vocabulary,
+    _apply_shard_batch,
 )
 from pyspark.sql import types as T
 
@@ -29,6 +30,19 @@ TOK_SCHEMA = T.StructType(
 NULLABLE_TOK_SCHEMA = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in TOK_SCHEMA.fields]
 )
+
+
+def _drain(src, pipe, ckpt) -> None:
+    """Drain every epoch file of ``src`` into ``pipe`` through one
+    availableNow foreachBatch query on checkpoint ``ckpt``."""
+    q = (
+        src.stream()
+        .writeStream.foreachBatch(pipe.foreach_batch())
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
 
 
 def test_shard_dict_reference_policy():
@@ -72,27 +86,15 @@ def _epochs():
 
 def test_incremental_vocabulary_stream(spark, tmp_path):
     src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["token"])
+    pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=1)
     epochs = _epochs()
-
-    def start():
-        return (
-            incremental_vocabulary(src.stream(), n_shards=1)
-            .writeStream.foreachBatch(sink.foreach_batch())
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-
     for ep in epochs:
         src.add_epoch(ep)
-    q = start()
-    q.awaitTermination(300)
+    _drain(src, pipe, str(tmp_path / "ckpt"))
 
     got = {
         r["token"]: (r["idx"], r["count"])
-        for r in sink.read_current(spark).collect()
+        for r in pipe.current_vocabulary().collect()
     }
 
     # oracle: replay the same updates through the pure-python reference model
@@ -125,18 +127,9 @@ def test_sharded_vocabulary_global_index_uniqueness(spark, tmp_path):
     src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
     for k in range(3):
         src.add_epoch(pdf.iloc[k * 200 : (k + 1) * 200])
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["token"])
-    q = (
-        incremental_vocabulary(src.stream(), n_shards=4)
-        .writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    cur = sink.read_current(spark)
-    rows = cur.collect()
+    pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=4)
+    _drain(src, pipe, str(tmp_path / "ckpt"))
+    rows = pipe.current_vocabulary().collect()
     live = [r for r in rows if r["idx"] >= 0]
     assert len(live) == 97
     assert len({r["idx"] for r in live}) == 97  # global uniqueness
@@ -168,22 +161,14 @@ def test_vocabulary_cross_batch_compression_reemits(spark, tmp_path):
     ep1 = mk(1, [(f"t{i}", -1) for i in range(5)])
 
     src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["token"])
+    pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=1)
     for ep in (ep0, ep1):
         src.add_epoch(ep)
-    q = (
-        incremental_vocabulary(src.stream(), n_shards=1)
-        .writeStream.foreachBatch(sink.foreach_batch())
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    _drain(src, pipe, str(tmp_path / "ckpt"))
 
     got = {
         r["token"]: (r["idx"], r["count"], r["vec_len"])
-        for r in sink.read_current(spark).collect()
+        for r in pipe.current_vocabulary().collect()
     }
     oracle = ShardDict()
     for ep in (ep0, ep1):
@@ -203,35 +188,26 @@ def test_vocabulary_cross_batch_compression_reemits(spark, tmp_path):
 
 
 def test_vocabulary_checkpoint_resume(spark, tmp_path):
-    """State (assignments, holes, free-list) must survive a query
-    restart from checkpoint: epoch 2 is processed by a NEW query and
-    must still reuse the index freed in epoch 1."""
+    """State (assignments, holes, free-list) must survive a restart:
+    epoch 2 is processed by a NEW query from the same checkpoint into a
+    NEW pipeline object on the same workdir, and must still reuse the
+    index freed in epoch 1."""
     src = EpochFileSource(spark, str(tmp_path / "src"), TOK_SCHEMA)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["token"])
+    workdir, ckpt = str(tmp_path / "drv"), str(tmp_path / "ckpt")
     epochs = _epochs()
-
-    def start():
-        return (
-            incremental_vocabulary(src.stream(), n_shards=1)
-            .writeStream.foreachBatch(sink.foreach_batch())
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
 
     src.add_epoch(epochs[0])
     src.add_epoch(epochs[1])
-    q = start()
-    q.awaitTermination(300)  # first run: assignments + pear freed
+    # first run: assignments + pear freed
+    _drain(src, DriverVocabularyPipeline(spark, workdir, n_shards=1), ckpt)
 
     src.add_epoch(epochs[2])
-    q = start()  # restart from checkpoint
-    q.awaitTermination(300)
+    pipe = DriverVocabularyPipeline(spark, workdir, n_shards=1)  # restart
+    _drain(src, pipe, ckpt)
 
     got = {
         r["token"]: (r["idx"], r["count"])
-        for r in sink.read_current(spark).collect()
+        for r in pipe.current_vocabulary().collect()
     }
     # identical expectations to the single-run test: resume preserved state
     assert got["kiwi"][0] == 1    # hole reuse from run 1 survives
@@ -240,16 +216,12 @@ def test_vocabulary_checkpoint_resume(spark, tmp_path):
 
 
 def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
-    """DriverVocabularyPipeline (latency twin: driver-held ShardDicts,
-    one Spark job per epoch) must emit row-for-row the SAME per-epoch
-    outputs as the applyInPandasWithState operator — same xxhash64
-    sharding, same apply order, same emission rule. The last epoch pins
-    the NULL rules: a NULL token is dropped and a NULL event_time is
-    applied after every timed row."""
-    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        DriverVocabularyPipeline,
-    )
-
+    """Each epoch a stream drains into DriverVocabularyPipeline commits,
+    row for row, the output of a replay of the same epochs through the
+    per-shard step ``_apply_shard_batch`` on ShardDicts, with shards
+    routed by Spark's own xxhash64 — the oracle of perfbench's
+    ``check_vocab``. The last epoch pins the NULL rules: a NULL token is
+    dropped and a NULL event_time is applied after every timed row."""
     t = datetime(2024, 1, 1, 0, 1)
     epochs = _epochs() + [
         pd.DataFrame(
@@ -264,44 +236,42 @@ def test_driver_vocabulary_parity_with_streaming_operator(spark, tmp_path):
     ]
     n_shards = 2
 
-    # streaming-operator run (per-epoch availableNow)
+    # one availableNow run per epoch
     src = EpochFileSource(spark, str(tmp_path / "src"), NULLABLE_TOK_SCHEMA)
-    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["shard", "token"])
-    for i, ep in enumerate(epochs):
-        src.add_epoch(ep)
-        q = (
-            incremental_vocabulary(src.stream(), n_shards=n_shards)
-            .writeStream.foreachBatch(sink.foreach_batch())
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    # driver-state run over the SAME epochs
     pipe = DriverVocabularyPipeline(
         spark, str(tmp_path / "drv"), n_shards=n_shards
     )
-    for i, ep in enumerate(epochs):
-        pipe.process_epoch(spark.createDataFrame(ep, NULLABLE_TOK_SCHEMA), i)
+    for ep in epochs:
+        src.add_epoch(ep)
+        _drain(src, pipe, str(tmp_path / "ckpt"))
 
-    def rows_of(sink_obj, e):
-        import pandas as pd  # noqa: F811
-
-        pdf = pd.read_parquet(sink_obj.epoch_dir(e))
+    def rows_of(pdf):
         return sorted(
             zip(pdf["shard"], pdf["token"], pdf["idx"], pdf["count"], pdf["vec_len"])
         )
 
-    # per-epoch emissions identical (streaming run may interleave an
-    # empty watermark-commit batch: compare epoch dirs that have rows)
-    stream_epochs = [
-        e for e in sink.committed_epochs() if rows_of(sink, e)
-    ]
-    for se, de in zip(stream_epochs, pipe.output_sink.committed_epochs()):
-        assert rows_of(sink, se) == rows_of(pipe.output_sink, de), (se, de)
-    last = {r[1]: r for r in rows_of(pipe.output_sink, len(epochs) - 1)}
+    def committed(e):
+        return rows_of(pd.read_parquet(pipe.output_sink.epoch_dir(e)))
+
+    assert pipe.output_sink.committed_epochs() == list(range(len(epochs)))
+    dicts = {s: ShardDict() for s in range(n_shards)}
+    shard = F.pmod(F.xxhash64(F.col("token").cast("string")), F.lit(n_shards))
+    for e, ep in enumerate(epochs):
+        keyed = (
+            spark.createDataFrame(ep, NULLABLE_TOK_SCHEMA)
+            .filter(F.col("token").isNotNull())
+            .withColumn("shard", shard.cast("int"))
+            .toPandas()
+        )
+        want = pd.concat(
+            [
+                _apply_shard_batch(dicts[s], s, g, n_shards)
+                for s, g in keyed.groupby("shard", sort=True)
+            ],
+            ignore_index=True,
+        )
+        assert committed(e) == rows_of(want), e
+    last = {r[1]: r for r in committed(len(epochs) - 1)}
     assert set(last) == {"date", "fig"}
     assert last["date"][0] == last["fig"][0] == 0
     assert last["fig"][2] < last["date"][2]
@@ -347,10 +317,6 @@ def test_driver_vocabulary_crash_window_repair(spark, tmp_path):
     must re-emit the epoch's output so the upsert view is complete."""
     import shutil as sh
 
-    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        DriverVocabularyPipeline,
-    )
-
     epochs = _epochs()
     pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=2)
     for i, ep in enumerate(epochs):
@@ -376,10 +342,6 @@ def test_driver_vocabulary_same_process_replay_before_apply(
     a replay on the SAME object: the epoch's diffs must be applied (the
     old path emitted full state from dictionaries that never saw the
     epoch and dropped its updates for the process lifetime)."""
-    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        DriverVocabularyPipeline,
-    )
-
     epochs = _epochs()
     pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=2)
     pipe.process_epoch(spark.createDataFrame(epochs[0], TOK_SCHEMA), 0)
@@ -422,10 +384,6 @@ def test_driver_vocab_long_tokens_route_identically(spark, tmp_path):
     path, corrupting the vocabulary under mixed usage. Both now hash
     the string cast."""
     import pandas as pd
-
-    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        DriverVocabularyPipeline,
-    )
 
     long_schema = T.StructType(
         [
@@ -486,10 +444,6 @@ def test_single_row_epoch_cost(spark, tmp_path, job_group, monkeypatch):
     ``collect()``, and makes a handful of py4j calls, where building a
     Spark plan per epoch makes hundreds; ``process_epoch_local`` starts
     no job, makes no py4j call and builds no pandas DataFrame."""
-    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        DriverVocabularyPipeline,
-    )
-
     pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=4)
     base = pd.concat(_epochs(), ignore_index=True)
     pipe.process_epoch(spark.createDataFrame(base, TOK_SCHEMA), 0)
@@ -536,10 +490,6 @@ def test_driver_vocab_route_types_and_default_event_time(spark, tmp_path):
     float or bool token raises before anything commits. A delta without
     an event_time column commits the Unix epoch (UTC)."""
     import pyarrow.parquet as pq
-
-    from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        DriverVocabularyPipeline,
-    )
 
     pipe = DriverVocabularyPipeline(spark, str(tmp_path / "drv"), n_shards=2)
     for tok in (1.5, True):

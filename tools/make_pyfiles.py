@@ -11,7 +11,6 @@ Produces dist/diffdataflowmlpipelines_spark.zip. Cluster launch:
     --conf spark.sql.adaptive.enabled=true \
     your_job.py
 
-(plus sources/tableio.py ICEBERG_CONF entries for Iceberg tables.)
 Streaming state stays on the JVM heap by default. A job whose state
 outgrows the executor heaps opts into RocksDB in the session it builds
 (``get_spark`` sets the provider, so a ``--conf`` for it is overridden):

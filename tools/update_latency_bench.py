@@ -315,19 +315,17 @@ def bench_multi(spark) -> dict:
 def bench_dict(spark) -> dict:
     """Reference harness mirror (src/main.rs:376-435): init `base` rows
     over 100 uniques, then 25 single-row updates (new unique every
-    20th). Measures the streaming incremental vocabulary's per-update
-    micro-batch execution time (triggerExecution from query progress,
-    isolating batch cost from availableNow query startup)."""
+    20th). Measures the incremental vocabulary's per-update micro-batch
+    execution time in a long-running stream (triggerExecution from query
+    progress, isolating batch cost from query startup), then the same
+    epochs through its foreachBatch body and its driver-local entry."""
     from datetime import datetime, timedelta
 
     import pandas as pd
 
-    from diffdataflowmlpipelines_spark.streaming.sink import (
-        ExactlyOnceParquetSink,
-    )
     from diffdataflowmlpipelines_spark.streaming.sources import EpochFileSource
     from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-        incremental_vocabulary,
+        DriverVocabularyPipeline,
     )
     from pyspark.sql import types as T
 
@@ -341,19 +339,12 @@ def bench_dict(spark) -> dict:
     t0_ts = datetime(2024, 1, 1)
     uniques, appends = 100, 25
     results = []
-    # tiny-epoch tuning: the stateful exchange pins state partitions =
-    # shuffle partitions at first query start; 32 state-store commits
-    # per 1-row batch is pure overhead. 4 shards of vocabulary state
-    # need exactly 4.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-      for base in DICT_BASES:
+    for base in DICT_BASES:
         work = tempfile.mkdtemp(prefix="latbench_dict_")
         q = None
         try:
             src = EpochFileSource(spark, f"{work}/src", schema)
-            sink = ExactlyOnceParquetSink(f"{work}/out", ["token"])
+            streamed = DriverVocabularyPipeline(spark, f"{work}/stream", n_shards=4)
 
             # ONE long-running query; per-update cost is measured by
             # processAllAvailable wall time (VERDICT r2: the per-epoch
@@ -361,9 +352,8 @@ def bench_dict(spark) -> dict:
             # deployment keeps the query alive, so the restart cost is
             # paid once, not per update).
             q = (
-                incremental_vocabulary(src.stream(), n_shards=4)
-                .writeStream.foreachBatch(sink.foreach_batch())
-                .outputMode("update")
+                src.stream()
+                .writeStream.foreachBatch(streamed.foreach_batch())
                 .option("checkpointLocation", f"{work}/ckpt")
                 .trigger(processingTime="0 seconds")
                 .start()
@@ -408,13 +398,8 @@ def bench_dict(spark) -> dict:
             q.stop()
             q = None
 
-            # driver-state twin (DriverVocabularyPipeline): same epochs
-            # driven through foreachBatch-style process_epoch — the
-            # latency path for dictionary-sized state
-            from diffdataflowmlpipelines_spark.streaming.vocabulary import (
-                DriverVocabularyPipeline,
-            )
-
+            # the same epochs through the foreachBatch body process_epoch
+            # called directly, with no stream around it
             pipe = DriverVocabularyPipeline(
                 spark, f"{work}/drv", n_shards=4
             )
@@ -424,7 +409,7 @@ def bench_dict(spark) -> dict:
             for i in range(appends):
                 # same epoch sequence as the streaming run above,
                 # including the every-20th NEW token (dictionary growth
-                # epochs) — the twin must pay identical workloads
+                # epochs) — both runs pay identical workloads
                 if i % 20 == 0:
                     drv_unique += 1
                     val = str(drv_unique)
@@ -510,10 +495,6 @@ def bench_dict(spark) -> dict:
             if q is not None:  # a failure must not leak a live query
                 q.stop()
             shutil.rmtree(work, ignore_errors=True)
-    finally:
-        # restore even on failure: later benches in the same session
-        # must not silently run with 4 shuffle partitions
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return {
         "bases": results,
         "appends": appends,
