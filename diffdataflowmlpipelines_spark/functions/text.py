@@ -25,11 +25,6 @@ def tokenize(text: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
 
 
-def token_count(text: Column | str) -> Column:
-    """Whitespace token count (cheap: no array materialization)."""
-    return F.size(tokenize(text)).cast("long")
-
-
 def bpe_ish_token_count(text: Column | str) -> Column:
     """Sub-word-ish token count: splits on whitespace AND
     letter/digit/punct boundaries (a regex approximation of BPE pre-

@@ -1,8 +1,8 @@
 """Streaming CEP: incremental event-funnel detection per key
 (streaming twin of functions/cep.event_funnel; north_rule "CEP engine").
 
-Stateful operator (``applyInPandasWithState`` keyed by the funnel key)
-that maintains, per key, the *candidate time lists* needed to recompute
+Stateful operator (a ``keyed_fold`` keyed by the funnel key) that
+maintains, per key, the *candidate time lists* needed to recompute
 the earliest-anchor cascade exactly — so it is robust to out-of-order
 arrival ACROSS micro-batches (a late-arriving earlier 'view' re-anchors
 the funnel and the emitted completion times move accordingly), not just
@@ -50,16 +50,16 @@ epochs, for any epoch split and cross-epoch arrival order.
 from __future__ import annotations
 
 import bisect
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
 from diffdataflowmlpipelines_spark.functions.cep import (
     funnel_cascade,
     prune_candidates,
 )
+from diffdataflowmlpipelines_spark.streaming.keyed_fold import keyed_fold
 
 
 def _state_schema(k: int) -> str:
@@ -71,7 +71,7 @@ def _output_schema(k: int, key_col: str, key_type: str) -> str:
     return f"{key_col} {key_type}, {steps}, steps_completed int"
 
 
-def _funnel_fn(steps: Sequence[str], within_us: int | None, key_col: str):
+def _funnel_fold(steps: Sequence[str], within_us: int | None):
     k = len(steps)
     # a repeated step type feeds EVERY slot with that type (batch parity:
     # the fold checks each slot's own element_at(steps, i+1))
@@ -79,33 +79,24 @@ def _funnel_fn(steps: Sequence[str], within_us: int | None, key_col: str):
     for i, s in enumerate(steps):
         slots_by_type.setdefault(s, []).append(i)
 
-    def fn(key, pdfs: Iterator[pd.DataFrame], state):
-        lists: list[list[int]] = (
-            [[int(v) for v in x] for x in state.get]
-            if state.exists
-            else [[] for _ in range(k)]
-        )
-        for pdf in pdfs:
-            # NaT would astype to -2^63 and poison the anchor min; the
-            # stateless select already filters nulls, this is defense
-            pdf = pdf[pdf["event_time"].notna()]
-            ts = pdf["event_time"].astype("datetime64[us]").astype("int64")
-            for t, ty in zip(ts, pdf["event_type"]):
-                for i in slots_by_type[ty]:
-                    bisect.insort(lists[i], int(t))
+    def fold(key, state, pdf):
+        lists = [[int(v) for v in x] for x in state or [[]] * k]
+        # NaT would astype to -2^63 and poison the anchor min; the
+        # stateless select already filters nulls, this is defense
+        pdf = pdf[pdf["event_time"].notna()]
+        ts = pdf["event_time"].astype("datetime64[us]").astype("int64")
+        for t, ty in zip(ts, pdf["event_type"]):
+            for i in slots_by_type[ty]:
+                bisect.insort(lists[i], int(t))
         comp = funnel_cascade(lists, within_us)
-        state.update(tuple(prune_candidates(lists, comp, within_us)))
+        new_state = tuple(prune_candidates(lists, comp, within_us))
         if comp[0] is None:
-            return  # batch parity: no row until the anchor exists
-        row = {key_col: key[0]}
-        for i in range(k):
-            row[f"step_{i + 1}_ts"] = (
-                pd.Timestamp(comp[i], unit="us") if comp[i] is not None else pd.NaT
-            )
-        row["steps_completed"] = sum(1 for t in comp if t is not None)
-        yield pd.DataFrame([row])
+            return new_state, []  # batch parity: no row until the anchor exists
+        steps_ts = [pd.NaT if c is None else pd.Timestamp(c, unit="us") for c in comp]
+        done = sum(1 for t in comp if t is not None)
+        return new_state, [(key[0], *steps_ts, done)]
 
-    return fn
+    return fold
 
 
 def streaming_event_funnel(
@@ -146,10 +137,10 @@ def streaming_event_funnel(
         F.col(type_col).alias("event_type"),
     )
     within_us = int(within_s) * 1_000_000 if within_s is not None else None
-    return keyed.groupBy("__cep_key").applyInPandasWithState(
-        _funnel_fn(steps, within_us, key_col),
-        outputStructType=_output_schema(k, key_col, key_type),
-        stateStructType=_state_schema(k),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        keyed,
+        "__cep_key",
+        _funnel_fold(steps, within_us),
+        state_schema=_state_schema(k),
+        output_schema=_output_schema(k, key_col, key_type),
     )

@@ -31,6 +31,7 @@ from diffdataflowmlpipelines_spark.functions.dedup import (
     lsh_band_buckets,
     minhash_signatures_rowwise,
 )
+from diffdataflowmlpipelines_spark.streaming.keyed_fold import keyed_fold
 
 
 def streaming_signatures(
@@ -128,7 +129,8 @@ def streaming_near_dup_candidates(
     return left.join(right, cond, "inner").select("a", "b", "a_time", "b_time")
 
 # --- online semantic dedup (streaming twin of functions/similarity.
-# semantic_dedup, the d10 SemDeDup operator) ---------------------------------
+# semantic_dedup, the d10 SemDeDup operator): a keyed_fold per centroid
+# cell, over each cell's micro-batch sorted once on __id --------------------
 
 SEMANTIC_OUTPUT_SCHEMA = "vec_id long, cluster_id long, keep int"
 SEMANTIC_STATE_SCHEMA = (
@@ -136,13 +138,12 @@ SEMANTIC_STATE_SCHEMA = (
 )
 
 
-def _semantic_fn(threshold: float, round_to: int):
-    def fn(key, pdfs, state):
+def _semantic_fold(threshold: float, round_to: int):
+    def fold(key, state, batch):
         import numpy as np
-        import pandas as pd
 
-        if state.exists:
-            ids, norms, vecs = state.get
+        if state is not None:
+            ids, norms, vecs = state
             ids = list(ids)
             norms = [float(n) for n in norms]
             vecs = [np.asarray(v, dtype=np.float64) for v in vecs]
@@ -150,49 +151,33 @@ def _semantic_fn(threshold: float, round_to: int):
             ids, norms, vecs = [], [], []
         kept = set(ids)
         out = []
-        # concat ALL Arrow chunks before the single global sort: a group
-        # larger than arrow.maxRecordsPerBatch arrives as several pdfs,
-        # and a per-chunk sort would make the greedy keep/drop verdicts
-        # depend on chunk boundaries (same bug class as the features
-        # fix — processing order must be a pure function of the batch
-        # CONTENT)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        batch = (
-            pd.concat(chunks, ignore_index=True).sort_values("__id")
-            if chunks
-            else None
-        )
-        if batch is not None:
-            # the outer loop is inherently sequential (greedy epsilon
-            # net: each keep changes the comparison set); the rep
-            # comparison inside is one vectorized matmul per arrival
-            for rid, vec in zip(batch["__id"], batch["__vec"]):
-                rid = int(rid)
-                if rid in kept:
-                    # replayed delivery of a kept vector: same verdict
-                    out.append((rid, int(key[0]), 1))
-                    continue
-                v = np.asarray(vec, dtype=np.float64)
-                vn = float(np.sqrt(v @ v))
-                dup = False
-                if vecs:
-                    cos = (np.stack(vecs) @ v) / (np.asarray(norms) * vn)
-                    dup = bool(np.any(np.round(cos, round_to) >= threshold))
-                if dup:
-                    out.append((rid, int(key[0]), 0))
-                else:
-                    ids.append(rid)
-                    norms.append(vn)
-                    vecs.append(v)
-                    kept.add(rid)
-                    out.append((rid, int(key[0]), 1))
-        state.update(
-            (ids, norms, [[float(x) for x in v] for v in vecs])
-        )
-        if out:
-            yield pd.DataFrame(out, columns=["vec_id", "cluster_id", "keep"])
+        # the outer loop is inherently sequential (greedy epsilon net:
+        # each keep changes the comparison set), over the batch in __id
+        # order; the rep comparison inside is one vectorized matmul per
+        # arrival
+        for rid, vec in zip(batch["__id"], batch["__vec"]):
+            rid = int(rid)
+            if rid in kept:
+                # replayed delivery of a kept vector: same verdict
+                out.append((rid, int(key[0]), 1))
+                continue
+            v = np.asarray(vec, dtype=np.float64)
+            vn = float(np.sqrt(v @ v))
+            dup = False
+            if vecs:
+                cos = (np.stack(vecs) @ v) / (np.asarray(norms) * vn)
+                dup = bool(np.any(np.round(cos, round_to) >= threshold))
+            if dup:
+                out.append((rid, int(key[0]), 0))
+            else:
+                ids.append(rid)
+                norms.append(vn)
+                vecs.append(v)
+                kept.add(rid)
+                out.append((rid, int(key[0]), 1))
+        return (ids, norms, [[float(x) for x in v] for v in vecs]), out
 
-    return fn
+    return fold
 
 
 def streaming_semantic_dedup(
@@ -249,8 +234,6 @@ def streaming_semantic_dedup(
     idempotency argument above. Streams needing banded recall should
     run the batch form over sink epochs.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from diffdataflowmlpipelines_spark.functions.similarity import (
         _nearest_assign,
         hyperplanes,
@@ -288,10 +271,11 @@ def streaming_semantic_dedup(
             "__sub", sign_signature(F.col("__vec"), planes)
         )
         group_cols = ["cluster_id", "__sub"]
-    return assigned.groupBy(*group_cols).applyInPandasWithState(
-        _semantic_fn(threshold, round_to),
-        outputStructType=SEMANTIC_OUTPUT_SCHEMA,
-        stateStructType=SEMANTIC_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        assigned,
+        group_cols,
+        _semantic_fold(threshold, round_to),
+        state_schema=SEMANTIC_STATE_SCHEMA,
+        output_schema=SEMANTIC_OUTPUT_SCHEMA,
+        order_by=("__id",),
     )

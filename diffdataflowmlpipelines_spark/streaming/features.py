@@ -7,64 +7,50 @@ the form that scales to unbounded history (the batch w9 uses a
 trailing-window closed form instead; the recursion here has no window
 to truncate and no overflow concern).
 
-Ordering: rows are applied in (event_time, event_id) order within each
-micro-batch; across batches the state is strictly sequential, so the
-operator assumes epoch-monotone event time like the incremental
-vocabulary does (the repo's epoch-file sources deliver that; a
+Each operator is a pure per-key fold run by ``keyed_fold``, which hands
+it the key's micro-batch sorted once on (event_time, event_id); across
+batches the state is strictly sequential, so the operator assumes
+epoch-monotone event time (the repo's epoch-file sources deliver that; a
 late-arriving earlier event would need the CEP-style candidate-buffer
 treatment instead, which these O(1) features deliberately trade away).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from diffdataflowmlpipelines_spark.streaming.keyed_fold import keyed_fold
 
 FEATURE_OUTPUT_SCHEMA = (
     "user_id long, event_id long, secs_since_prev long, event_seq long, "
     "ewma double"
 )
 FEATURE_STATE_SCHEMA = "last_us long, seq long, ewma double"
+# state threads sequentially through a key's batch in this order
+_ORDER = ("event_time", "event_id")
 
 
-def _features_fn(alpha: float):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state):
-        last_us, seq, ewma = state.get if state.exists else (None, 0, None)
+def _features_fold(alpha: float):
+    def fold(key, state, pdf):
+        last_us, seq, ewma = state or (None, 0, None)
         rows = []
-        # concatenate ALL Arrow chunks before the one global sort — a
-        # key whose batch spans multiple chunks (maxRecordsPerBatch)
-        # has no cross-chunk ordering guarantee, and state threads
-        # sequentially
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["event_time"].notna()]
-            pdf = pdf.sort_values(["event_time", "event_id"], kind="stable")
-            ts = pdf["event_time"].astype("datetime64[us]").astype("int64")
-            for t, eid, val in zip(ts, pdf["event_id"], pdf["value"]):
-                secs = (int(t) - last_us) // 1_000_000 if last_us is not None else -1
-                seq += 1
-                # a NULL value updates lag/seq but not the smoothed
-                # statistic (the batch w9 SUM skips NULLs the same way);
-                # float(NaN) folding in would poison the key forever
-                if not pd.isna(val):
-                    v = float(val)
-                    ewma = v if ewma is None else alpha * v + (1.0 - alpha) * ewma
-                rows.append((key[0], int(eid), secs, seq, ewma))
-                last_us = int(t)
-        state.update((last_us, seq, ewma))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id", "event_id", "secs_since_prev", "event_seq", "ewma",
-                ],
-            )
+        pdf = pdf[pdf["event_time"].notna()]
+        ts = pdf["event_time"].astype("datetime64[us]").astype("int64")
+        for t, eid, val in zip(ts, pdf["event_id"], pdf["value"]):
+            secs = (int(t) - last_us) // 1_000_000 if last_us is not None else -1
+            seq += 1
+            # a NULL value updates lag/seq but not the smoothed
+            # statistic (the batch w9 SUM skips NULLs the same way);
+            # float(NaN) folding in would poison the key forever
+            if not pd.isna(val):
+                v = float(val)
+                ewma = v if ewma is None else alpha * v + (1.0 - alpha) * ewma
+            rows.append((key[0], int(eid), secs, seq, ewma))
+            last_us = int(t)
+        return (last_us, seq, ewma), rows
 
-    return fn
+    return fold
 
 
 def streaming_event_features(
@@ -87,12 +73,14 @@ def streaming_event_features(
         F.col(id_col).cast("long").alias("event_id"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        _features_fn(alpha),
-        outputStructType=FEATURE_OUTPUT_SCHEMA,
-        stateStructType=FEATURE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        keyed,
+        "user_id",
+        _features_fold(alpha),
+        state_schema=FEATURE_STATE_SCHEMA,
+        output_schema=FEATURE_OUTPUT_SCHEMA,
+        order_by=_ORDER,
+        mode="append",
     )
 
 
@@ -123,10 +111,10 @@ def _walk_features(frozen, live, alpha):
     return out, (last_us, seq, ewma)
 
 
-def _retract_fn(alpha: float, horizon_us: int | None):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state):
-        if state.exists:
-            f_us, f_seq, f_ewma, ts, eids, vals = state.get
+def _retract_fold(alpha: float, horizon_us: int | None):
+    def fold(key, state, pdf):
+        if state is not None:
+            f_us, f_seq, f_ewma, ts, eids, vals = state
             frozen = (
                 None if f_us is None else int(f_us),
                 int(f_seq),
@@ -143,32 +131,26 @@ def _retract_fn(alpha: float, horizon_us: int | None):
             frozen, [(t, e, v) for e, (t, v) in buf.items()], alpha
         )
 
-        chunks = [c for c in pdfs if len(c)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            pdf = pdf[pdf["event_time"].notna()]
-            pdf = pdf.sort_values(["event_time", "event_id"], kind="stable")
-            tus = pdf["event_time"].astype("datetime64[us]").astype("int64")
-            for t, eid, v, d in zip(
-                tus, pdf["event_id"], pdf["value"], pdf["diff"]
-            ):
-                eid, d = int(eid), int(d)
-                if d > 0:
-                    # inserts AT or BEHIND the frozen prefix are ignored
-                    # like late deletes: the prefix's emissions are
-                    # final, and walking such an event from frozen_us
-                    # would produce a negative lag and a wrong ordinal.
-                    # <= not <: an insert tied with the last frozen
-                    # event's time may belong before it in (t, eid)
-                    # order, which no replay from frozen state can honor
-                    if frozen[0] is not None and int(t) <= frozen[0]:
-                        continue
-                    buf[eid] = (int(t), None if pd.isna(v) else float(v))
-                elif d < 0:
-                    # deletes of never-inserted or already-frozen events
-                    # are ignored (the frozen prefix is this operator's
-                    # watermark: corrections inside the horizon only)
-                    buf.pop(eid, None)
+        pdf = pdf[pdf["event_time"].notna()]
+        tus = pdf["event_time"].astype("datetime64[us]").astype("int64")
+        for t, eid, v, d in zip(tus, pdf["event_id"], pdf["value"], pdf["diff"]):
+            eid, d = int(eid), int(d)
+            if d > 0:
+                # inserts AT or BEHIND the frozen prefix are ignored
+                # like late deletes: the prefix's emissions are
+                # final, and walking such an event from frozen_us
+                # would produce a negative lag and a wrong ordinal.
+                # <= not <: an insert tied with the last frozen
+                # event's time may belong before it in (t, eid)
+                # order, which no replay from frozen state can honor
+                if frozen[0] is not None and int(t) <= frozen[0]:
+                    continue
+                buf[eid] = (int(t), None if pd.isna(v) else float(v))
+            elif d < 0:
+                # deletes of never-inserted or already-frozen events
+                # are ignored (the frozen prefix is this operator's
+                # watermark: corrections inside the horizon only)
+                buf.pop(eid, None)
 
         new, _ = _walk_features(
             frozen, [(t, e, v) for e, (t, v) in buf.items()], alpha
@@ -197,30 +179,15 @@ def _retract_fn(alpha: float, horizon_us: int | None):
                     del buf[e]
 
         items = sorted(buf.items(), key=lambda kv: (kv[1][0], kv[0]))
-        state.update(
-            (
-                frozen[0],
-                frozen[1],
-                frozen[2],
-                [t for _e, (t, _v) in items],
-                [e for e, _tv in items],
-                [v for _e, (_t, v) in items],
-            )
+        new_state = (
+            *frozen,
+            [t for _e, (t, _v) in items],
+            [e for e, _tv in items],
+            [v for _e, (_t, v) in items],
         )
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id",
-                    "event_id",
-                    "secs_since_prev",
-                    "event_seq",
-                    "ewma",
-                    "deleted",
-                ],
-            )
+        return new_state, rows
 
-    return fn
+    return fold
 
 
 def streaming_event_features_retractable(
@@ -270,10 +237,11 @@ def streaming_event_features_retractable(
         F.col(diff_col).cast("int").alias("diff"),
     )
     horizon_us = int(horizon_s) * 1_000_000 if horizon_s is not None else None
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        _retract_fn(alpha, horizon_us),
-        outputStructType=RETRACT_OUTPUT_SCHEMA,
-        stateStructType=RETRACT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        keyed,
+        "user_id",
+        _retract_fold(alpha, horizon_us),
+        state_schema=RETRACT_STATE_SCHEMA,
+        output_schema=RETRACT_OUTPUT_SCHEMA,
+        order_by=_ORDER,
     )

@@ -22,8 +22,9 @@ Every epoch is one pa.Table on the driver (driven per micro-batch from
            unchanged -> encode this epoch's rows (an insert-only epoch)
                         or its touched keys' history (a retraction)
 
-Each step has one pyarrow implementation: ``_fold`` (``pyarrow.compute``
-sums), ``_emit`` (``Table.group_by`` on the grain, then the encoder's
+Each step has one implementation: ``_fold`` (the statistic of
+``streaming/stats.py``, shared with ``incremental_scaler_stats``),
+``_emit`` (``Table.group_by`` on the grain, then the encoder's
 vectorized ``_encode``) and the input sink's ``read_keys_local``, which
 reads the touched keys' history, the cascade's whole input and a
 restart's restore. ``SMALL_EPOCH_ROWS`` only chooses how a Spark batch
@@ -49,8 +50,6 @@ the reference's incremental-update trace oracle (FIXTURES.md F3).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -62,19 +61,13 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from diffdataflowmlpipelines_spark.operators.collection import DIFF
 from diffdataflowmlpipelines_spark.streaming.sink import _DriverEpochs, _table
-from diffdataflowmlpipelines_spark.streaming.stats import _round_to
+from diffdataflowmlpipelines_spark.streaming.stats import fold, meta
 
 # a Spark batch of at most this many rows reaches the driver through the
 # size probe ``limit(n + 1).collect()`` (7.4 ms on a 1-row local relation
 # against toArrow()'s 17.5, 4-core host), a larger one through
 # ``toArrow()``. 0 sends every batch through toArrow().
 SMALL_EPOCH_ROWS = 64
-
-_NAN, _INF = float("nan"), float("inf")
-# the one NaN object of every non-finite meta: a tuple compares its
-# elements by identity first, so an unchanged non-finite statistic
-# compares equal and triggers no re-encode
-_NAN_META = (_NAN, _NAN)
 
 
 def _arrival(batch_df: DataFrame) -> pa.Table:
@@ -149,59 +142,27 @@ class _ScalerEpochs(_DriverEpochs):
         # BATCH's partial sums, so a single-row update costs O(batch),
         # not O(snapshot)
         k = len(self.value_cols)
-        self._n, self._nan, self._pinf, self._ninf = ([0] * k for _ in range(4))
-        self._s1, self._s2 = [0.0] * k, [0.0] * k
+        self._stats = (*([0] * k for _ in range(4)), [0.0] * k, [0.0] * k)
+        self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2 = self._stats
         self._restore_from_sink()
 
     # -- statistic ------------------------------------------------------------
 
     def _fold(self, table: pa.Table) -> None:
-        """Fold a signed table's partial sums of every value column into
-        the running statistic, under the batch StandardScaler's rule
-        (operators/collection._obs_diff): a NULL is not an observation;
-        a NaN or an infinity is one. NaNs and infinities are counted
-        apart and kept out of s1/s2, which they would poison for good (a
-        retraction cannot subtract inf or NaN back out). The sums run in
-        numpy over each column's Arrow buffer, where a NULL reads NaN
-        and the validity mask tells it from a NaN value."""
+        """Fold a signed table's deltas of every value column into the
+        running statistic (``stats.fold``). The sums run in numpy over
+        each column's Arrow buffer, where a NULL reads NaN and the
+        validity mask tells it from a NaN value."""
         d = table[DIFF].to_numpy()
         for i, c in enumerate(self.value_cols):
             col = table[c].cast(pa.float64())
-            x, obs = col.to_numpy(), col.is_valid().to_numpy()
-            finite = np.isfinite(x)
-            xd = x[finite] * d[finite]
-            self._n[i] += int(d[obs].sum())
-            self._nan[i] += int(d[obs & np.isnan(x)].sum())
-            self._pinf[i] += int(d[x == _INF].sum())
-            self._ninf[i] += int(d[x == -_INF].sum())
-            self._s1[i] += float(xd.sum())
-            self._s2[i] += float((xd * x[finite]).sum())
-
-    def _meta(self, n, nan, pinf, ninf, s1, s2) -> tuple:
-        """Rounded (mean, var) per column, what the batch StandardScaler
-        returns: NaN for a column without observations or with a live
-        NaN; a live +inf (-inf) makes the mean +inf (-inf) and the
-        variance inf - inf = NaN; both signs make both NaN. Only finite
-        values are rounded."""
-        metas = []
-        for ni, ki, pi, mi, a, b in zip(n, nan, pinf, ninf, s1, s2):
-            if ni <= 0 or ki > 0 or (pi > 0 and mi > 0):
-                metas.append(_NAN_META)
-            elif pi > 0 or mi > 0:
-                metas.append((_INF if pi > 0 else -_INF, _NAN))
-            else:
-                mean = a / ni
-                var = b / ni - mean * mean
-                if self.round_to:
-                    rm, rv = self.round_to
-                    mean = _round_to(mean, rm) if math.isfinite(mean) else mean
-                    var = _round_to(var, rv) if math.isfinite(var) else var
-                metas.append((mean, var))
-        return tuple(metas)
+            delta = fold(col.to_numpy(), col.is_valid().to_numpy(), d)
+            for acc, v in zip(self._stats, delta):
+                acc[i] += v
 
     def _current_meta(self) -> tuple:
-        stats = (self._n, self._nan, self._pinf, self._ninf, self._s1, self._s2)
-        return self._meta(*stats)
+        """Rounded (mean, var) per column (``stats.meta``)."""
+        return tuple(meta(*s, self.round_to) for s in zip(*self._stats))
 
     def _restore_from_sink(self) -> None:
         """Driver-restart recovery: the running statistic lives in driver

@@ -1,6 +1,6 @@
 """Streaming sequence packing — the stateful twin of
 ``functions/packing.pack_sequences``: a running token offset per source
-maintained in ``applyInPandasWithState``, so every arriving document is
+maintained as a ``keyed_fold`` state, so every arriving document is
 assigned its (chunk, chunk_offset) in the 512-token concat-and-split
 layout the trainer consumes, incrementally, exactly-once.
 
@@ -20,11 +20,9 @@ State is ONE long per stratum (the cumulative token count) — bounded by
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from diffdataflowmlpipelines_spark.streaming.keyed_fold import keyed_fold
 
 PACK_OUTPUT_SCHEMA = (
     "source string, doc_id string, n_tok long, chunk long, chunk_offset long"
@@ -32,26 +30,17 @@ PACK_OUTPUT_SCHEMA = (
 PACK_STATE_SCHEMA = "cum long"
 
 
-def _pack_fn(budget: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cum = int(state.get[0]) if state.exists else 0
-        chunks = list(pdfs)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-        else:
-            pdf = pd.DataFrame(
-                {"source": [], "doc_id": [], "n_tok": [], "event_time": []}
-            )
-        if len(pdf) and pdf["n_tok"].isna().any():
+def _pack_fold(budget: int):
+    def fold(key, state, pdf):
+        cum = int(state[0]) if state else 0
+        if pdf["n_tok"].isna().any():
             # NaN < 0 is False, so a NULL length would slip past the
             # insert-only guard and crash the int cast below with an
             # error that never names the contract
             raise ValueError("packing requires non-null n_tok")
-        if len(pdf) and (pdf["n_tok"] < 0).any():
+        if (pdf["n_tok"] < 0).any():
             raise ValueError("packing is insert-only; negative n_tok row seen")
-        if len(pdf) and "diff" in pdf.columns and (
+        if "diff" in pdf.columns and (
             pdf["diff"].isna().any() or (pdf["diff"] != 1).any()
         ):
             # the honest contract is diff == 1 exactly: diff<=0 rows are
@@ -65,22 +54,18 @@ def _pack_fn(budget: int):
                 " required); retraction (diff <= 0), consolidated"
                 " (diff >= 2) or NULL-diff row seen"
             )
-        pdf = pdf.sort_values(["event_time", "doc_id"], kind="stable")
         lens = pdf["n_tok"].astype("int64")
         start = cum + lens.cumsum() - lens
-        out = pd.DataFrame(
-            {
-                "source": pdf["source"].astype(str),
-                "doc_id": pdf["doc_id"].astype(str),
-                "n_tok": lens,
-                "chunk": (start // budget).astype("int64"),
-                "chunk_offset": (start % budget).astype("int64"),
-            }
-        )
-        state.update((cum + int(lens.sum()),))
-        yield out
+        out = {
+            "source": pdf["source"].astype(str),
+            "doc_id": pdf["doc_id"].astype(str),
+            "n_tok": lens,
+            "chunk": start // budget,
+            "chunk_offset": start % budget,
+        }
+        return (cum + int(lens.sum()),), out
 
-    return fn
+    return fold
 
 
 def incremental_packing(df: DataFrame, budget: int = 512) -> DataFrame:
@@ -92,11 +77,11 @@ def incremental_packing(df: DataFrame, budget: int = 512) -> DataFrame:
     # consolidated (diff >= 2) rows instead of silently mis-packing them
     if "diff" in df.columns:
         cols.append("diff")
-    keyed = df.select(*cols)
-    return keyed.groupBy("source").applyInPandasWithState(
-        _pack_fn(budget),
-        outputStructType=PACK_OUTPUT_SCHEMA,
-        stateStructType=PACK_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        df.select(*cols),
+        "source",
+        _pack_fold(budget),
+        state_schema=PACK_STATE_SCHEMA,
+        output_schema=PACK_OUTPUT_SCHEMA,
+        order_by=("event_time", "doc_id"),
     )

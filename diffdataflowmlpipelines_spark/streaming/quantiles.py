@@ -12,9 +12,10 @@ row hash is a pure function of the id, so a duplicate delivery collides
 with its existing hash and is dropped (at-least-once in, exactly-once
 state).
 
-State per group is two parallel arrays bounded at k (hash, value) —
-O(k) regardless of stream volume, the same bounded-state story as the
-count-min cells and HLL registers. Emission is update-mode: one row per
+The fold runs per group through ``keyed_fold``. State per group is two
+parallel arrays bounded at k (hash, value) — O(k) regardless of stream
+volume, the same bounded-state story as the count-min cells and HLL
+registers. Emission is update-mode: one row per
 group per batch that touched it, carrying the current quantile
 estimates; the latest row per group wins (ExactlyOnceParquetSink
 ``read_current`` semantics).
@@ -28,11 +29,11 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
+
+from diffdataflowmlpipelines_spark.streaming.keyed_fold import keyed_fold
 
 QUANTILE_OUTPUT_SCHEMA = (
     "group string, n_sample long, p50 double, p90 double, p99 double"
@@ -62,44 +63,34 @@ def _percentile_cont(sorted_vals: list[float], q: float) -> float:
     return lower + (higher - lower) * (pos - lo)
 
 
-def _quantiles_fn(k: int, quantiles: tuple[float, ...]):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state):
-        if state.exists:
-            hs, vals = state.get
-            sample = dict(zip(hs, vals))
-        else:
-            sample = {}
+def _quantiles_fold(k: int, quantiles: tuple[float, ...]):
+    def fold(key, state, pdf):
+        sample = dict(zip(*state)) if state else {}
         touched = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf[pdf["id"].notna()]
-            for rid, val in zip(pdf["id"], pdf["value"]):
-                # id arrives Spark-cast to string (matching the batch
-                # sketch's md5_hash60(cast(id as string)) input exactly)
-                # — casting to long here instead would hash '0123' as
-                # '123' and abort on non-numeric ids under ANSI
-                h = md5_hash60_py(rid)
-                if h in sample:
-                    continue  # duplicate delivery of the same row id
-                sample[h] = None if pd.isna(val) else float(val)
-                touched = True
-        if len(sample) > k:
-            for h in sorted(sample)[k:]:
-                del sample[h]
+        pdf = pdf[pdf["id"].notna()]
+        for rid, val in zip(pdf["id"], pdf["value"]):
+            # id arrives Spark-cast to string (matching the batch
+            # sketch's md5_hash60(cast(id as string)) input exactly)
+            # — casting to long here instead would hash '0123' as
+            # '123' and abort on non-numeric ids under ANSI
+            h = md5_hash60_py(rid)
+            if h in sample:
+                continue  # duplicate delivery of the same row id
+            sample[h] = None if pd.isna(val) else float(val)
+            touched = True
+        for h in sorted(sample)[k:]:
+            del sample[h]
         hs = sorted(sample)
-        state.update((hs, [sample[h] for h in hs]))
-        if touched and sample:
-            vals = sorted(v for v in sample.values() if v is not None)
-            if vals:
-                row = [key[0], len(sample)] + [
-                    round(_percentile_cont(vals, q), 6) for q in quantiles
-                ]
-                yield pd.DataFrame(
-                    [row], columns=["group", "n_sample", "p50", "p90", "p99"]
-                )
+        out = []
+        vals = sorted(v for v in sample.values() if v is not None)
+        if touched and vals:
+            out.append(
+                [key[0], len(sample)]
+                + [round(_percentile_cont(vals, q), 6) for q in quantiles]
+            )
+        return (hs, [sample[h] for h in hs]), out
 
-    return fn
+    return fold
 
 
 def streaming_bottomk_quantiles(
@@ -127,10 +118,10 @@ def streaming_bottomk_quantiles(
         F.col(id_col).cast("string").alias("id"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return keyed.groupBy("group").applyInPandasWithState(
-        _quantiles_fn(k, quantiles),
-        outputStructType=QUANTILE_OUTPUT_SCHEMA,
-        stateStructType=QUANTILE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_fold(
+        keyed,
+        "group",
+        _quantiles_fold(k, quantiles),
+        state_schema=QUANTILE_STATE_SCHEMA,
+        output_schema=QUANTILE_OUTPUT_SCHEMA,
     )

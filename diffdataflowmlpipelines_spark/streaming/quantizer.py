@@ -47,11 +47,13 @@ def scalar_quant_stats_stream(
     DIVERGE from the batch fit (advice r5 #3, documented contract):
     ``scalar_quant_fit`` raises 'ragged embedding dimensions' because
     per-dim counts skew, while this stream feeds them into
-    ``incremental_scaler_stats``, which drops NULL x rows — the
-    streamed fit proceeds on the non-NULL population. The ``len``
+    ``incremental_scaler_stats``, where a NULL x is not an observation
+    — the streamed fit proceeds on the non-NULL population. The ``len``
     statistic counts elements including NULLs, so it cannot see them
     either. Pre-filter element-NULL vectors upstream when the batch
-    parity claim must hold for such inputs."""
+    parity claim must hold for such inputs. A NaN element IS an
+    observation, as in ``scalar_quant_fit``: its dimension's max is NaN
+    (emitted as NULL), and so is its scale."""
     vec = F.col(vec_col).cast("array<double>")
     exploded = df.select(
         F.posexplode(vec).alias("dim", "x"),
@@ -99,8 +101,9 @@ def quant_params_from_stats(rows) -> tuple[list[float], list[float]]:
         # a TRAILING all-retracted dim leaves a contiguous prefix; the
         # recorded vector length still exposes it
         raise ValueError("quant_params_from_stats: ragged dimensions")
-    mins = [float(live[d]["min"]) for d in dims]
-    scales = [
-        (float(live[d]["max"]) - float(live[d]["min"])) / 255.0 for d in dims
-    ]
-    return mins, scales
+    # a NaN statistic crosses the pandas boundary as NULL
+    mins, maxs = (
+        [float("nan") if live[d][c] is None else float(live[d][c]) for d in dims]
+        for c in ("min", "max")
+    )
+    return mins, [(mx - mn) / 255.0 for mn, mx in zip(mins, maxs)]

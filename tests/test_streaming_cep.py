@@ -248,7 +248,7 @@ def _incremental(batches, k, within_us):
         for step_i, t in batch:
             _bisect.insort(lists[step_i], t)
         comp = funnel_cascade(lists, within_us)
-        # THE production pruning (streaming/cep._funnel_fn calls this)
+        # THE production pruning (streaming/cep._funnel_fold calls this)
         lists = prune_candidates(lists, comp, within_us)
         results.append(comp)
     return results

@@ -154,3 +154,39 @@ def test_streaming_packing_rejects_consolidated_multiplicity(spark, tmp_path):
         q.awaitTermination(300)
         if q.exception():
             raise q.exception()
+
+
+def _packed(spark, tmp_path, epoch):
+    src = EpochFileSource(spark, str(tmp_path / "src"), SCHEMA)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["source", "doc_id"])
+    src.add_epoch(epoch)
+    q = (
+        incremental_packing(src.stream(), budget=256)
+        .writeStream.foreachBatch(sink.foreach_batch())
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    return sorted(
+        (r["source"], r["doc_id"], r["n_tok"], r["chunk"], r["chunk_offset"])
+        for r in sink.read_current(spark).collect()
+    )
+
+
+def test_streaming_packing_multi_chunk_batches(spark, tmp_path):
+    """A source whose micro-batch spans several Arrow chunks (2-row
+    maxRecordsPerBatch), written in reverse (event_time, doc_id) order:
+    the packing order, and so every offset, must be the one of the
+    default configuration."""
+    epoch = _epochs(1, 40)[0].iloc[::-1].reset_index(drop=True)
+    want = _packed(spark, tmp_path / "default", epoch)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        got = _packed(spark, tmp_path / "chunks", epoch)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert got == want
+    assert max(c for _, _, _, c, _ in got) >= 3  # offsets cross chunks

@@ -194,3 +194,18 @@ def test_constant_dimension_not_flagged_as_ragged(spark, tmp_path):
     assert mins_s == mins_b == [1.0, 2.0]
     assert scales_s == scales_b
     assert scales_s[0] == 0.0  # the constant dim
+
+
+def test_nan_dimension_gives_nan_scale():
+    # a NaN element is an observation: its dimension's max is NaN, which
+    # the stats operator emits as NULL, and the scale is NaN as in
+    # scalar_quant_fit (Spark orders NaN above every value)
+    import math
+
+    rows = [
+        {"key": "0", "n": 2, "min": 1.0, "max": None},
+        {"key": "1", "n": 2, "min": 0.0, "max": 2.0},
+    ]
+    mins, scales = quant_params_from_stats(rows)
+    assert mins == [1.0, 0.0]
+    assert math.isnan(scales[0]) and scales[1] == 2.0 / 255.0

@@ -37,8 +37,8 @@ def ep(i, rows):
     )
 
 
-def run(spark, tmp_path, epochs, **kw):
-    src = EpochFileSource(spark, str(tmp_path / "src"), SCHEMA)
+def run(spark, tmp_path, epochs, schema=SCHEMA, **kw):
+    src = EpochFileSource(spark, str(tmp_path / "src"), schema)
     sink = ExactlyOnceParquetSink(str(tmp_path / "out"), ["key"])
     for e in epochs:
         src.add_epoch(e)
@@ -190,3 +190,92 @@ def test_stats_null_key_stays_null(spark, tmp_path):
     assert set(rows) == {None, "a"}  # no "None" string key
     assert rows[None]["mean"] == pytest.approx(4.0)
     assert rows["a"]["mean"] == pytest.approx(10.0)
+
+
+NULLABLE = T.StructType(
+    [
+        T.StructField("key", T.StringType(), False),
+        T.StructField("x", T.DoubleType(), True),
+        T.StructField("diff", T.LongType(), False),
+        T.StructField("event_time", T.TimestampType(), False),
+    ]
+)
+
+
+def masked_ep(i, rows):
+    """``ep`` with a masked x column: None is NULL and a float NaN stays
+    NaN in the parquet file (a numpy float column writes NaN as NULL)."""
+    import numpy as np
+
+    pdf = ep(i, [(k, 0.0 if x is None else x, *r) for k, x, *r in rows])
+    mask = np.array([x is None for _, x, *_ in rows])
+    pdf["x"] = pd.arrays.FloatingArray(pdf["x"].to_numpy(), mask)
+    return pdf
+
+
+def current(spark, tmp_path, epochs):
+    """The live row per key after streaming ``epochs`` of NULLABLE."""
+    sink = run(spark, tmp_path, epochs, NULLABLE)
+    return {r["key"]: r for r in sink.read_current(spark).collect()}
+
+
+def _same(got, want):
+    """A streamed statistic equals the batch one; the operator's output
+    crosses the pandas boundary, which writes a NaN as NULL."""
+    import math
+
+    got = math.nan if got is None else got
+    return got == want or (math.isnan(got) and math.isnan(want))
+
+
+def test_stats_inf_retraction_recovers(spark, tmp_path):
+    """Retracting a +inf leaves the statistic of what remains: the
+    infinity is counted apart from the sums, so it cannot poison them."""
+    inf = float("inf")
+    epochs = [masked_ep(0, [("a", 1.0), ("a", inf)]), masked_ep(1, [("a", inf, -1)])]
+    a = current(spark, tmp_path, epochs)["a"]
+    got = (a["n"], a["mean"], a["var_pop"], a["min"], a["max"])
+    assert got == (1, 1.0, 0.0, 1.0, 1.0)
+
+
+def test_stats_match_batch_fits(spark, tmp_path):
+    """Per key, the streamed (mean, var_pop) is StandardScaler.fit's and
+    (min, max) is MinMaxScaler.fit's and scalar_quant_fit's over the
+    consolidated multiset: a NULL is not an observation, a NaN is one
+    (mean and var NaN; the max under Spark's order, where NaN is the
+    greatest), and a retracted NaN or infinity leaves no trace."""
+    from diffdataflowmlpipelines_spark.functions.similarity import scalar_quant_fit
+    from diffdataflowmlpipelines_spark.operators.collection import consolidate
+    from diffdataflowmlpipelines_spark.operators.encoders import (
+        MinMaxScaler,
+        StandardScaler,
+    )
+    from pyspark.sql import functions as F
+
+    nan, inf = float("nan"), float("inf")
+    epochs = [
+        [
+            ("a", 1.0), ("a", 2.0), ("a", None), ("a", 4.0),
+            ("b", 1.0), ("b", nan), ("b", 3.0),
+            ("c", 2.0), ("c", 5.0), ("c", nan), ("c", inf),
+            ("d", -2.0), ("d", nan), ("d", 0.5),
+        ],
+        [("c", nan, -1), ("c", 5.0, -1), ("b", 7.0), ("d", nan, -1), ("d", -0.0)],
+    ]
+    cur = current(spark, tmp_path, [masked_ep(i, e) for i, e in enumerate(epochs)])
+    history = spark.createDataFrame(
+        [(k, x, r[0] if r else 1) for e in epochs for k, x, *r in e],
+        "key string, x double, diff long",
+    )
+    alive = consolidate(history).filter(F.col("diff") > 0)
+    assert set(cur) == {"a", "b", "c", "d"}
+    for key, got in cur.items():
+        rows = alive.filter(F.col("key") == key)
+        std, mm = StandardScaler().fit(rows, "x"), MinMaxScaler().fit(rows, "x")
+        mn, mx = (float("nan") if got[c] is None else got[c] for c in ("min", "max"))
+        assert _same(got["mean"], std.mean_) and _same(got["var_pop"], std.var_), key
+        assert _same(mn, mm.min_) and _same(mx - mn, mm.range_), key
+        copies = F.array_repeat(F.array("x"), F.col("diff").cast("int"))
+        vecs = rows.filter(F.col("x").isNotNull()).select(F.explode(copies).alias("v"))
+        (qmin,), (scale,) = scalar_quant_fit(vecs, "v")
+        assert _same(mn, qmin) and _same((mx - mn) / 255.0, scale), key
